@@ -2,13 +2,16 @@
 
 Design (idiomatic Spark, SURVEY.md §1.5/§3):
 
-* **partial build** — ``mapInPandas`` over the scan partitions: one vectorized
-  numpy pass per Arrow batch, one sketch per (partition x group), emitted as a
-  serialized blob row. No shuffle of raw rows, ever: this is the map-side
-  combine Catalyst cannot do for a black-box UDAF, done explicitly.
-* **final merge** — ``groupBy(keys).applyInPandas``: folds the small blobs
-  (KBs each; exactly ``num_partitions`` rows per group regardless of data
-  skew, so a zipfian group distribution cannot create a hot reducer).
+* **two-level build** — ``build_partials`` + ``merge_partials`` run the
+  shared core in ``_two_level.py``: a ``mapInPandas`` partial per
+  (scan partition x group), then one ``applyInPandas`` blob merge per group.
+  DDSketch is one more adapter there: ``prepare`` routes each Arrow batch
+  once (``route_batch``: one vectorized log pass), and ``insert`` applies a
+  group's routed buckets with one ``apply_routed`` per partition. Values
+  the sketch would reject (null, NaN, +-inf, beyond ``max_indexed_value``)
+  are dropped JVM-side first (``value_guard``), so ``rows_in`` is the sketch
+  count and a group with no accepted value gets no row — the same contract
+  as ``ddsketch_aggregate_sql``.
 * **salted variant** — for the groupBy-based build path (useful when the
   partial-per-partition state would be too wide, i.e. very high group
   cardinality), an explicit deterministic salt column spreads hot groups
@@ -25,26 +28,25 @@ engine, sketches-rust, and sketches-java.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import PandasUDFType, pandas_udf
-from pyspark.sql.types import (
-    BinaryType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType
 
 from ..kernel.sketch import DDSketch
-
-SKETCH_COL = "sketch"
-ROWS_COL = "rows_in"
+from ._two_level import (  # ROWS_COL, SKETCH_COL: part of this module's API
+    ROWS_COL,
+    SKETCH_COL,
+    SketchAdapter,
+    grouped_blobs,
+    merge_blobs,
+    partial_blobs,
+)
 
 
 @dataclass(frozen=True)
@@ -66,29 +68,24 @@ class SketchConfig:
 DEFAULT_CONFIG = SketchConfig()
 
 
-def _factorize_keys(pdf: pd.DataFrame, keys: list[str]):
-    """(int codes per row, tuple-of-key-values per code) for 1..n key columns.
-    NaN/None group keys are kept (use_na_sentinel=False), matching SQL
-    GROUP BY null-key semantics."""
-    if len(keys) == 1:
-        codes, uniques = pd.factorize(pdf[keys[0]], use_na_sentinel=False)
-        return codes, [(u,) for u in uniques]
-    per_col = [pd.factorize(pdf[k], use_na_sentinel=False) for k in keys]
-    sizes = [len(u) for _, u in per_col]
-    combined = per_col[0][0].astype(np.int64)
-    for (c, _), size in zip(per_col[1:], sizes[1:]):
-        combined = combined * size + c
-    comp_codes, comp_uniques = pd.factorize(combined)
-    # map each compact code back to the tuple of original key values
-    first_row = np.empty(len(comp_uniques), dtype=np.int64)
-    first_row[comp_codes] = np.arange(len(comp_codes))  # any representative row
-    uniques = [tuple(pdf[k].iloc[int(r)] for k in keys) for r in first_row]
-    return comp_codes, uniques
+def value_guard(value: Column, config: SketchConfig) -> Column:
+    """Rows the sketch accepts: non-null, finite, |v| <= max_indexed_value
+    (the kernel's own rule, DDSketch.accept_many), for any preset."""
+    v = value.cast("double")
+    return (v.isNotNull() & ~F.isnan(v)
+            & (F.abs(v) <= F.lit(config.new().max_indexed_value))
+            & (F.abs(v) != F.lit(float("inf"))))
 
 
-def _key_fields(df: DataFrame, keys: Sequence[str]) -> list[StructField]:
-    by_name = {f.name: f for f in df.schema.fields}
-    return [by_name[k] for k in keys]
+def _f64(values: pd.Series) -> np.ndarray:
+    return values.to_numpy(dtype=np.float64, na_value=np.nan)
+
+
+def _ddsketch_adapter(config: SketchConfig) -> SketchAdapter:
+    def insert(sk, chunks):
+        sk.apply_routed(*(np.concatenate(c) for c in zip(*chunks)))
+    return SketchAdapter("ddsketch", config.new,
+                         lambda v: config.new().route_batch(_f64(v)), insert)
 
 
 def build_partials(
@@ -104,57 +101,10 @@ def build_partials(
     Column pruning: only ``keys + [value_col]`` are selected, so the parquet
     scan never reads unrelated columns.
     """
-    keys = list(keys)
-    narrow = df.select(*keys, F.col(value_col).cast("double").alias(value_col))
-    out_schema = StructType(
-        _key_fields(narrow, keys)
-        + [StructField(SKETCH_COL, BinaryType(), False),
-           StructField(ROWS_COL, LongType(), False)]
-    )
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        router = config.new()  # only for route_batch parameters
-        # Deferred build: per batch, ONE vectorized log/route pass and a
-        # factorize+argsort grouping; per group we only append (side, idx)
-        # slices. Bucket counts are materialized once per group at the end of
-        # the partition — per-row cost is pure numpy, no per-batch-per-group
-        # store bookkeeping. (idx is int64 + int8 per row, so the deferred
-        # state is ~9 bytes/row of the partition — bounded by the Arrow
-        # partition size, not the table size.)
-        routed: dict[tuple, list[tuple[np.ndarray, np.ndarray]]] = {}
-        rows: dict[tuple, int] = {}
-        for pdf in batches:
-            vals = pdf[value_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            side, idx = router.route_batch(vals)
-            if not keys:
-                routed.setdefault((), []).append((side, idx))
-                rows[()] = rows.get((), 0) + len(pdf)
-                continue
-            codes, uniques = _factorize_keys(pdf, keys)
-            order = np.argsort(codes, kind="stable")
-            sorted_codes = codes[order]
-            sorted_side = side[order]
-            sorted_idx = idx[order]
-            bounds = np.flatnonzero(np.diff(sorted_codes)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(sorted_codes)]))
-            for s, e in zip(starts, ends):
-                key = uniques[sorted_codes[s]]
-                routed.setdefault(key, []).append((sorted_side[s:e], sorted_idx[s:e]))
-                rows[key] = rows.get(key, 0) + (e - s)
-        if routed:
-            records = []
-            for key, chunks in routed.items():
-                sk = config.new()
-                side = np.concatenate([c[0] for c in chunks])
-                idx = np.concatenate([c[1] for c in chunks])
-                sk.apply_routed(side, idx)
-                records.append(
-                    dict(zip(keys, key)) | {SKETCH_COL: sk.encode(), ROWS_COL: rows[key]}
-                )
-            yield pd.DataFrame(records, columns=keys + [SKETCH_COL, ROWS_COL])
-
-    return narrow.mapInPandas(partial, schema=out_schema)
+    adapter = _ddsketch_adapter(config)
+    return partial_blobs(df.where(value_guard(F.col(value_col), config)),
+                         F.col(value_col).cast("double"), keys,
+                         {adapter.name: (adapter, None)})
 
 
 def merge_partials(
@@ -167,27 +117,7 @@ def merge_partials(
     ``decode_and_merge_with`` streams bins straight into the receiving store
     (decode *is* merge, spec store/mod.rs:92-141) — no intermediate sketches.
     """
-    keys = list(keys)
-    out_schema = StructType(
-        _key_fields(partials, keys)
-        + [StructField(SKETCH_COL, BinaryType(), False),
-           StructField(ROWS_COL, LongType(), False)]
-    )
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = config.new()
-        for blob in pdf[SKETCH_COL]:
-            sk.decode_and_merge_with(bytes(blob))
-        head = {k: pdf[k].iloc[0] for k in keys}
-        head[SKETCH_COL] = sk.encode()
-        head[ROWS_COL] = int(pdf[ROWS_COL].sum())
-        return pd.DataFrame([head], columns=keys + [SKETCH_COL, ROWS_COL])
-
-    if keys:
-        return partials.groupBy(*keys).applyInPandas(merge, schema=out_schema)
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        merge, schema=out_schema
-    )
+    return merge_blobs(partials, keys, {"ddsketch": _ddsketch_adapter(config)})
 
 
 def ddsketch_aggregate(
@@ -235,26 +165,15 @@ def ddsketch_aggregate_weighted(
     # rows_in is the accepted weight sum (== sketch count) on both
     narrow = narrow.where(F.col("_w").isNotNull() & ~F.isnan("_w")
                           & (F.col("_w") > 0))
-    out_schema = StructType(
-        _key_fields(narrow, keys)
-        + [StructField(SKETCH_COL, BinaryType(), False),
-           StructField(ROWS_COL, LongType(), False)]
-    )
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(pdf: pd.DataFrame) -> tuple[bytes, int]:
         sk = config.new()
-        sk.accept_many(pdf["_v"].to_numpy(np.float64, na_value=np.nan),
-                       pdf["_w"].to_numpy(np.float64, na_value=np.nan))
-        head = {k: pdf[k].iloc[0] for k in keys}
-        head[SKETCH_COL] = sk.encode()
+        sk.accept_many(_f64(pdf["_v"]), _f64(pdf["_w"]))
         # round, don't truncate: fractional weight sums (weights are
         # doubles) would otherwise report up to 1 low per group
-        head[ROWS_COL] = int(round(sk.get_count()))
-        return pd.DataFrame([head], columns=keys + [SKETCH_COL, ROWS_COL])
+        return sk.encode(), int(round(sk.get_count()))
 
-    if keys:
-        return narrow.groupBy(*keys).applyInPandas(build, schema=out_schema)
-    return narrow.groupBy(F.lit(1).alias("_g")).applyInPandas(build, schema=out_schema)
+    return grouped_blobs(narrow, keys, build)
 
 
 def ddsketch_aggregate_salted(
@@ -278,23 +197,15 @@ def ddsketch_aggregate_salted(
         F.xxhash64(F.col(salt_from) if salt_from else F.col(value_col)),
         F.lit(num_salts),
     ).alias("_salt")
-    narrow = df.select(*keys, F.col(value_col).cast("double").alias(value_col), salt_col)
+    narrow = (df.where(value_guard(F.col(value_col), config))
+              .select(*keys, F.col(value_col).cast("double").alias(value_col), salt_col))
 
-    out_schema = StructType(
-        _key_fields(narrow, keys)
-        + [StructField(SKETCH_COL, BinaryType(), False),
-           StructField(ROWS_COL, LongType(), False)]
-    )
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(pdf: pd.DataFrame) -> tuple[bytes, int]:
         sk = config.new()
-        sk.accept_many(pdf[value_col].to_numpy(dtype=np.float64, na_value=np.nan))
-        head = {k: pdf[k].iloc[0] for k in keys}
-        head[SKETCH_COL] = sk.encode()
-        head[ROWS_COL] = len(pdf)
-        return pd.DataFrame([head], columns=keys + [SKETCH_COL, ROWS_COL])
+        sk.accept_many(_f64(pdf[value_col]))
+        return sk.encode(), len(pdf)
 
-    partials = narrow.groupBy(*keys, "_salt").applyInPandas(build, schema=out_schema)
+    partials = grouped_blobs(narrow, keys, build, by=["_salt"])
     return merge_partials(partials, keys, config)
 
 
@@ -348,7 +259,9 @@ def ddsketch_quantile(blobs: pd.Series, quantiles: pd.Series) -> pd.Series:
 
 def make_merge_udaf(config: SketchConfig = DEFAULT_CONFIG):
     """GROUPED_AGG pandas UDF: SQL-composable blob merge —
-    ``SELECT lang, ddsketch_merge(sketch) FROM partials GROUP BY lang``."""
+    ``SELECT lang, ddsketch_merge(sketch) FROM partials GROUP BY lang``.
+    ``config``: a SketchConfig or any sketch adapter (anything whose
+    ``new()`` makes an empty sketch of the blobs' family)."""
     def merge_blobs(blobs: pd.Series) -> bytes:
         sk = config.new()
         for b in blobs:
@@ -367,7 +280,7 @@ def make_build_udaf(config: SketchConfig = DEFAULT_CONFIG):
     """
     def build(values: pd.Series) -> bytes:
         sk = config.new()
-        sk.accept_many(values.to_numpy(dtype=np.float64, na_value=np.nan))
+        sk.accept_many(_f64(values))
         return sk.encode()
     return pandas_udf(build, "binary", PandasUDFType.GROUPED_AGG)
 

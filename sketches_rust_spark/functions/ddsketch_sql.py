@@ -36,11 +36,10 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-from ..kernel.mapping import LOG
 from ..kernel.sketch import DDSketch
-from .ddsketch_spark import ROWS_COL, SKETCH_COL, SketchConfig, _key_fields
+from ._two_level import grouped_blobs
+from .ddsketch_spark import SketchConfig, value_guard
 
 _LOG_PRESETS = {
     "logarithmic_collapsing_lowest_dense",
@@ -72,15 +71,6 @@ def bucket_columns(value: Column, config: SketchConfig) -> tuple[Column, Column]
     idx_raw = F.when(x >= 0, x.cast("long")).otherwise((x - F.lit(1.0)).cast("long"))
     idx = F.when(side == 0, F.lit(0)).otherwise(idx_raw)
     return side, idx
-
-
-def value_guard(value: Column, config: SketchConfig) -> Column:
-    """Rows the sketch accepts: non-null, finite, |v| <= max_indexed_value."""
-    proto = _require_log_mapping(config)
-    v = value.cast("double")
-    return (v.isNotNull() & ~F.isnan(v)
-            & (F.abs(v) <= F.lit(proto.max_indexed_value))
-            & (F.abs(v) != F.lit(float("inf"))))
 
 
 def ddsketch_histogram(
@@ -128,14 +118,7 @@ def blobs_from_histogram(
     presets apply their bucket cap inside the store exactly as a direct build
     would (order-insensitive collapse, see kernel/store.py).
     """
-    keys = list(keys)
-    out_schema = StructType(
-        _key_fields(hist, keys)
-        + [StructField(SKETCH_COL, BinaryType(), False),
-           StructField(ROWS_COL, LongType(), False)]
-    )
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(pdf: pd.DataFrame) -> tuple[bytes, int]:
         sk = config.new()
         side = pdf["side"].to_numpy(np.int64)
         idx = pdf["idx"].to_numpy(np.int64)
@@ -149,14 +132,9 @@ def blobs_from_histogram(
         zero = side == 0
         if zero.any():
             sk.zero_count += float(c[zero].sum())
-        head = {k: pdf[k].iloc[0] for k in keys}
-        head[SKETCH_COL] = sk.encode()
-        head[ROWS_COL] = int(c.sum())
-        return pd.DataFrame([head], columns=keys + [SKETCH_COL, ROWS_COL])
+        return sk.encode(), int(c.sum())
 
-    if keys:
-        return hist.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
-    return hist.groupBy(F.lit(1).alias("_g")).applyInPandas(assemble, schema=out_schema)
+    return grouped_blobs(hist, keys, assemble)
 
 
 def ddsketch_aggregate_sql(

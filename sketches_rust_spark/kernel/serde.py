@@ -90,14 +90,6 @@ EXPONENT_SHIFT = SIGNIFICAND_WIDTH - 1
 EXPONENT_BIAS = 1023
 
 
-def get_exponent(long_bits: int) -> int:
-    return ((long_bits & EXPONENT_MASK) >> EXPONENT_SHIFT) - EXPONENT_BIAS
-
-
-def get_significand_plus_one(long_bits: int) -> float:
-    return bits_to_double((long_bits & SIGNIFICAND_MASK) | _BITS_OF_ONE)
-
-
 def build_double(exponent: int, significand_plus_one: float) -> float:
     significand_plus_one = max(1.0, significand_plus_one)
     raw = (((exponent + EXPONENT_BIAS) << EXPONENT_SHIFT) & EXPONENT_MASK) | (

@@ -113,48 +113,6 @@ def hll_query(table: str, id_expr: str, groups: list[str], p: int = 14):
 
 
 
-def kmv_query(table: str, id_expr: str, groups: list[str], k: int = 256):
-    """KMV / bottom-k theta sketch distinct estimate per group — the
-    distinct-count sketch that ALSO supports set intersections (which HLL
-    cannot); retained hashes are SplitMix64, so the oracle rebuilds the
-    identical bottom-k set in SQL."""
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.sketch_udafs import (
-            kmv_adapter, kmv_estimate, sketch_aggregate)
-        df = load(spark, sf_dir, table).select(
-            *groups, F.expr(id_expr).cast("long").alias("_id"))
-        agg = sketch_aggregate(df, "_id", groups,
-                               kmv_adapter(k, hash_mode="splitmix"))
-        return agg.select(*groups, F.round(kmv_estimate("sketch"), 2).alias("est"))
-    return run
-
-
-def kmv_intersection_query(table: str, id_expr: str, group_col: str,
-                           group_a: str, group_b: str, k: int = 256):
-    """Set-intersection estimate between two groups' id sets via theta
-    sketches: one pass builds both groups' KMV sketches (two-level, no
-    raw-row shuffle), a conditional-first pivot puts the two blobs on one
-    row, and the intersection UDF scales the common retained hashes below
-    the shared theta. Exact DuckDB replica of the whole computation."""
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.sketch_udafs import (
-            kmv_adapter, kmv_intersection, sketch_aggregate)
-        df = (load(spark, sf_dir, table)
-              .where(F.col(group_col).isin([group_a, group_b]))
-              .select(F.col(group_col).alias("_g"),
-                      F.expr(id_expr).cast("long").alias("_id")))
-        agg = sketch_aggregate(df, "_id", ["_g"],
-                               kmv_adapter(k, hash_mode="splitmix"))
-        both = agg.agg(
-            F.first(F.when(F.col("_g") == group_a, F.col("sketch")),
-                    ignorenulls=True).alias("_sa"),
-            F.first(F.when(F.col("_g") == group_b, F.col("sketch")),
-                    ignorenulls=True).alias("_sb"))
-        return both.select(
-            F.round(kmv_intersection("_sa", "_sb"), 2).alias("est_common"))
-    return run
-
-
 def kmv_difference_query(table: str, id_expr: str, group_col: str,
                          group_a: str, group_b: str, k: int = 256):
     """Set-difference estimate |A ∖ B| between two groups' id sets — the
@@ -1292,18 +1250,9 @@ def ann_topk_surface_query(exact_q, lsh_q, ivf_q):
     over the same probes in one long-format result (50-row driver cap):
     (method, probe_id, vec_id, score, rank). Each sub-proof unchanged."""
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the IVF builder stages its inverted file eagerly (parquet write)
-        # while exact/LSH construction is cheap — build the three from a
-        # thread pool so the eager build overlaps the others (guide §2.6);
-        # each sub-proof and the final union are unchanged
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [(m, pool.submit(q, spark, sf_dir))
-                    for m, q in (("exact", exact_q), ("lsh", lsh_q),
-                                 ("ivf", ivf_q))]
-        parts = [f.result().select(
+        parts = [q(spark, sf_dir).select(
             F.lit(m).alias("method"), "probe_id", "vec_id", "score", "rank")
-            for m, f in futs]
+            for m, q in (("exact", exact_q), ("lsh", lsh_q), ("ivf", ivf_q))]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

@@ -3,10 +3,9 @@
 All hot paths are built-in Spark SQL functions (JVM, whole-stage codegen) so
 they run at scan speed on 100 TB; every operator has an exact DuckDB oracle.
 
-* token counting — whitespace tokens plus a BPE-ish sub-token estimate
-  (words + punctuation runs + digit runs).
-* quality scoring — length / punctuation ratio / stopword ratio / mean token
-  length / alpha ratio, combined into a [0,1] score.
+* token counting — whitespace tokens.
+* quality scoring — length / punctuation ratio / mean token length,
+  combined into a [0,1] score.
 * language ID — stopword-hit heuristic over a small per-language marker list
   (argmax of per-language hit counts; deterministic tiebreak by language
   code). Not a real langid model — a deterministic, cheap heuristic of the
@@ -41,24 +40,9 @@ def token_count(text: Column) -> Column:
     return F.size(F.split(text, " "))
 
 
-def subtoken_count(text: Column) -> Column:
-    """BPE-ish upper bound: words + digit runs + punctuation marks."""
-    words = F.size(F.split(text, " "))
-    digits = F.size(F.split(text, "[0-9]+")) - 1
-    punct = F.length(text) - F.length(F.translate(text, _PUNCT_CHARS, ""))
-    return words + digits + punct
-
-
 def punct_ratio(text: Column) -> Column:
     return (F.length(text) - F.length(F.translate(text, _PUNCT_CHARS, ""))) / \
         F.greatest(F.length(text), F.lit(1))
-
-
-def stopword_ratio(text: Column, stopwords: list[str]) -> Column:
-    """Fraction of whitespace tokens that are stopwords."""
-    toks = F.split(F.lower(text), " ")
-    hits = F.size(F.filter(toks, lambda t: t.isin(stopwords)))
-    return hits / F.greatest(F.size(toks), F.lit(1))
 
 
 def mean_token_length(text: Column) -> Column:

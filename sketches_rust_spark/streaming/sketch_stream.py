@@ -28,6 +28,7 @@ import os
 from contextlib import contextmanager
 from typing import Sequence
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,7 +46,6 @@ from pyspark.sql.types import (
 
 from ..functions.ddsketch_spark import SketchConfig, merge_partials
 from ..functions.ddsketch_sql import ddsketch_aggregate_sql
-from ..kernel.sketch import DDSketch
 
 
 def stream_state_partitions(staged_dir: str, n_batches: int) -> int:
@@ -64,11 +64,7 @@ def stream_state_partitions(staged_dir: str, n_batches: int) -> int:
     Sizing rule: one partition per ~64 MB of per-micro-batch input, floor 4
     (parallelism for the non-stateful stages), no ceiling (a production
     stream with GB-scale micro-batches derives a proportionally larger state
-    store). Override with $SKETCH_STREAM_SHUFFLE_PARTITIONS for deployments
-    where key cardinality, not bytes, should size the state store."""
-    env = os.environ.get("SKETCH_STREAM_SHUFFLE_PARTITIONS")
-    if env:
-        return max(1, int(env))
+    store)."""
     total = 0
     for root, _dirs, files in os.walk(staged_dir):
         for f in files:
@@ -148,6 +144,10 @@ def merged_stream_result(spark: SparkSession, sink_dir: str,
     return merge_partials(partials, keys, config)
 
 
+# per-key state of every stateful variant: the running sketch's blob
+_STATE_SCHEMA = StructType([StructField("blob", BinaryType(), True)])
+
+
 def stateful_sketch_stream(
     stream_df: DataFrame,
     value_col: str,
@@ -165,18 +165,9 @@ def stateful_sketch_stream(
         StructField("estimate", DoubleType(), True),
         StructField("blob_bytes", LongType(), False),
     ])
-    state_schema = StructType([StructField("blob", BinaryType(), True)])
 
     def update(key_tuple, pdf_iter, state: GroupState):
-        import numpy as np
-        sk = config.new()
-        if state.exists:
-            (blob,) = state.get
-            if blob is not None:
-                sk.decode_and_merge_with(bytes(blob))
-        for pdf in pdf_iter:
-            sk.accept_many(pdf[value_col].to_numpy(np.float64, na_value=np.nan))
-        blob = sk.encode()
+        sk, blob, _ = _fold_state(state, config, value_col, pdf_iter)
         state.update((bytearray(blob),))
         yield pd.DataFrame([{
             "key": key_tuple[0],
@@ -190,7 +181,7 @@ def stateful_sketch_stream(
             .applyInPandasWithState(
                 update,
                 outputStructType=out_schema,
-                stateStructType=state_schema,
+                stateStructType=_STATE_SCHEMA,
                 outputMode="update",
                 timeoutConf=GroupStateTimeout.NoTimeout,
             ))
@@ -221,7 +212,7 @@ def stateful_sketch_stream_with_eviction(
             .applyInPandasWithState(
                 _eviction_update(value_col, config, quantile, None, arm),
                 outputStructType=_EVICT_OUT_SCHEMA,
-                stateStructType=_EVICT_STATE_SCHEMA,
+                stateStructType=_STATE_SCHEMA,
                 outputMode="update",
                 timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
             ))
@@ -278,7 +269,7 @@ def stateful_sketch_stream_with_event_time_eviction(
             .applyInPandasWithState(
                 _eviction_update(value_col, config, quantile, "_evt_ms", arm),
                 outputStructType=_EVICT_OUT_SCHEMA,
-                stateStructType=_EVICT_STATE_SCHEMA,
+                stateStructType=_STATE_SCHEMA,
                 outputMode="update",
                 timeoutConf=GroupStateTimeout.EventTimeTimeout,
             ))
@@ -290,7 +281,27 @@ _EVICT_OUT_SCHEMA = StructType([
     StructField("estimate", DoubleType(), True),
     StructField("evicted", BooleanType(), False),
 ])
-_EVICT_STATE_SCHEMA = StructType([StructField("blob", BinaryType(), True)])
+
+
+def _fold_state(state: GroupState, config: SketchConfig, value_col: str,
+                pdf_iter, ts_col: str | None = None):
+    """Load a key's running sketch from its state blob, insert the values of
+    every chunk and encode it: (sketch, blob, max of ``ts_col`` over the
+    chunks or None). Chunks are consumed streamingly — only the running max
+    is tracked, never a buffered batch."""
+    sk = config.new()
+    if state.exists:
+        (blob,) = state.get
+        if blob is not None:
+            sk.decode_and_merge_with(bytes(blob))
+    batch_max_ts = None
+    for pdf in pdf_iter:
+        sk.accept_many(pdf[value_col].to_numpy(np.float64, na_value=np.nan))
+        if ts_col is not None and len(pdf):
+            mx = pdf[ts_col].max()
+            if not pd.isna(mx) and (batch_max_ts is None or mx > batch_max_ts):
+                batch_max_ts = mx
+    return sk, sk.encode(), batch_max_ts
 
 
 def _eviction_update(value_col: str, config: SketchConfig, quantile: float,
@@ -299,45 +310,22 @@ def _eviction_update(value_col: str, config: SketchConfig, quantile: float,
     ``arm(state, batch_max_ts)`` sets the next timeout (wall-clock duration,
     ignoring the timestamp; or watermark-relative event-time deadline from
     the batch max of ``ts_col`` — an int64 epoch-ms column, see
-    stateful_sketch_stream_with_event_time_eviction). Chunks are consumed
-    streamingly — only the running max is tracked, never a buffered batch."""
+    stateful_sketch_stream_with_event_time_eviction)."""
     def update(key_tuple, pdf_iter, state: GroupState):
-        import numpy as np
-        if state.hasTimedOut:
-            # idle past the timeout: emit a final marker and drop the state
-            count, est = 0.0, None
-            if state.exists:
-                (blob,) = state.get
-                if blob is not None:
-                    sk = config.new()
-                    sk.decode_and_merge_with(bytes(blob))
-                    count, est = sk.get_count(), sk.get_value_at_quantile(quantile)
+        timed_out = state.hasTimedOut
+        # idle past the timeout: emit a final marker and drop the state
+        sk, blob, batch_max_ts = _fold_state(
+            state, config, value_col, () if timed_out else pdf_iter, ts_col)
+        if timed_out:
             state.remove()
-            yield pd.DataFrame([{
-                "key": key_tuple[0], "count": count,
-                "estimate": est, "evicted": True,
-            }])
-            return
-        sk = config.new()
-        if state.exists:
-            (blob,) = state.get
-            if blob is not None:
-                sk.decode_and_merge_with(bytes(blob))
-        batch_max_ts = None
-        for pdf in pdf_iter:
-            sk.accept_many(pdf[value_col].to_numpy(np.float64, na_value=np.nan))
-            if ts_col is not None and len(pdf):
-                mx = pdf[ts_col].max()
-                if not pd.isna(mx) and (batch_max_ts is None
-                                        or mx > batch_max_ts):
-                    batch_max_ts = mx
-        state.update((bytearray(sk.encode()),))
-        arm(state, batch_max_ts)
+        else:
+            state.update((bytearray(blob),))
+            arm(state, batch_max_ts)
         yield pd.DataFrame([{
             "key": key_tuple[0],
             "count": sk.get_count(),
             "estimate": sk.get_value_at_quantile(quantile),
-            "evicted": False,
+            "evicted": timed_out,
         }])
     return update
 

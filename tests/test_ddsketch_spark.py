@@ -19,6 +19,7 @@ from sketches_rust_spark.functions.ddsketch_spark import (
     make_quantile_udf,
     register_sql_functions,
 )
+from sketches_rust_spark.functions.ddsketch_sql import ddsketch_aggregate_sql
 
 CFG = SketchConfig("logarithmic_unbounded_size_dense_store", 0.01, 0)
 
@@ -139,3 +140,19 @@ def test_null_values_ignored(spark):
     from sketches_rust_spark.kernel.sketch import DDSketch
     assert DDSketch.decode(bytes(rows["a"]["sketch"])).get_count() == 1.0
     assert DDSketch.decode(bytes(rows["b"]["sketch"])).get_count() == 1.0
+
+    # rejected values never reach the sketch or rows_in, on every build
+    # path: rows_in is the sketch count, and a group with no accepted value
+    # gets no row
+    pdf = pd.DataFrame({"k": ["a", "a", "b", "c", "d"],
+                        "v": [1.0, np.nan, 3.0, np.nan, np.nan]})
+    # the pandas conversion turns NaN into null: put real NaNs back
+    df = spark.createDataFrame(pdf).withColumn(
+        "v", F.coalesce("v", F.lit(float("nan"))))
+    for agg in (ddsketch_aggregate(df, "v", ["k"], CFG),
+                ddsketch_aggregate_salted(df, "v", ["k"], CFG, num_salts=4),
+                ddsketch_aggregate_sql(df, "v", ["k"], CFG)):
+        rows = {r["k"]: r for r in agg.collect()}
+        assert {k: r["rows_in"] for k, r in rows.items()} == {"a": 1, "b": 1}
+        for r in rows.values():
+            assert DDSketch.decode(bytes(r["sketch"])).get_count() == r["rows_in"]

@@ -1,6 +1,7 @@
 """Spark-level tests for sibling-sketch aggregation."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
@@ -20,6 +21,8 @@ from sketches_rust_spark.functions.sketch_udafs import (
     tdigest_quantile,
 )
 from sketches_rust_spark.kernel.hll import HyperLogLog
+from sketches_rust_spark.kernel.kll import KLL
+from sketches_rust_spark.kernel.tdigest import TDigest
 
 
 @pytest.fixture(scope="module")
@@ -192,4 +195,30 @@ def test_multi_family_aggregate_blobs_equal_single_family(spark, events):
     for fam, agg in singles.items():
         for r in agg.collect():
             want[(fam, r["_g"])] = (bytes(r["sketch"]), r["rows_in"])
+    assert got == want
+
+
+@pytest.mark.parametrize("adapter,new", [
+    (tdigest_adapter(100.0), lambda: TDigest(100.0)),
+    (kll_adapter(64), lambda: KLL(64)),
+])
+def test_rank_sketch_blobs_equal_kernel_build(spark, adapter, new):
+    """t-digest and KLL bytes depend on how values are batched into
+    accept_many, so pin them: one partition that fits in one Arrow batch
+    must give, per group, the blob of one kernel accept_many over the
+    group's values in input order, passed through the plan's merge of that
+    single partial into an empty sketch."""
+    rng = np.random.default_rng(11)
+    pdf = pd.DataFrame({"g": rng.choice(["x", "y", "z"], 3000),
+                        "v": rng.lognormal(2.0, 1.5, 3000)})
+    df = spark.createDataFrame(pdf).coalesce(1)
+    got = {r["g"]: (bytes(r["sketch"]), r["rows_in"])
+           for r in sketch_aggregate(df, "v", ["g"], adapter).collect()}
+    want = {}
+    for g, sub in pdf.groupby("g"):
+        sk = new()
+        sk.accept_many(sub["v"].to_numpy(dtype=np.float64))
+        merged = new()
+        merged.decode_and_merge_with(sk.encode())
+        want[g] = (merged.encode(), len(sub))
     assert got == want
