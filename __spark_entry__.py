@@ -1,9 +1,11 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Correctness entry points (PySpark target).
 
 ``entry(spark)`` runs the flagship query (per-lang DDSketch text-length
-quantiles) on sf0.001; ``queries()``/``oracle_sql()`` expose every implemented
-operator from SURVEY.md §2 with DuckDB-checkable oracles where the semantics
-are SQL-expressible.
+quantiles) on sf0.001. ``queries()`` and ``oracle_sql()`` are the two halves
+of one registry, ``operators/queries.py: PROOFS``: each proof name maps to a
+(spark, sf_dir) -> DataFrame query over the operators of SURVEY.md §2 and the
+DuckDB SQL that must return the same rows. Both halves of an entry are built
+from one set of parameters, so every query has exactly its own oracle.
 """
 
 from __future__ import annotations
@@ -16,15 +18,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
-from sketches_rust_spark.operators.queries import (  # noqa: E402
-    DDSKETCH_ORACLES,
-    DDSKETCH_QUERIES,
-)
+from sketches_rust_spark.operators.queries import PROOFS  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return DDSKETCH_QUERIES["ddsketch_textlen_by_lang"](spark, "/root/testdata/sf0.001")
+    query, _oracle = PROOFS["ddsketch_textlen_by_lang"]
+    return query(spark, "/root/testdata/sf0.001")
 
 
 # The driver's correctness artifact records at most 50 queries:
@@ -49,7 +49,7 @@ def _ensure_pages_fixture() -> None:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     _ensure_pages_fixture()
-    qs = dict(DDSKETCH_QUERIES)
+    qs = {name: query for name, (query, _oracle) in PROOFS.items()}
     # RuntimeError, not assert: this guard must survive python -O (a
     # stripped assert would let queries past the cap go silently unverified)
     if len(qs) > MAX_DRIVER_QUERIES:
@@ -62,8 +62,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     _ensure_pages_fixture()
-    os_ = dict(DDSKETCH_ORACLES)
-    unknown = set(os_) - set(DDSKETCH_QUERIES)
-    if unknown:
-        raise RuntimeError(f"oracles without a query: {sorted(unknown)}")
-    return os_
+    return {name: oracle for name, (_query, oracle) in PROOFS.items()}

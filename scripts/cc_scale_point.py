@@ -92,11 +92,11 @@ def main() -> None:
     # this script measures the DISTRIBUTED contraction + pointer-jumping
     # trajectory — force the loop even if the contracted remainder would
     # fit the driver-side union-find gate
-    os.environ["SKETCH_CC_LOCAL_EDGE_CAP"] = "0"
     pairs = build_pairs(spark)
     t0 = time.perf_counter()
     stats: dict = {}
-    clusters = near_dup_clusters(pairs, max_iters=25, stats=stats)
+    clusters = near_dup_clusters(pairs, max_iters=25, stats=stats,
+                                 local_edge_cap=0)
     n_clusters = clusters.select("cluster").distinct().count()
     wall = round(time.perf_counter() - t0, 2)
 

@@ -24,6 +24,9 @@ A family plugs in through :class:`SketchAdapter`:
 
 The slices live until the partition ends: the prepared arrays' bytes per row
 (8-9) of one partition, bounded by the Arrow partition size.
+
+Reading a blob back is the same for every family too: ``blob_udf`` makes the
+scalar pandas UDF that decodes each blob and applies one kernel method.
 """
 
 from __future__ import annotations
@@ -36,8 +39,11 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import (
     BinaryType,
+    DataType,
+    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -189,3 +195,21 @@ def two_level(df: DataFrame, input_col: str | Column, keys: Sequence[str],
     adapters = {n: a for n, (a, _m) in families.items()}
     return merge_blobs(partial_blobs(df, input_col, keys, families, with_family),
                        keys, adapters, with_family)
+
+
+def blob_udf(name: str, decode: Callable[[bytes], object], fn: Callable,
+             return_type: DataType, blobs: int = 1):
+    """Scalar pandas UDF ``name`` over blob columns: per row,
+    ``fn(sketches..., args...)`` where the first ``blobs`` arguments are
+    blobs decoded with ``decode`` and any further ones pass through; a null
+    blob gives null. ``name`` is what Spark plans and ``__name__`` show."""
+    dtype = "float64" if isinstance(return_type, DoubleType) else None
+
+    def apply(*cols: pd.Series) -> pd.Series:
+        return pd.Series(
+            [None if any(b is None for b in row[:blobs])
+             else fn(*(decode(bytes(b)) for b in row[:blobs]), *row[blobs:])
+             for row in zip(*cols)], dtype=dtype)
+
+    apply.__name__ = apply.__qualname__ = name
+    return pandas_udf(apply, return_type)

@@ -28,6 +28,7 @@ engine, sketches-rust, and sketches-java.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from operator import methodcaller
 from typing import Sequence
 
 import numpy as np
@@ -43,6 +44,7 @@ from ._two_level import (  # ROWS_COL, SKETCH_COL: part of this module's API
     ROWS_COL,
     SKETCH_COL,
     SketchAdapter,
+    blob_udf,
     grouped_blobs,
     merge_blobs,
     partial_blobs,
@@ -213,33 +215,14 @@ def ddsketch_aggregate_salted(
 # Scalar extraction UDFs (blob -> statistic), usable in DataFrame and SQL.
 # ---------------------------------------------------------------------------
 
-def _decode(blob) -> DDSketch:
-    return DDSketch.decode(bytes(blob))
-
-
 def make_quantile_udf(quantile: float):
-    @pandas_udf(DoubleType())
-    def q(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if b is None else _decode(b).get_value_at_quantile(quantile)
-             for b in blobs],
-            dtype="float64",
-        )
-    return q
+    return blob_udf("ddsketch_quantile", DDSketch.decode,
+                    lambda sk: sk.get_value_at_quantile(quantile), DoubleType())
 
 
 def _stat_udf(stat: str):
-    @pandas_udf(DoubleType())
-    def s(blobs: pd.Series) -> pd.Series:
-        out = []
-        for b in blobs:
-            if b is None:
-                out.append(None)
-                continue
-            sk = _decode(b)
-            out.append(getattr(sk, f"get_{stat}")())
-        return pd.Series(out, dtype="float64")
-    return s
+    return blob_udf(f"ddsketch_{stat}", DDSketch.decode,
+                    methodcaller(f"get_{stat}"), DoubleType())
 
 
 ddsketch_count = _stat_udf("count")
@@ -247,14 +230,9 @@ ddsketch_sum = _stat_udf("sum")
 ddsketch_min = _stat_udf("min")
 ddsketch_max = _stat_udf("max")
 ddsketch_avg = _stat_udf("average")
-
-
-@pandas_udf(DoubleType())
-def ddsketch_quantile(blobs: pd.Series, quantiles: pd.Series) -> pd.Series:
-    out = []
-    for b, q in zip(blobs, quantiles):
-        out.append(None if b is None else _decode(b).get_value_at_quantile(float(q)))
-    return pd.Series(out, dtype="float64")
+ddsketch_quantile = blob_udf(
+    "ddsketch_quantile", DDSketch.decode,
+    lambda sk, q: sk.get_value_at_quantile(float(q)), DoubleType())
 
 
 def make_merge_udaf(config: SketchConfig = DEFAULT_CONFIG):

@@ -73,10 +73,19 @@ def bucket_columns(value: Column, config: SketchConfig) -> tuple[Column, Column]
     return side, idx
 
 
+def bucket_value(config: SketchConfig) -> Column:
+    """Representative value of a histogram row's (side, idx) bucket: its
+    lower bound times (1 + alpha), 0 for the zero bucket."""
+    m = _require_log_mapping(config).index_mapping
+    return (F.when(F.col("side") == 0, F.lit(0.0))
+            .otherwise(F.col("side") * F.exp(F.col("idx") / F.lit(m.multiplier))
+                       * F.lit(1.0 + m.relative_accuracy)))
+
+
 def ddsketch_histogram(
     df: DataFrame,
     value_col: str,
-    keys: Sequence[str] = (),
+    keys: Sequence[str | Column] = (),
     config: SketchConfig = SketchConfig("logarithmic_collapsing_lowest_dense", 0.01, 2048),
     weight_col: str | None = None,
 ) -> DataFrame:
@@ -202,18 +211,11 @@ def ddsketch_stats_sql(
     the representative values of the extreme buckets). Collapsing presets
     apply their bucket-cap fold first (collapse_histogram), matching the
     blob path exactly."""
-    proto = _require_log_mapping(config)
-    m = proto.index_mapping
     keys = list(keys)
     hist = collapse_histogram(
         ddsketch_histogram(df, value_col, keys, config, weight_col),
         keys, config)
-    bucket_value = (
-        F.when(F.col("side") == 0, F.lit(0.0))
-        .otherwise(F.col("side") * F.exp(F.col("idx") / F.lit(m.multiplier))
-                   * F.lit(1.0 + m.relative_accuracy))
-    )
-    valued = hist.select(*keys, F.col("c"), bucket_value.alias("bv"))
+    valued = hist.select(*keys, F.col("c"), bucket_value(config).alias("bv"))
 
     def rnd(col):
         return F.round(col, round_digits) if round_digits is not None else col
@@ -299,8 +301,6 @@ def histogram_quantiles(
     small by construction."""
     from pyspark.sql import Window
 
-    proto = _require_log_mapping(config)
-    m = proto.index_mapping
     keys = list(keys)
 
     walk_order = F.col("side").asc(), F.when(
@@ -314,14 +314,9 @@ def histogram_quantiles(
     w_cum = Window.partitionBy(*part).orderBy(*walk_order)
     w_all = Window.partitionBy(*part)
 
-    bucket_value = (
-        F.when(F.col("side") == 0, F.lit(0.0))
-        .otherwise(F.col("side") * F.exp(F.col("idx") / F.lit(m.multiplier))
-                   * F.lit(1.0 + m.relative_accuracy))
-    )
     walked = hist.select(
         *keys,
-        bucket_value.alias("bv"),
+        bucket_value(config).alias("bv"),
         F.sum("c").over(w_cum).alias("cum"),
         F.sum("c").over(w_all).alias("n"),
     )

@@ -23,7 +23,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import BooleanType, DoubleType, LongType
 
 from ..kernel.bits import splitmix64
@@ -33,7 +32,7 @@ from ..kernel.hll import HyperLogLog
 from ..kernel.kll import KLL
 from ..kernel.kmv import KMV
 from ..kernel.tdigest import TDigest
-from ._two_level import SketchAdapter, two_level
+from ._two_level import SketchAdapter, blob_udf, two_level
 from .ddsketch_spark import _f64, make_merge_udaf
 
 
@@ -125,93 +124,32 @@ def multi_family_aggregate(
 
 # -- extraction UDFs ----------------------------------------------------------
 
-@pandas_udf(DoubleType())
-def hll_estimate(blobs: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if b is None else HyperLogLog.decode(bytes(b)).estimate() for b in blobs],
-        dtype="float64")
+def _one_hash(h) -> np.ndarray:
+    return np.array([np.int64(h)]).view(np.uint64)
 
 
-@pandas_udf(DoubleType())
-def kmv_estimate(blobs: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if b is None else KMV.decode(bytes(b)).estimate() for b in blobs],
-        dtype="float64")
-
-
-@pandas_udf(DoubleType())
-def kmv_intersection(blobs_a: pd.Series, blobs_b: pd.Series) -> pd.Series:
-    out = []
-    for a, b in zip(blobs_a, blobs_b):
-        if a is None or b is None:
-            out.append(None)
-            continue
-        out.append(KMV.decode(bytes(a)).intersection_estimate(
-            KMV.decode(bytes(b))))
-    return pd.Series(out, dtype="float64")
-
-
-@pandas_udf(DoubleType())
-def kmv_difference(blobs_a: pd.Series, blobs_b: pd.Series) -> pd.Series:
-    """|A ∖ B| on the common-theta sample (kernel/kmv.py
-    difference_estimate) — with estimate and intersection this completes
-    the theta-sketch set algebra."""
-    out = []
-    for a, b in zip(blobs_a, blobs_b):
-        if a is None or b is None:
-            out.append(None)
-            continue
-        out.append(KMV.decode(bytes(a)).difference_estimate(
-            KMV.decode(bytes(b))))
-    return pd.Series(out, dtype="float64")
-
-
-@pandas_udf(LongType())
-def cms_total(blobs: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if b is None else CountMinSketch.decode(bytes(b)).total() for b in blobs])
-
-
-@pandas_udf(LongType())
-def cms_point_estimate(blobs: pd.Series, hashes: pd.Series) -> pd.Series:
-    out = []
-    for b, h in zip(blobs, hashes):
-        if b is None:
-            out.append(None)
-            continue
-        cms = CountMinSketch.decode(bytes(b))
-        hv = np.array([np.int64(h)]).view(np.uint64)
-        out.append(int(cms.estimate_hashes(hv)[0]))
-    return pd.Series(out)
-
-
-@pandas_udf(BooleanType())
-def bloom_might_contain(blobs: pd.Series, hashes: pd.Series) -> pd.Series:
-    out = []
-    for b, h in zip(blobs, hashes):
-        if b is None:
-            out.append(None)
-            continue
-        bf = BloomFilter.decode(bytes(b))
-        hv = np.array([np.int64(h)]).view(np.uint64)
-        out.append(bool(bf.might_contain_hashes(hv)[0]))
-    return pd.Series(out)
-
-
-@pandas_udf(DoubleType())
-def tdigest_quantile(blobs: pd.Series, quantiles: pd.Series) -> pd.Series:
-    out = []
-    for b, q in zip(blobs, quantiles):
-        out.append(None if b is None else TDigest.decode(bytes(b)).quantile(float(q)))
-    return pd.Series(out, dtype="float64")
-
-
-@pandas_udf(DoubleType())
-def kll_quantile(blobs: pd.Series, quantiles: pd.Series) -> pd.Series:
-    out = []
-    for b, q in zip(blobs, quantiles):
-        out.append(None if b is None else KLL.decode(bytes(b)).quantile(float(q)))
-    return pd.Series(out, dtype="float64")
+hll_estimate = blob_udf("hll_estimate", HyperLogLog.decode,
+                        HyperLogLog.estimate, DoubleType())
+kmv_estimate = blob_udf("kmv_estimate", KMV.decode, KMV.estimate, DoubleType())
+kmv_intersection = blob_udf("kmv_intersection", KMV.decode,
+                            KMV.intersection_estimate, DoubleType(), blobs=2)
+# |A ∖ B| on the common-theta sample (kernel/kmv.py difference_estimate) —
+# with estimate and intersection this completes the theta-sketch set algebra
+kmv_difference = blob_udf("kmv_difference", KMV.decode,
+                          KMV.difference_estimate, DoubleType(), blobs=2)
+cms_total = blob_udf("cms_total", CountMinSketch.decode, CountMinSketch.total,
+                     LongType())
+cms_point_estimate = blob_udf(
+    "cms_point_estimate", CountMinSketch.decode,
+    lambda cms, h: int(cms.estimate_hashes(_one_hash(h))[0]), LongType())
+bloom_might_contain = blob_udf(
+    "bloom_might_contain", BloomFilter.decode,
+    lambda bf, h: bool(bf.might_contain_hashes(_one_hash(h))[0]),
+    BooleanType())
+tdigest_quantile = blob_udf("tdigest_quantile", TDigest.decode,
+                            lambda td, q: td.quantile(float(q)), DoubleType())
+kll_quantile = blob_udf("kll_quantile", KLL.decode,
+                        lambda kll, q: kll.quantile(float(q)), DoubleType())
 
 
 def register_sibling_sql(spark: SparkSession,

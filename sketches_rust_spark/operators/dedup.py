@@ -24,7 +24,6 @@ candidate pairs admit exact oracles.
 from __future__ import annotations
 
 import hashlib
-import os
 
 import numpy as np
 import pandas as pd
@@ -669,7 +668,8 @@ def _local_union_find(pdf: pd.DataFrame) -> list[tuple]:
 
 
 def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
-                      stats: dict | None = None) -> DataFrame:
+                      stats: dict | None = None,
+                      local_edge_cap: int = 500_000) -> DataFrame:
     """Connected components over near-dup pairs: (_id, cluster) where
     cluster = min doc id in the component.
 
@@ -691,7 +691,7 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
        web scale a chained component of length 10^6 is ~20 rounds, not
        10^6. Each round is three shuffles bounded by |contracted graph|.
 
-    When the graph is small (<= SKETCH_CC_LOCAL_EDGE_CAP directed edges,
+    When the graph is small (<= ``local_edge_cap`` directed edges,
     default 500k ~= 8 MB of (long, long) rows — broadcast-relation
     territory), the components are solved exactly on the driver with
     union-find instead of the shuffle machinery — the same measured-size
@@ -713,7 +713,11 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
     'rounds', 'changed_per_round'} — extra count() actions, so pass it only
     when instrumenting (adversarial-skew evidence lives in
     tests/test_pipeline_ops.py, scripts/cc_scale_point.py and
-    BENCH/BASELINE.md)."""
+    BENCH/BASELINE.md).
+
+    local_edge_cap: the edge count up to which the components are solved
+    locally with union-find; 0 turns both gates off and always runs the
+    distributed loop."""
     # The full (bidirectional) edge set is the ONE data-scale intermediate
     # of this operator: persist it (spillable MEMORY_AND_DISK) rather than
     # localCheckpoint — a checkpoint copies every UnsafeRow into the
@@ -727,8 +731,7 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
     edges = (pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
              .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
              ).persist(StorageLevel.MEMORY_AND_DISK)  # blocked join runs ONCE
-    cap = int(os.environ.get("SKETCH_CC_LOCAL_EDGE_CAP", "500000"))
-    if cap > 0:
+    if local_edge_cap > 0:
         # early gate on the INPUT graph: counting the persisted edge set
         # costs one cache scan (the contraction's groupBy would materialize
         # the same persist anyway), and when the whole pair graph fits the
@@ -736,7 +739,7 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
         n_edges = edges.count()
         if stats is not None:
             stats["input_edges"] = n_edges
-        if n_edges <= cap:
+        if n_edges <= local_edge_cap:
             sol = _local_union_find(edges.toPandas())
             edges.unpersist()
             if stats is not None:
@@ -772,10 +775,10 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
     # gate is a count() of the already-checkpointed contracted edges (a
     # metadata-cheap job — no row ever reaches the driver when the graph is
     # big), and the fetch when it fits is one Arrow toPandas.
-    if cap > 0:
+    if local_edge_cap > 0:
         n_e2 = (stats["contracted_edges"] if stats is not None
                 else e2.count())
-        if n_e2 <= cap:
+        if n_e2 <= local_edge_cap:
             sol = _local_union_find(e2.toPandas())
             if stats is not None:
                 stats["local_solve"] = True

@@ -45,7 +45,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.ddsketch_spark import SketchConfig, merge_partials
-from ..functions.ddsketch_sql import ddsketch_aggregate_sql
+from ..functions.ddsketch_sql import ddsketch_aggregate_sql, ddsketch_histogram
 
 
 def stream_state_partitions(staged_dir: str, n_batches: int) -> int:
@@ -341,26 +341,13 @@ def windowed_sketch_histogram(
     weight_col: str | None = None,
 ) -> DataFrame:
     """Watermarked tumbling-window sketch histogram — the fully-native
-    streaming aggregation: groupBy(window, keys, side, idx).count() runs in
-    the state store with late-data handling from the watermark; downstream
-    consumers assemble blobs or walk quantiles exactly as in batch.
-    weight_col: weighted inserts (sum(weight) per bucket, same guards as
-    the batch path)."""
-    from ..functions.ddsketch_sql import bucket_columns, value_guard
-
-    keys = list(keys)
-    v = F.col(value_col)
-    side, idx = bucket_columns(v, config)
-    filtered = (stream_df
-                .withWatermark(ts_col, watermark)
-                .where(value_guard(v, config)))
-    if weight_col is None:
-        c = F.count(F.lit(1)).cast("double")
-    else:
-        w = F.col(weight_col).cast("double")
-        filtered = filtered.where(w.isNotNull() & ~F.isnan(w) & (w > 0))
-        c = F.sum(w)
-    return (filtered
-            .groupBy(F.window(ts_col, window_duration), *keys,
-                     side.alias("side"), idx.alias("idx"))
-            .agg(c.alias("c")))
+    streaming aggregation: the batch ``ddsketch_histogram`` over the
+    watermarked stream, with the ``window`` column as one more group key, so
+    groupBy(window, keys, side, idx) runs in the state store with late-data
+    handling from the watermark; downstream consumers assemble blobs or walk
+    quantiles exactly as in batch. weight_col: weighted inserts (sum(weight)
+    per bucket, same guards as the batch path)."""
+    return ddsketch_histogram(stream_df.withWatermark(ts_col, watermark),
+                              value_col,
+                              [F.window(ts_col, window_duration), *keys],
+                              config, weight_col)

@@ -71,16 +71,15 @@ def test_cubic_bucket_value_sql_within_ulps(alpha):
 def test_cubic_query_matches_oracle(spark):
     """End-to-end: the LogCubic Spark query hash-matches its DuckDB oracle
     on the fixed sf0.001 table — the same comparison the driver runs."""
-    from sketches_rust_spark.operators.queries import (
-        DDSKETCH_ORACLES, DDSKETCH_QUERIES)
+    from sketches_rust_spark.operators.queries import PROOFS
 
-    name = "ddsketch_cubic_textlen_by_lang"
-    got = (DDSKETCH_QUERIES[name](spark, "/root/testdata/sf0.001")
+    query, oracle = PROOFS["ddsketch_cubic_textlen_by_lang"]
+    got = (query(spark, "/root/testdata/sf0.001")
            .toPandas().sort_values("lang").reset_index(drop=True))
     con = duckdb.connect()
     con.execute("CREATE VIEW documents AS SELECT * FROM "
                 "'/root/testdata/sf0.001/documents.parquet'")
-    want = (con.execute(DDSKETCH_ORACLES[name]).df()
+    want = (con.execute(oracle).df()
             .sort_values("lang").reset_index(drop=True))
     assert list(got.columns) == list(want.columns)
     pd.testing.assert_frame_equal(got, want, check_exact=True)

@@ -5,6 +5,8 @@ the matching ``oracle_sql()`` via DuckDB: row count, column names, and values
 (order-insensitive, exact after the queries' own rounding).
 """
 
+import hashlib
+import json
 import os
 import sys
 
@@ -19,6 +21,12 @@ import __spark_entry__ as entry_mod
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+# sha256 of json.dumps(oracle_sql(), sort_keys=True) after replacing the
+# checkout root with "<ROOT>" (the pages oracles read their fixture by
+# absolute path). A change here changes what every query is checked against.
+ORACLE_TEXT_SHA256 = (
+    "750d6e38890e06ff0d5bf7e2bc4e934b578b61ee8d586a2b918476bc52bc7437")
 
 
 @pytest.fixture(scope="module")
@@ -42,15 +50,23 @@ def test_entry_smoke(spark):
     assert set(df.columns) >= {"lang", "p50", "p90", "p99"}
 
 
+def test_oracle_text_pinned():
+    """Every oracle's SQL text is byte-identical to the pinned set: the
+    registry or an oracle function cannot be refactored into a different
+    proof unnoticed."""
+    root = os.path.dirname(os.path.abspath(entry_mod.__file__))
+    texts = {name: sql.replace(root, "<ROOT>")
+             for name, sql in entry_mod.oracle_sql().items()}
+    digest = hashlib.sha256(
+        json.dumps(texts, sort_keys=True).encode()).hexdigest()
+    assert digest == ORACLE_TEXT_SHA256
+
+
 @pytest.mark.parametrize("name", sorted(entry_mod.queries().keys()))
 def test_query_matches_oracle(spark, duck, name):
     q = entry_mod.queries()[name]
-    oracles = entry_mod.oracle_sql()
     got = q(spark, SF_DIR).toPandas()
-    if name not in oracles:
-        assert len(got) >= 0  # rows-only check, mirroring the driver
-        return
-    want = duck.execute(oracles[name]).df()
+    want = duck.execute(entry_mod.oracle_sql()[name]).df()
 
     assert sorted(got.columns) == sorted(want.columns), (
         f"{name}: columns {sorted(got.columns)} != {sorted(want.columns)}")

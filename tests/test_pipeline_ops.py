@@ -485,7 +485,7 @@ def test_simhash_max_hamming_validation(spark):
         simhash_near_pairs(sigs, max_hamming=-1)
 
 
-def test_near_dup_clusters_random_graphs_vs_union_find(spark, monkeypatch):
+def test_near_dup_clusters_random_graphs_vs_union_find(spark):
     """The contraction + pointer-jumping CC must equal a reference
     union-find on random graph shapes: sparse random, dense clique-ish,
     long chains, and a mix with self-contained stars."""
@@ -513,10 +513,9 @@ def test_near_dup_clusters_random_graphs_vs_union_find(spark, monkeypatch):
         # zero local-solve cap) must BOTH match the reference union-find
         got = {r["_id"]: r["cluster"]
                for r in near_dup_clusters(pairs, max_iters=30).collect()}
-        monkeypatch.setenv("SKETCH_CC_LOCAL_EDGE_CAP", "0")
         got_dist = {r["_id"]: r["cluster"]
-                    for r in near_dup_clusters(pairs, max_iters=30).collect()}
-        monkeypatch.delenv("SKETCH_CC_LOCAL_EDGE_CAP")
+                    for r in near_dup_clusters(pairs, max_iters=30,
+                                               local_edge_cap=0).collect()}
         assert got == got_dist
         parent = {}
 
@@ -535,7 +534,7 @@ def test_near_dup_clusters_random_graphs_vs_union_find(spark, monkeypatch):
         assert got == want
 
 
-def test_near_dup_clusters_raises_on_nonconvergence(spark, monkeypatch):
+def test_near_dup_clusters_raises_on_nonconvergence(spark):
     """A long path needs diameter iterations; in the DISTRIBUTED loop
     (local-solve gate off) a tiny cap must raise instead of silently
     returning split components. The default driver-side path is exact
@@ -544,13 +543,12 @@ def test_near_dup_clusters_raises_on_nonconvergence(spark, monkeypatch):
 
     path = spark.createDataFrame([(i, i + 1) for i in range(8)],
                                  ["id_a", "id_b"])
-    monkeypatch.setenv("SKETCH_CC_LOCAL_EDGE_CAP", "0")
     with pytest.raises(RuntimeError, match="converge"):
-        near_dup_clusters(path, max_iters=2)
+        near_dup_clusters(path, max_iters=2, local_edge_cap=0)
     labels = {r["_id"]: r["cluster"]
-              for r in near_dup_clusters(path, max_iters=20).collect()}
+              for r in near_dup_clusters(path, max_iters=20,
+                                         local_edge_cap=0).collect()}
     assert set(labels.values()) == {0}
-    monkeypatch.delenv("SKETCH_CC_LOCAL_EDGE_CAP")
     local = {r["_id"]: r["cluster"]
              for r in near_dup_clusters(path, max_iters=2).collect()}
     assert local == labels  # union-find path: exact even under max_iters=2
@@ -817,7 +815,7 @@ def test_contamination_max_eval_df_cap(spark):
     assert uncapped.count() == 24  # 6 docs x 4 items via the stop-shingle
 
 
-def test_cc_adversarial_skew_clique_plus_path(spark, monkeypatch):
+def test_cc_adversarial_skew_clique_plus_path(spark):
     """The adversarial CC fixture: one giant clique (a template duplicated
     into ~10% of the corpus — the worst-case skew a web crawl produces)
     plus a long path component (the worst case for plain min-star
@@ -843,10 +841,10 @@ def test_cc_adversarial_skew_clique_plus_path(spark, monkeypatch):
     # force the distributed pointer-jumping loop: this test pins the LOOP's
     # round bound, which the driver-side union-find gate would bypass on a
     # graph this small
-    monkeypatch.setenv("SKETCH_CC_LOCAL_EDGE_CAP", "0")
     stats: dict = {}
     labels = {r._id: r.cluster
-              for r in near_dup_clusters(pairs, stats=stats).collect()}
+              for r in near_dup_clusters(pairs, stats=stats,
+                                         local_edge_cap=0).collect()}
     assert all(labels[i] == clique_ids[0] for i in clique_ids)
     assert all(labels[i] == path_ids[0] for i in path_ids)
 
@@ -863,7 +861,7 @@ def test_cc_adversarial_skew_clique_plus_path(spark, monkeypatch):
     assert stats["rounds"] >= 3  # the path is genuinely long (not trivial)
 
 
-def test_cc_local_solve_second_gate_contracted_graph(spark, monkeypatch):
+def test_cc_local_solve_second_gate_contracted_graph(spark):
     """Phase 2a specifically: input edge count ABOVE the local cap, the
     contracted remainder below it — the gate that a production-size
     clique-heavy corpus takes. Pins the m-join-final composition (rep ->
@@ -878,10 +876,10 @@ def test_cc_local_solve_second_gate_contracted_graph(spark, monkeypatch):
                   for i in range(len(path_ids) - 1)]
     pairs = spark.createDataFrame(clique_edges + path_edges, ["id_a", "id_b"])
     # input directed = 2*(3160+199) = 6,718 > cap; contracted = 2*198 <= cap
-    monkeypatch.setenv("SKETCH_CC_LOCAL_EDGE_CAP", "1000")
     stats: dict = {}
     labels = {r._id: r.cluster
-              for r in near_dup_clusters(pairs, stats=stats).collect()}
+              for r in near_dup_clusters(pairs, stats=stats,
+                                         local_edge_cap=1000).collect()}
     assert stats["input_edges"] == 6718
     assert 0 < stats["contracted_edges"] <= 1000
     assert stats.get("local_solve") is True and stats["rounds"] == 0
