@@ -36,9 +36,10 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import PandasUDFType, pandas_udf
+from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
+from ..kernel.mapping import LOG
 from ..kernel.sketch import DDSketch
 from ._two_level import (  # ROWS_COL, SKETCH_COL: part of this module's API
     ROWS_COL,
@@ -153,10 +154,10 @@ def ddsketch_aggregate_weighted(
     (bucket math not SQL-expressible) fall back to a groupBy+applyInPandas
     build; prefer LOG at scale.
     """
-    from .ddsketch_sql import _LOG_PRESETS, ddsketch_aggregate_sql
+    from .ddsketch_sql import ddsketch_aggregate_sql
 
     keys = list(keys)
-    if config.preset in _LOG_PRESETS:
+    if config.new().index_mapping.layout == LOG:
         return ddsketch_aggregate_sql(df, value_col, keys, config,
                                       weight_col=weight_col)
     narrow = df.select(*keys,
@@ -246,7 +247,7 @@ def make_merge_udaf(config: SketchConfig = DEFAULT_CONFIG):
             if b is not None:
                 sk.decode_and_merge_with(bytes(b))
         return sk.encode()
-    return pandas_udf(merge_blobs, "binary", PandasUDFType.GROUPED_AGG)
+    return pandas_udf(merge_blobs, "binary")
 
 
 def make_build_udaf(config: SketchConfig = DEFAULT_CONFIG):
@@ -260,7 +261,7 @@ def make_build_udaf(config: SketchConfig = DEFAULT_CONFIG):
         sk = config.new()
         sk.accept_many(_f64(values))
         return sk.encode()
-    return pandas_udf(build, "binary", PandasUDFType.GROUPED_AGG)
+    return pandas_udf(build, "binary")
 
 
 def register_sql_functions(spark: SparkSession, config: SketchConfig = DEFAULT_CONFIG) -> None:

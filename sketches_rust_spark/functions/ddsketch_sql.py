@@ -24,7 +24,11 @@ value are both within alpha); byte-identity with the Python build path is
 therefore not guaranteed, only estimate-equality within alpha (tested).
 
 The LogCubic mapping needs f64 bit extraction, which Spark SQL lacks — use
-the pandas-UDAF path in ddsketch_spark.py for LogCubic.
+the pandas-UDAF path in ddsketch_spark.py for LogCubic. Which mapping layout
+and store kind a preset has is read from the kernel's preset table
+(``DDSketch.PRESETS``, through the sketch ``config.new()`` builds), and the
+blob assembly inserts each group's histogram through the kernel's single
+insert path, ``DDSketch.apply_routed``.
 """
 
 from __future__ import annotations
@@ -37,23 +41,20 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..kernel.mapping import LOG
 from ..kernel.sketch import DDSketch
+from ..kernel.store import COLLAPSING_LOWEST, UNBOUNDED
 from ._two_level import grouped_blobs
 from .ddsketch_spark import SketchConfig, value_guard
 
-_LOG_PRESETS = {
-    "logarithmic_collapsing_lowest_dense",
-    "logarithmic_collapsing_highest_dense",
-    "logarithmic_unbounded_size_dense_store",
-}
-
 
 def _require_log_mapping(config: SketchConfig) -> DDSketch:
-    if config.preset not in _LOG_PRESETS:
+    proto = config.new()
+    if proto.index_mapping.layout != LOG:
         raise ValueError(
-            f"SQL build path supports only LOG-mapping presets {_LOG_PRESETS}; "
-            f"got {config.preset}. Use ddsketch_aggregate (pandas path) for LogCubic.")
-    return config.new()
+            f"SQL build path supports only LOG-mapping presets; got {config.preset} "
+            "(LogCubic). Use ddsketch_aggregate (pandas path) for LogCubic.")
+    return proto
 
 
 def bucket_columns(value: Column, config: SketchConfig) -> tuple[Column, Column]:
@@ -129,18 +130,9 @@ def blobs_from_histogram(
     """
     def assemble(pdf: pd.DataFrame) -> tuple[bytes, int]:
         sk = config.new()
-        side = pdf["side"].to_numpy(np.int64)
-        idx = pdf["idx"].to_numpy(np.int64)
         c = pdf["c"].to_numpy(np.float64)
-        pos = side == 1
-        if pos.any():
-            sk.positive_value_store.add_many(idx[pos], c[pos])
-        neg = side == -1
-        if neg.any():
-            sk.negative_value_store.add_many(idx[neg], c[neg])
-        zero = side == 0
-        if zero.any():
-            sk.zero_count += float(c[zero].sum())
+        sk.apply_routed(pdf["side"].to_numpy(np.int64),
+                        pdf["idx"].to_numpy(np.int64), c)
         return sk.encode(), int(c.sum())
 
     return grouped_blobs(hist, keys, assemble)
@@ -180,14 +172,15 @@ def collapse_histogram(
     collapsing-highest mirrors it. The two stores (side = +-1) collapse
     independently, exactly like the sketch's positive/negative stores; the
     zero bucket is untouched."""
-    if "collapsing" not in config.preset:
+    kind = config.new().positive_value_store.kind
+    if kind == UNBOUNDED:
         return hist
     from pyspark.sql import Window
 
     mb = config.max_num_bins
     keys = list(keys)
     w = Window.partitionBy(*keys, "side")
-    if "lowest" in config.preset:
+    if kind == COLLAPSING_LOWEST:
         floor = F.max("idx").over(w) - F.lit(mb - 1)
         clamped = F.greatest(F.col("idx"), floor)
     else:

@@ -11,6 +11,18 @@ Structure: a two-sided sketch — negative values indexed by magnitude into a
 separate store, an exact zero bucket for |v| <= min_indexed_value, a positive
 store for the rest (spec sketch.rs:12-19,34-56).
 
+One place for each decision:
+* ``DDSketch.PRESETS`` is the preset table, name -> (index mapping layout,
+  store kind); the reference's six constructors are its six rows and
+  ``preset()`` builds every sketch from it. Code that needs a preset's
+  layout or store kind reads this table (or the sketch a config builds),
+  never the preset's name.
+* ``route_batch`` holds the accept rule and ``apply_routed`` is the single
+  insert path into the stores and the zero bucket; ``accept_many`` is the
+  two in a row.
+* ``_merge_blob`` is the one walk over a blob's flags, shared by ``decode``
+  and ``decode_and_merge_with``.
+
 Reference quirks handled deliberately (SURVEY.md §8):
 * Q1: the reference's ``accept_with_count`` ignores its count argument; we
   implement true weighted insert (``accept_many`` with weights), which the
@@ -31,6 +43,7 @@ from .serde import Input
 from .store import (
     COLLAPSING_HIGHEST,
     COLLAPSING_LOWEST,
+    FLAG_TYPE_INDEX_MAPPING,
     FLAG_TYPE_NEGATIVE_STORE,
     FLAG_TYPE_POSITIVE_STORE,
     UNBOUNDED,
@@ -65,57 +78,50 @@ class DDSketch:
         self.positive_value_store = positive_store
         self.zero_count = zero_count
 
-    # -- factories (spec sketch.rs:297-414) ----------------------------------
+    # -- presets (spec sketch.rs:297-414) ------------------------------------
 
-    @staticmethod
-    def collapsing_lowest_dense(relative_accuracy: float, max_num_bins: int) -> "DDSketch":
-        m = IndexMapping.with_relative_accuracy(LOG_CUBIC, relative_accuracy)
-        return DDSketch(m, DenseStore(COLLAPSING_LOWEST, max_num_bins),
-                        DenseStore(COLLAPSING_LOWEST, max_num_bins))
-
-    @staticmethod
-    def collapsing_highest_dense(relative_accuracy: float, max_num_bins: int) -> "DDSketch":
-        m = IndexMapping.with_relative_accuracy(LOG_CUBIC, relative_accuracy)
-        return DDSketch(m, DenseStore(COLLAPSING_HIGHEST, max_num_bins),
-                        DenseStore(COLLAPSING_HIGHEST, max_num_bins))
-
-    @staticmethod
-    def unbounded_dense(relative_accuracy: float) -> "DDSketch":
-        m = IndexMapping.with_relative_accuracy(LOG_CUBIC, relative_accuracy)
-        return DDSketch(m, DenseStore(UNBOUNDED), DenseStore(UNBOUNDED))
-
-    @staticmethod
-    def logarithmic_collapsing_lowest_dense(relative_accuracy: float, max_num_bins: int) -> "DDSketch":
-        m = IndexMapping.with_relative_accuracy(LOG, relative_accuracy)
-        return DDSketch(m, DenseStore(COLLAPSING_LOWEST, max_num_bins),
-                        DenseStore(COLLAPSING_LOWEST, max_num_bins))
-
-    @staticmethod
-    def logarithmic_collapsing_highest_dense(relative_accuracy: float, max_num_bins: int) -> "DDSketch":
-        m = IndexMapping.with_relative_accuracy(LOG, relative_accuracy)
-        return DDSketch(m, DenseStore(COLLAPSING_HIGHEST, max_num_bins),
-                        DenseStore(COLLAPSING_HIGHEST, max_num_bins))
-
-    @staticmethod
-    def logarithmic_unbounded_size_dense_store(relative_accuracy: float) -> "DDSketch":
-        m = IndexMapping.with_relative_accuracy(LOG, relative_accuracy)
-        return DDSketch(m, DenseStore(UNBOUNDED), DenseStore(UNBOUNDED))
-
-    PRESETS = (
-        "collapsing_lowest_dense",
-        "collapsing_highest_dense",
-        "unbounded_dense",
-        "logarithmic_collapsing_lowest_dense",
-        "logarithmic_collapsing_highest_dense",
-        "logarithmic_unbounded_size_dense_store",
-    )
+    # The reference's six constructors are the six (index mapping layout,
+    # store kind) pairs; every sketch of this engine is built from this table.
+    PRESETS = {
+        "collapsing_lowest_dense": (LOG_CUBIC, COLLAPSING_LOWEST),
+        "collapsing_highest_dense": (LOG_CUBIC, COLLAPSING_HIGHEST),
+        "unbounded_dense": (LOG_CUBIC, UNBOUNDED),
+        "logarithmic_collapsing_lowest_dense": (LOG, COLLAPSING_LOWEST),
+        "logarithmic_collapsing_highest_dense": (LOG, COLLAPSING_HIGHEST),
+        "logarithmic_unbounded_size_dense_store": (LOG, UNBOUNDED),
+    }
 
     @staticmethod
     def preset(name: str, relative_accuracy: float, max_num_bins: int = 0) -> "DDSketch":
-        factory = getattr(DDSketch, name)
-        if name in ("unbounded_dense", "logarithmic_unbounded_size_dense_store"):
-            return factory(relative_accuracy)
-        return factory(relative_accuracy, max_num_bins)
+        """An empty sketch of preset ``name``; ``max_num_bins`` caps the
+        collapsing stores and is ignored by the unbounded ones."""
+        layout, kind = DDSketch.PRESETS[name]
+        m = IndexMapping.with_relative_accuracy(layout, relative_accuracy)
+        return DDSketch(m, DenseStore(kind, max_num_bins), DenseStore(kind, max_num_bins))
+
+    @staticmethod
+    def collapsing_lowest_dense(relative_accuracy: float, max_num_bins: int) -> "DDSketch":
+        return DDSketch.preset("collapsing_lowest_dense", relative_accuracy, max_num_bins)
+
+    @staticmethod
+    def collapsing_highest_dense(relative_accuracy: float, max_num_bins: int) -> "DDSketch":
+        return DDSketch.preset("collapsing_highest_dense", relative_accuracy, max_num_bins)
+
+    @staticmethod
+    def unbounded_dense(relative_accuracy: float) -> "DDSketch":
+        return DDSketch.preset("unbounded_dense", relative_accuracy)
+
+    @staticmethod
+    def logarithmic_collapsing_lowest_dense(relative_accuracy: float, max_num_bins: int) -> "DDSketch":
+        return DDSketch.preset("logarithmic_collapsing_lowest_dense", relative_accuracy, max_num_bins)
+
+    @staticmethod
+    def logarithmic_collapsing_highest_dense(relative_accuracy: float, max_num_bins: int) -> "DDSketch":
+        return DDSketch.preset("logarithmic_collapsing_highest_dense", relative_accuracy, max_num_bins)
+
+    @staticmethod
+    def logarithmic_unbounded_size_dense_store(relative_accuracy: float) -> "DDSketch":
+        return DDSketch.preset("logarithmic_unbounded_size_dense_store", relative_accuracy)
 
     # -- build ----------------------------------------------------------------
 
@@ -124,49 +130,23 @@ class DDSketch:
                          np.array([count], dtype=np.float64))
 
     def accept_many(self, values: np.ndarray, weights: np.ndarray | None = None) -> None:
-        """Vectorized build: route a whole array of values in one pass.
-
-        Semantics preserved from the reference accept (spec sketch.rs:38-56):
-        out-of-range magnitudes silently dropped; near-zero values land in the
-        exact zero bucket; non-positive weights dropped. Unlike the reference
-        (quirk Q1) the weight is honored.
-        """
-        v = np.asarray(values, dtype=np.float64)
-        if weights is None:
-            w = np.ones(v.shape[0], dtype=np.float64)
-        else:
-            w = np.asarray(weights, dtype=np.float64)
-
-        # Non-finite values are dropped along with out-of-range magnitudes.
-        # (Deviation from the reference, which keeps +-inf because its
-        # `inf > max_indexed_value` guard compares inf > inf: under the LOG
-        # mapping that is pathological — ln(inf) has no bucket — so we extend
-        # the documented "out-of-range values are silently dropped" rule,
-        # spec sketch.rs:43-45, to non-finite input.)
-        keep = (w > 0.0) & np.isfinite(v) & (np.abs(v) <= self.max_indexed_value)
-        v = v[keep]
-        w = w[keep]
-        if v.size == 0:
-            return
-
-        pos = v > self.min_indexed_value
-        neg = v < -self.min_indexed_value
-        zero = ~(pos | neg)
-
-        if pos.any():
-            idx = self.index_mapping.index_of(v[pos])
-            self.positive_value_store.add_many(idx, w[pos])
-        if neg.any():
-            idx = self.index_mapping.index_of(-v[neg])
-            self.negative_value_store.add_many(idx, w[neg])
-        zc = w[zero].sum()
-        if zc > 0.0:
-            self.zero_count += float(zc)
+        """Vectorized build: route a whole array of values in one pass, then
+        insert it. Unlike the reference (quirk Q1) the weight is honored."""
+        self.apply_routed(*self.route_batch(values), weights)
 
     def route_batch(self, values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Vectorized routing for deferred builds: returns (side, idx) where
-        side is +1/-1/0 for positive-store/negative-store/zero-bucket and -2
-        for dropped values; idx is the bucket index (valid where side=+-1).
+        """The accept rule (spec sketch.rs:38-56), vectorized: returns
+        (side, idx) where side is +1/-1/0 for positive-store/negative-store/
+        zero-bucket and -2 for dropped values; idx is the bucket index (valid
+        where side=+-1). Near-zero values land in the exact zero bucket;
+        out-of-range magnitudes are silently dropped.
+
+        Non-finite values are dropped along with out-of-range magnitudes.
+        (Deviation from the reference, which keeps +-inf because its
+        `inf > max_indexed_value` guard compares inf > inf: under the LOG
+        mapping that is pathological — ln(inf) has no bucket — so we extend
+        the documented "out-of-range values are silently dropped" rule,
+        spec sketch.rs:43-45, to non-finite input.)
 
         One log pass per batch; callers can slice the result per group and
         apply it later with ``apply_routed`` — the aggregation hot path.
@@ -183,17 +163,22 @@ class DDSketch:
             idx[nz] = self.index_mapping.index_of(np.abs(v[nz]))
         return side, idx
 
-    def apply_routed(self, side: np.ndarray, idx: np.ndarray) -> None:
-        """Insert pre-routed (side, idx) pairs (weight 1 each)."""
-        pos = side == 1
-        if pos.any():
-            self.positive_value_store.add_many(idx[pos])
-        neg = side == -1
-        if neg.any():
-            self.negative_value_store.add_many(idx[neg])
-        zc = int((side == 0).sum())
-        if zc:
-            self.zero_count += float(zc)
+    def apply_routed(self, side: np.ndarray, idx: np.ndarray,
+                     weights: np.ndarray | None = None) -> None:
+        """The single insert path: add pre-routed (side, idx) pairs to the
+        stores and the zero bucket, with weight 1 each or ``weights``.
+        Non-positive weights are dropped, matching the reference's
+        ``count <= 0.0`` guard (spec unbounded.rs:148-150)."""
+        w = None if weights is None else np.asarray(weights, dtype=np.float64)
+        live = None if w is None else w > 0.0
+        for store, s in ((self.positive_value_store, 1), (self.negative_value_store, -1)):
+            on = side == s if live is None else (side == s) & live
+            if on.any():
+                store.add_many(idx[on], None if w is None else w[on])
+        zero = side == 0 if live is None else (side == 0) & live
+        zc = float(zero.sum() if w is None else w[zero].sum())
+        if zc > 0.0:
+            self.zero_count += zc
 
     # -- queries (spec sketch.rs:58-171) ---------------------------------------
 
@@ -301,56 +286,53 @@ class DDSketch:
         return bytes(buf)
 
     def decode_and_merge_with(self, data: bytes) -> None:
+        """Add a blob into this sketch; the receiver's store kinds are kept
+        (quirk Q4) and the blob's mapping must equal the receiver's."""
+        self._merge_blob(data)
+
+    @staticmethod
+    def decode(data: bytes) -> "DDSketch":
+        """A sketch of the blob's own mapping, with unbounded stores whatever
+        the encoder's store kind (quirk Q4)."""
+        blank = object.__new__(DDSketch)
+        blank.index_mapping = None
+        blank.negative_value_store = DenseStore(UNBOUNDED)
+        blank.positive_value_store = DenseStore(UNBOUNDED)
+        blank.zero_count = 0.0
+        index_mapping = blank._merge_blob(data)
+        if index_mapping is None:
+            raise ValueError("No IndexMapping decoded")
+        return DDSketch(index_mapping, blank.negative_value_store,
+                        blank.positive_value_store, blank.zero_count)
+
+    def _merge_blob(self, data: bytes) -> IndexMapping | None:
+        """The one walk over a blob's flags: bin blocks and the zero count go
+        straight into this sketch, and a decoded mapping must equal this
+        sketch's (unchecked while it has none, as in ``decode``). Returns
+        the last mapping decoded."""
         inp = Input(bytes(data))
+        decoded = None
         while inp.has_remaining():
             marker = inp.read_byte()
             flag_type = marker & 3
             if flag_type == FLAG_TYPE_POSITIVE_STORE:
-                mode = bin_encoding_mode_of_flag(marker)
-                self.positive_value_store.decode_and_merge_with(inp, mode)
+                self.positive_value_store.decode_and_merge_with(
+                    inp, bin_encoding_mode_of_flag(marker))
             elif flag_type == FLAG_TYPE_NEGATIVE_STORE:
-                mode = bin_encoding_mode_of_flag(marker)
-                self.negative_value_store.decode_and_merge_with(inp, mode)
-            elif flag_type == 0b10:  # IndexMapping
+                self.negative_value_store.decode_and_merge_with(
+                    inp, bin_encoding_mode_of_flag(marker))
+            elif flag_type == FLAG_TYPE_INDEX_MAPPING:
                 layout = _layout_of_marker(marker)
                 gamma = inp.read_double_le()
                 index_offset = inp.read_double_le()
                 decoded = IndexMapping.with_gamma_offset(layout, gamma, index_offset)
-                if self.index_mapping != decoded:
+                if self.index_mapping is not None and self.index_mapping != decoded:
                     raise ValueError("Unmatched IndexMapping")
-            else:  # SketchFeatures
-                if marker == FLAG_ZERO_COUNT:
-                    self.zero_count += serde.decode_var_double(inp)
-                else:
-                    _ignore_exact_summary_statistic_flags(inp, marker)
-
-    @staticmethod
-    def decode(data: bytes) -> "DDSketch":
-        inp = Input(bytes(data))
-        positive = DenseStore(UNBOUNDED)
-        negative = DenseStore(UNBOUNDED)
-        index_mapping = None
-        zero_count = 0.0
-        while inp.has_remaining():
-            marker = inp.read_byte()
-            flag_type = marker & 3
-            if flag_type == FLAG_TYPE_POSITIVE_STORE:
-                positive.decode_and_merge_with(inp, bin_encoding_mode_of_flag(marker))
-            elif flag_type == FLAG_TYPE_NEGATIVE_STORE:
-                negative.decode_and_merge_with(inp, bin_encoding_mode_of_flag(marker))
-            elif flag_type == 0b10:
-                layout = _layout_of_marker(marker)
-                gamma = inp.read_double_le()
-                index_offset = inp.read_double_le()
-                index_mapping = IndexMapping.with_gamma_offset(layout, gamma, index_offset)
+            elif marker == FLAG_ZERO_COUNT:
+                self.zero_count += serde.decode_var_double(inp)
             else:
-                if marker == FLAG_ZERO_COUNT:
-                    zero_count += serde.decode_var_double(inp)
-                else:
-                    _ignore_exact_summary_statistic_flags(inp, marker)
-        if index_mapping is None:
-            raise ValueError("No IndexMapping decoded")
-        return DDSketch(index_mapping, negative, positive, zero_count)
+                _ignore_exact_summary_statistic_flags(inp, marker)
+        return decoded
 
     def copy(self) -> "DDSketch":
         return DDSketch(self.index_mapping,

@@ -22,8 +22,10 @@ Both are therefore order-insensitive in the final histogram, which is what
 makes the sketch a valid distributed aggregator: partial sketches built on
 arbitrary partition splits merge to the same bounded-error result.
 
-The vectorized ``add_many`` is the per-row hot path used by the Spark build
-UDAF: one ``np.add.at`` per Arrow batch, no per-row Python.
+The vectorized ``add_many`` is the one bulk increment: the sketch's single
+insert path (``DDSketch.apply_routed``), store merges and the decoder's
+shared bin-block tail all end in it — one ``np.add.at`` per batch, no per-row
+Python.
 """
 
 from __future__ import annotations
@@ -35,6 +37,8 @@ from .serde import Input
 
 _I32_MIN = -(1 << 31)
 _I32_MAX = (1 << 31) - 1
+_I64_MIN = -(1 << 63)
+_I64_MAX = (1 << 63) - 1
 
 # Bin-encoding wire modes (spec store/mod.rs:237-258).
 INDEX_DELTAS_AND_COUNTS = 1
@@ -285,70 +289,50 @@ class DenseStore:
 
     def decode_and_merge_with(self, inp: Input, mode: int) -> None:
         """Decode one bin block, adding straight into this store
-        (spec store/mod.rs:92-141). Non-positive decoded counts are dropped by
-        ``add`` exactly as in the reference. A declared bin count is never
-        trusted for allocation: sparse loops are bounded by input exhaustion
-        and dense spans by MAX_DECODE_DENSE_SPAN."""
-        if mode == INDEX_DELTAS_AND_COUNTS:
-            num_bins = serde.decode_unsigned_var_long(inp)
-            if num_bins < 0:
-                raise ValueError("corrupt blob: negative bin count")
-            indexes, cnts = [], []
-            index = 0
-            for _ in range(num_bins):
-                index += serde.decode_signed_var_long(inp)
-                count = serde.decode_var_double(inp)
-                if count > 0.0:
-                    indexes.append(serde.i64_to_i32_exact(index))
-                    cnts.append(count)
-            if indexes:
-                self._check_decode_span(min(indexes), max(indexes))
-                self.add_many(np.array(indexes, dtype=np.int64),
-                              np.array(cnts, dtype=np.float64))
-        elif mode == INDEX_DELTAS:
-            num_bins = serde.decode_unsigned_var_long(inp)
-            if num_bins < 0:
-                raise ValueError("corrupt blob: negative bin count")
-            indexes = []
-            index = 0
-            for _ in range(num_bins):
-                index += serde.decode_signed_var_long(inp)
-                indexes.append(serde.i64_to_i32_exact(index))
-            if indexes:
-                self._check_decode_span(min(indexes), max(indexes))
-                self.add_many(np.array(indexes, dtype=np.int64))
-        elif mode == CONTIGUOUS_COUNTS:
-            num_bins = serde.decode_unsigned_var_long(inp)
-            if num_bins < 0:
-                raise ValueError("corrupt blob: negative bin count")
+        (spec store/mod.rs:92-141). Each of the three bin encodings decodes
+        to (indexes, counts); one tail then drops non-positive counts exactly
+        as the reference's ``add`` does, checks that the kept indexes fit
+        i32 and MAX_DECODE_DENSE_SPAN, and adds them. A declared bin count
+        is never trusted for allocation: sparse loops are bounded by input
+        exhaustion and dense spans by MAX_DECODE_DENSE_SPAN."""
+        if mode not in (INDEX_DELTAS_AND_COUNTS, INDEX_DELTAS, CONTIGUOUS_COUNTS):
+            raise ValueError("Unknown BinEncodingMode.")
+        num_bins = serde.decode_unsigned_var_long(inp)
+        if num_bins < 0:
+            raise ValueError("corrupt blob: negative bin count")
+        if mode == CONTIGUOUS_COUNTS:
             index = serde.decode_signed_var_long(inp)
             index_delta = serde.decode_signed_var_long(inp)
             fast = serde.try_decode_var_double_array(inp.buffer(), inp.tell(), num_bins)
-            if fast is not None:
-                values, new_pos = fast
+            if fast is None:
+                counts = [serde.decode_var_double(inp) for _ in range(num_bins)]
+            else:
+                counts, new_pos = fast
                 inp.seek(new_pos)
-                idx = index + index_delta * np.arange(num_bins, dtype=np.int64)
-                keep = values > 0.0
-                if keep.any():
-                    lo, hi = int(idx[keep].min()), int(idx[keep].max())
-                    serde.i64_to_i32_exact(lo)
-                    serde.i64_to_i32_exact(hi)
-                    self._check_decode_span(lo, hi)
-                    self.add_many(idx[keep], values[keep])
-                return
-            indexes, cnts = [], []
-            for _ in range(num_bins):
-                count = serde.decode_var_double(inp)
-                if count > 0.0:
-                    indexes.append(serde.i64_to_i32_exact(index))
-                    cnts.append(count)
-                index += index_delta
-            if indexes:
-                self._check_decode_span(min(indexes), max(indexes))
-                self.add_many(np.array(indexes, dtype=np.int64),
-                              np.array(cnts, dtype=np.float64))
+            last = index + index_delta * max(len(counts) - 1, 0)
+            if _I64_MIN <= last <= _I64_MAX:
+                indexes = index + index_delta * np.arange(len(counts), dtype=np.int64)
+            else:  # int64 arithmetic would wrap a far index back into range
+                indexes = [index + index_delta * k for k in range(len(counts))]
         else:
-            raise ValueError("Unknown BinEncodingMode.")
+            with_counts = mode == INDEX_DELTAS_AND_COUNTS
+            indexes, counts, index = [], [], 0
+            for _ in range(num_bins):
+                index += serde.decode_signed_var_long(inp)
+                indexes.append(index)
+                counts.append(serde.decode_var_double(inp) if with_counts else 1.0)
+        counts = np.asarray(counts, dtype=np.float64)
+        keep = counts > 0.0
+        if not keep.any():
+            return
+        # Python-int indexes past int64 make an object/uint64 array, which
+        # the i32 check below still rejects
+        indexes = np.asarray(indexes)[keep]
+        lo, hi = int(indexes.min()), int(indexes.max())
+        serde.i64_to_i32_exact(lo)
+        serde.i64_to_i32_exact(hi)
+        self._check_decode_span(lo, hi)
+        self.add_many(indexes, counts[keep])
 
 
 def bin_encoding_mode_of_flag(marker: int) -> int:

@@ -32,7 +32,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
+    IntegralType,
     LongType,
+    StringType,
     StructField,
     StructType,
 )
@@ -717,7 +719,9 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
 
     local_edge_cap: the edge count up to which the components are solved
     locally with union-find; 0 turns both gates off and always runs the
-    distributed loop."""
+    distributed loop. The gates fire only for integral or string ids, where
+    Python's min/max order is Spark's; other id types (doubles with NaN,
+    decimals, ...) always take the distributed loop."""
     # The full (bidirectional) edge set is the ONE data-scale intermediate
     # of this operator: persist it (spillable MEMORY_AND_DISK) rather than
     # localCheckpoint — a checkpoint copies every UnsafeRow into the
@@ -731,6 +735,8 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
     edges = (pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
              .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
              ).persist(StorageLevel.MEMORY_AND_DISK)  # blocked join runs ONCE
+    if not isinstance(edges.schema["src"].dataType, (IntegralType, StringType)):
+        local_edge_cap = 0
     if local_edge_cap > 0:
         # early gate on the INPUT graph: counting the persisted edge set
         # costs one cache scan (the contraction's groupBy would materialize

@@ -20,6 +20,7 @@ and rank-bound booleans instead of their estimates.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -78,6 +79,9 @@ from ..functions.sketch_udafs import (
     tdigest_quantile,
 )
 from ..kernel.bits import splitmix64
+from ..kernel.mapping import LOG
+from ..kernel.sketch import DDSketch
+from ..kernel.store import COLLAPSING_LOWEST, UNBOUNDED
 from ..sources.pages import pages_parquet_path, pages_table
 from ..streaming.sketch_stream import (
     merged_stream_result,
@@ -269,7 +273,8 @@ def _replay(spark: SparkSession, df: DataFrame, tag: str, start) -> str:
 def _replay_to_memory(spark: SparkSession, df: DataFrame, tag: str,
                       build) -> DataFrame:
     """``_replay`` of the streaming frame ``build(stream)`` into an
-    update-mode memory sink; returns the sink table."""
+    update-mode memory sink; returns the sink's rows, with the sink's
+    catalog entry already dropped."""
     sink = f"sketch_{tag}_{uuid.uuid4().hex}"
 
     def start(stream, base):
@@ -279,7 +284,9 @@ def _replay_to_memory(spark: SparkSession, df: DataFrame, tag: str,
                 .trigger(availableNow=True).start())
 
     shutil.rmtree(_replay(spark, df, tag, start), ignore_errors=True)
-    return spark.table(sink)
+    rows = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    return rows
 
 
 def _stream_walk(spark, df, groups, quantiles, cfg):
@@ -290,30 +297,36 @@ def _stream_walk(spark, df, groups, quantiles, cfg):
     (at-least-once) — and merges with ``merged_stream_result``. The
     (keys, batch_id) dedup is what makes the final quantiles equal the batch
     oracle; without it the duplicated batch would double-count and flip the
-    hash red. The sink outlives the call: the returned DataFrame reads it
-    lazily on the caller's action."""
+    hash red. The few merged rows (one per group) are collected before the
+    replay dir is removed, so nothing outlives the call."""
     def start(stream, base):
         return stream_sketch_partials(stream, "_v", groups, cfg,
                                       f"{base}/sink", f"{base}/ckpt")
 
-    sink = _replay(spark, df, "stream", start) + "/sink"
+    base = _replay(spark, df, "stream", start)
+    sink = f"{base}/sink"
     # duplicate-batch injection (retry simulation): re-append the first
     # micro-batch's partial rows verbatim
     parts = spark.read.parquet(sink)
     min_b = parts.agg(F.min("batch_id")).collect()[0][0]
     (parts.where(F.col("batch_id") == min_b)
      .write.mode("append").parquet(sink))
-    merged = merged_stream_result(spark, sink, groups, cfg)
-    return merged.select(*groups, *_quantile_cols(quantiles))
+    merged = merged_stream_result(spark, sink, groups, cfg).select(
+        *groups, *_quantile_cols(quantiles))
+    rows = merged.collect()
+    shutil.rmtree(base, ignore_errors=True)
+    return spark.createDataFrame(rows, merged.schema)
 
 
 def _oracle_preset(cfg: SketchConfig) -> dict:
-    """ddsketch_quantile_oracle_sql options that replay ``cfg``'s preset."""
-    if cfg.preset == "unbounded_dense":  # LogCubic mapping
-        return {"layout": "cubic"}
-    if cfg.preset == "logarithmic_collapsing_lowest_dense":
-        return {"collapse": "lowest", "max_bins": cfg.max_num_bins}
-    return {}
+    """ddsketch_quantile_oracle_sql options that replay ``cfg``'s preset,
+    read from its (mapping layout, store kind) entry in DDSketch.PRESETS."""
+    layout, kind = DDSketch.PRESETS[cfg.preset]
+    opts = {} if layout == LOG else {"layout": "cubic"}
+    if kind != UNBOUNDED:
+        opts["collapse"] = "lowest" if kind == COLLAPSING_LOWEST else "highest"
+        opts["max_bins"] = cfg.max_num_bins
+    return opts
 
 
 def quantile_proof(table: str, value_expr: str, groups: list[str],
@@ -1057,6 +1070,14 @@ UNION ALL SELECT 'ivf' AS method, probe_id, vec_id, score, rank FROM sub_i
 _PERSISTED_CORPORA: dict[tuple, str] = {}
 
 
+def _corpus_dir(prefix: str) -> str:
+    """A fresh temp dir for a cached corpus persist, removed when the
+    driver process exits."""
+    base = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, base, True)
+    return base
+
+
 def incremental_simhash_query(max_hamming: int = 3, n_blocks: int = 6,
                               new_mod: int = 10, new_rem: int = 7) -> Proof:
     """Incremental TEXT dedup against a persisted simhash signature table
@@ -1073,7 +1094,7 @@ def incremental_simhash_query(max_hamming: int = 3, n_blocks: int = 6,
         key = (id(spark), sf_dir, "simhash", new_mod, new_rem)
         sig_dir = _PERSISTED_CORPORA.get(key)
         if sig_dir is None or not os.path.isdir(sig_dir):
-            sig_dir = tempfile.mkdtemp(prefix="inc_simhash_sigs_") + "/sigs"
+            sig_dir = _corpus_dir("inc_simhash_sigs_") + "/sigs"
             simhash_signatures(corpus).write.mode("overwrite").parquet(sig_dir)
             _PERSISTED_CORPORA[key] = sig_dir
         return incremental_simhash_filter(
@@ -1126,7 +1147,7 @@ def incremental_dedup_query(threshold: float = 0.3, nbits: int = 6,
         key = (id(spark), sf_dir, "emb", new_mod, new_rem, dim, nbits)
         table = _PERSISTED_CORPORA.get(key)
         if table is None or not spark.catalog.tableExists(table):
-            base = tempfile.mkdtemp(prefix="inc_dedup_corpus_")
+            base = _corpus_dir("inc_dedup_corpus_")
             table = f"inc_dedup_corpus_{abs(hash(base)) % (1 << 30)}"
             write_partitioned_signatures(corpus, f"{base}/corpus", table,
                                          "embedding", dim=dim, nbits=nbits)

@@ -35,13 +35,6 @@ from pyspark.sql import functions as F
 from ..functions.ddsketch_spark import SketchConfig, merge_partials
 from ..functions.ddsketch_sql import ddsketch_aggregate_sql
 
-_LOG_PRESETS = {
-    "logarithmic_collapsing_lowest_dense",
-    "logarithmic_collapsing_highest_dense",
-    "logarithmic_unbounded_size_dense_store",
-}
-
-
 class SketchCheckpointJob:
     def __init__(
         self,

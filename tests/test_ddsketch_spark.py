@@ -156,3 +156,24 @@ def test_null_values_ignored(spark):
         assert {k: r["rows_in"] for k, r in rows.items()} == {"a": 1, "b": 1}
         for r in rows.values():
             assert DDSketch.decode(bytes(r["sketch"])).get_count() == r["rows_in"]
+
+
+def test_register_sql_functions_no_udf_type_deprecation(spark):
+    """The merge and build UDAFs declare GROUPED_AGG through their
+    ``pd.Series -> bytes`` type hints, so registering them raises no
+    pandas-UDF-type deprecation warning."""
+    import warnings
+
+    from sketches_rust_spark.functions.sketch_udafs import register_sibling_sql
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        register_sql_functions(spark, CFG)
+        register_sibling_sql(spark)
+    assert not [w for w in caught
+                if "preferred to specify type hints" in str(w.message)]
+    got = spark.sql(
+        "SELECT ddsketch_count(ddsketch_merge(s)) AS n FROM "
+        "(SELECT ddsketch_build(CAST(id AS DOUBLE) + 1) AS s FROM range(10))"
+    ).collect()
+    assert got[0]["n"] == 10.0

@@ -1,6 +1,7 @@
 """Tests for the JVM-native (SQL) DDSketch build path."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
@@ -15,6 +16,7 @@ from sketches_rust_spark.functions.ddsketch_sql import (
     ddsketch_histogram,
     ddsketch_quantiles_sql,
 )
+from sketches_rust_spark.kernel.mapping import LOG
 from sketches_rust_spark.kernel.sketch import DDSketch
 
 CFG = SketchConfig("logarithmic_unbounded_size_dense_store", 0.01, 0)
@@ -288,3 +290,66 @@ def test_quantile_oracle_rejects_collapse_without_max_bins():
     with pytest.raises(ValueError, match="max_bins"):
         ddsketch_quantile_oracle_sql(
             "t", "v", [], {"p50": 0.5}, 0.01, collapse="highest", max_bins=0)
+
+
+# values every accept rule must sort: negatives, zeros, near-zero, NaN,
+# +-inf and magnitudes beyond any preset's max_indexed_value
+_EDGE_VALUES = np.concatenate([
+    np.random.default_rng(5).lognormal(0, 4, 400),
+    -np.random.default_rng(6).lognormal(0, 4, 400),
+    [0.0, -0.0, 1e-320, -1e-320, np.nan, np.inf, -np.inf,
+     1e308, -1e308, 5e307, np.finfo(np.float64).max],
+])
+# dyadic weights sum exactly in any order, so the per-bucket histogram sums
+# equal the kernel's one-by-one adds; NaN and non-positive weights drop
+_EDGE_WEIGHTS = np.resize(
+    [1.0, 0.25, 2.5, np.nan, 0.0, -1.0, 4.0, 0.75], _EDGE_VALUES.size)
+
+
+@pytest.mark.parametrize("weighted", [False, True], ids=["unweighted", "weighted"])
+@pytest.mark.parametrize("preset", list(DDSketch.PRESETS))
+def test_insert_paths_byte_equal(spark, preset, weighted):
+    """The three ways a sketch is filled give the same blob: accept_many,
+    the deferred route_batch + apply_routed, and (LOG presets) the blob
+    assembly over a histogram of the kernel's own routing."""
+    from sketches_rust_spark.functions.ddsketch_sql import blobs_from_histogram
+
+    cfg = SketchConfig(preset, 0.02, 32)
+    w = _EDGE_WEIGHTS if weighted else None
+    direct = cfg.new()
+    direct.accept_many(_EDGE_VALUES, w)
+    routed = cfg.new()
+    routed.apply_routed(*routed.route_batch(_EDGE_VALUES), w)
+    assert routed.encode() == direct.encode()
+    assert direct.get_count() > 0
+
+    if direct.index_mapping.layout != LOG:  # LogCubic has no SQL histogram
+        return
+    side, idx = cfg.new().route_batch(_EDGE_VALUES)
+    rows = pd.DataFrame({"side": side.astype(np.int64), "idx": idx,
+                         "c": np.ones(side.size) if w is None else w})
+    rows = rows[(rows.side != -2) & (rows.c > 0)]
+    hist = rows.groupby(["side", "idx"], as_index=False)["c"].sum()
+    out = blobs_from_histogram(
+        spark.createDataFrame(hist, "side int, idx long, c double"), [], cfg
+    ).collect()
+    assert [bytes(r["sketch"]) for r in out] == [direct.encode()]
+
+
+def test_quantile_proof_oracle_follows_preset_table():
+    """The proof's oracle replays the preset's own mapping layout and store
+    kind: the clamp for collapsing-highest, the cubic layout for the LogCubic
+    collapsing presets."""
+    from sketches_rust_spark.functions.oracle import ddsketch_quantile_oracle_sql
+    from sketches_rust_spark.operators.queries import quantile_proof
+
+    args = ("events", "value", ["event_type"], {"p50": 0.5})
+    _, highest = quantile_proof(
+        *args, cfg=SketchConfig("logarithmic_collapsing_highest_dense", 0.01, 64))
+    assert "least(idx, min(idx) OVER" in highest
+    _, lowest = quantile_proof(
+        *args, cfg=SketchConfig("collapsing_lowest_dense", 0.01, 64))
+    assert lowest == ddsketch_quantile_oracle_sql(
+        *args, 0.01, collapse="lowest", max_bins=64, layout="cubic")
+    assert lowest != ddsketch_quantile_oracle_sql(
+        *args, 0.01, collapse="lowest", max_bins=64)

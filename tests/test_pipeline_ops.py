@@ -986,3 +986,19 @@ def test_python_shingler_matches_expression_path(spark, sf_dir):
     new = {(r["_id"], r["h"]) for r in
            shingle_hashes(documents, "doc_id", "text", k).collect()}
     assert old == new and len(old) > 0
+
+
+def test_cc_local_gate_only_for_integral_or_string_ids(spark):
+    """Python's min/max order matches Spark's only for integral and string
+    ids, so double ids skip both union-find gates and take the distributed
+    loop — with the same min-label components."""
+    from sketches_rust_spark.operators.dedup import near_dup_clusters
+
+    edges = [(1.5, 2.0), (2.0, 3.25), (10.0, 11.0), (3.25, 0.5)]
+    pairs = spark.createDataFrame(edges, "id_a double, id_b double")
+    stats: dict = {}
+    labels = {r._id: r.cluster
+              for r in near_dup_clusters(pairs, stats=stats).collect()}
+    assert "local_solve" not in stats and stats["rounds"] >= 1
+    assert labels == {0.5: 0.5, 1.5: 0.5, 2.0: 0.5, 3.25: 0.5,
+                      10.0: 10.0, 11.0: 10.0}

@@ -224,3 +224,25 @@ def test_weighted_accept():
     s.accept_many(np.array([10.0, 20.0]), np.array([3.0, 1.0]))
     assert s.get_count() == 4.0
     assert abs(s.get_value_at_quantile(0.5) - 10.0) / 10.0 < 0.021
+
+
+def test_decode_rejects_contiguous_index_past_i32_by_int64_wrap():
+    """A contiguous bin block whose index arithmetic passes int64 must not
+    wrap back into range: 4 * (2^62 + 1) is far past i32, not bucket 4."""
+    from sketches_rust_spark.kernel import serde
+    from sketches_rust_spark.kernel.store import (
+        CONTIGUOUS_COUNTS,
+        FLAG_TYPE_POSITIVE_STORE,
+    )
+
+    block = bytearray([FLAG_TYPE_POSITIVE_STORE | (CONTIGUOUS_COUNTS << 2)])
+    serde.encode_unsigned_var_long(block, 5)
+    serde.encode_signed_var_long(block, 0)
+    serde.encode_signed_var_long(block, (1 << 62) + 1)
+    for c in (0.0, 0.0, 0.0, 0.0, 7.0):
+        serde.encode_var_double(block, c)
+    with pytest.raises(ValueError, match="i32"):
+        DDSketch.decode(GOLDEN_BLOB_LOG_100 + bytes(block))
+    with pytest.raises(ValueError, match="i32"):
+        DDSketch.logarithmic_collapsing_lowest_dense(2e-2, 50).decode_and_merge_with(
+            GOLDEN_BLOB_LOG_100 + bytes(block))

@@ -315,3 +315,27 @@ def test_stateful_eviction_bounds_state_and_reinitializes(spark, tmp_path):
         assert ("k1", False, 14.0) not in all_rows
     finally:
         q.stop()
+
+
+def test_streaming_proofs_leave_no_temp_state(spark, sf_dir):
+    """The three streaming driver proofs clean up after themselves: no
+    replay dir is left in the temp dir and no memory-sink table in the
+    catalog once each query's result has been read."""
+    import tempfile
+
+    from sketches_rust_spark.operators.queries import PROOFS
+
+    def replay_dirs():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "sketch_*_q_*")))
+
+    def sink_tables():
+        return {t.name for t in spark.catalog.listTables()
+                if t.name.startswith("sketch_")}
+
+    dirs, tables = replay_dirs(), sink_tables()
+    for name in ("streaming_quantiles_events", "streaming_stateful_running_p99",
+                 "streaming_windowed_daily_quantiles"):
+        query, _ = PROOFS[name]
+        assert len(query(spark, sf_dir).toPandas()) > 0
+    assert replay_dirs() - dirs == set()
+    assert sink_tables() - tables == set()
