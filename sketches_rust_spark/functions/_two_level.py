@@ -103,10 +103,8 @@ def blob_schema(df: DataFrame, keys: Sequence[str], family: bool = False) -> Str
 
 
 def grouped_blobs(df: DataFrame, keys: Sequence[str],
-                  fold: Callable[[pd.DataFrame], tuple[bytes, int]],
-                  by: Sequence = ()) -> DataFrame:
-    """One blob row per group: ``fold(rows of the group) -> (blob, rows_in)``.
-    ``by`` adds grouping-only columns (a salt) that the output drops."""
+                  fold: Callable[[pd.DataFrame], tuple[bytes, int]]) -> DataFrame:
+    """One blob row per group: ``fold(rows of the group) -> (blob, rows_in)``."""
     keys = list(keys)
 
     def apply(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -115,8 +113,7 @@ def grouped_blobs(df: DataFrame, keys: Sequence[str],
         return pd.DataFrame([head | {SKETCH_COL: blob, ROWS_COL: rows}],
                             columns=keys + [SKETCH_COL, ROWS_COL])
 
-    group = [*keys, *by] or [F.lit(1).alias("_g")]
-    return df.groupBy(*group).applyInPandas(apply, schema=blob_schema(df, keys))
+    return df.groupBy(*keys).applyInPandas(apply, schema=blob_schema(df, keys))
 
 
 def partial_blobs(df: DataFrame, input_col: str | Column, keys: Sequence[str],

@@ -12,11 +12,10 @@ Design (idiomatic Spark, SURVEY.md §1.5/§3):
   are dropped JVM-side first (``value_guard``), so ``rows_in`` is the sketch
   count and a group with no accepted value gets no row — the same contract
   as ``ddsketch_aggregate_sql``.
-* **salted variant** — for the groupBy-based build path (useful when the
-  partial-per-partition state would be too wide, i.e. very high group
-  cardinality), an explicit deterministic salt column spreads hot groups
-  over ``num_salts`` reducers; losslessness is guaranteed by sketch
-  mergeability.
+* **salted variant** — raw rows are first shuffled on (keys..., salt), an
+  explicit deterministic salt column that spreads a hot group over
+  ``num_salts`` hash partitions; the same partial and merge levels then run
+  over those partitions. Losslessness is guaranteed by sketch mergeability.
 * **scalar extraction** — pandas UDFs over the blob column
   (``ddsketch_quantile/count/sum/min/max/avg``), registered for SQL.
 
@@ -187,29 +186,20 @@ def ddsketch_aggregate_salted(
     num_salts: int = 16,
     salt_from: str | None = None,
 ) -> DataFrame:
-    """Salted two-level aggregation for skewed groups on the groupBy path.
-
-    Level 1 groups on (keys..., salt) where salt = pmod(xxhash64(salt_from or
-    all columns), num_salts) — deterministic, so re-runs are reproducible. A
-    zipfian hot key (e.g. lang='en' at ~45%) is spread over ``num_salts``
-    reducers; level 2 merges the per-salt blobs. Mergeability makes the split
-    lossless: results are identical to the unsalted plan (tested).
+    """Salted two-level aggregation: raw rows are shuffled on (keys..., salt)
+    first, where salt = pmod(xxhash64(salt_from or the value), num_salts) —
+    deterministic, so re-runs are reproducible. A zipfian hot key (e.g.
+    lang='en' at ~45%) is spread over up to ``num_salts`` hash partitions;
+    level 1 is then the shared partial build over those partitions, and
+    level 2 merges the partials. Mergeability makes the split lossless:
+    blobs and ``rows_in`` equal the unsalted plan's (tested).
     """
-    keys = list(keys)
     salt_col = F.pmod(
         F.xxhash64(F.col(salt_from) if salt_from else F.col(value_col)),
         F.lit(num_salts),
     ).alias("_salt")
-    narrow = (df.where(value_guard(F.col(value_col), config))
-              .select(*keys, F.col(value_col).cast("double").alias(value_col), salt_col))
-
-    def build(pdf: pd.DataFrame) -> tuple[bytes, int]:
-        sk = config.new()
-        sk.accept_many(_f64(pdf[value_col]))
-        return sk.encode(), len(pdf)
-
-    partials = grouped_blobs(narrow, keys, build, by=["_salt"])
-    return merge_partials(partials, keys, config)
+    salted = df.select(*keys, value_col, salt_col).repartition(*keys, "_salt")
+    return ddsketch_aggregate(salted, value_col, keys, config)
 
 
 # ---------------------------------------------------------------------------

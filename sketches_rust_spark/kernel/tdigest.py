@@ -6,9 +6,12 @@ quantile span with the k1 scale function k(q) = (delta/2pi) asin(2q-1),
 giving ~delta centroids and rank error that shrinks toward the tails
 (where training-data pipelines care: p99/p999 latency/length cutoffs).
 
-Fully deterministic given input order (no randomness); mergeable: merging
-digests = concatenating centroid sets + one merge pass. Exact min/max are
-tracked for exact q=0/q=1.
+Fully deterministic given input order (no randomness). Inserts are buffered
+and flushed every 8192 values. A flush runs the merge pass over the sorted
+union of the centroids and the buffered values; a merge runs it over both
+digests' centroids, so a digest merged from any number of partials keeps
+~delta centroids. Like KLL's, a merged digest's bytes depend on the merge
+order. Exact min/max are tracked for exact q=0/q=1.
 
 Wire format: b"TDG1" + float64 delta + uint32 n_centroids + float64 min +
 float64 max + n x (mean f64, weight f64) LE.
@@ -18,6 +21,7 @@ from __future__ import annotations
 
 import math
 import struct
+from bisect import bisect_right
 
 import numpy as np
 
@@ -54,40 +58,39 @@ class TDigest:
         return self.delta / (2.0 * math.pi) * np.arcsin(2.0 * np.clip(q, 0, 1) - 1.0)
 
     def _flush(self) -> None:
-        if not self.buffer and self.means.size:
+        if not self.buffer:
             return
-        new = np.concatenate(self.buffer) if self.buffer else np.zeros(0)
+        new = np.concatenate(self.buffer)
         self.buffer = []
-        means = np.concatenate([self.means, new])
-        weights = np.concatenate([self.weights, np.ones(new.shape[0])])
+        self._compress(np.concatenate([self.means, new]),
+                       np.concatenate([self.weights, np.ones(new.shape[0])]))
+
+    def _compress(self, means: np.ndarray, weights: np.ndarray) -> None:
+        """The merge pass over the centroids (means, weights), sorted here:
+        a cluster starting at s absorbs each next centroid i while
+        k(W_i/total) - k(W_{s-1}/total) <= 1, W the prefix weight sums
+        (exact: weights are integers). The clusters' weighted means and
+        weights become the digest's centroids."""
         if means.size == 0:
             return
         order = np.argsort(means, kind="stable")
         means, weights = means[order], weights[order]
-        total = weights.sum()
-
-        # single merge pass: greedily absorb while the k-span stays <= 1
-        out_means: list[float] = []
-        out_weights: list[float] = []
-        cum = 0.0  # weight fully to the left of the current centroid
-        cur_mean, cur_w = float(means[0]), float(weights[0])
-        k_left = float(self._k(np.array([0.0]))[0])
-        for i in range(1, means.shape[0]):
-            proposed = cur_w + float(weights[i])
-            q_right = (cum + proposed) / total
-            if float(self._k(np.array([q_right]))[0]) - k_left <= 1.0:
-                cur_mean += (float(means[i]) - cur_mean) * float(weights[i]) / proposed
-                cur_w = proposed
-            else:
-                out_means.append(cur_mean)
-                out_weights.append(cur_w)
-                cum += cur_w
-                k_left = float(self._k(np.array([cum / total]))[0])
-                cur_mean, cur_w = float(means[i]), float(weights[i])
-        out_means.append(cur_mean)
-        out_weights.append(cur_w)
-        self.means = np.array(out_means)
-        self.weights = np.array(out_weights)
+        w = np.cumsum(weights)
+        kw = self._k(np.r_[0.0, w] / w[-1]).tolist()  # kw[i + 1] = k(W_i / total)
+        n, s, starts = means.shape[0], 0, []
+        while s < n:
+            starts.append(s)
+            k_left = kw[s]
+            # first i > s whose k-span passes 1; bisection guesses it,
+            # then the exact comparison settles the neighbours
+            i = max(bisect_right(kw, k_left + 1.0) - 1, s + 1)
+            while i > s + 1 and kw[i] - k_left > 1.0:
+                i -= 1
+            while i < n and kw[i + 1] - k_left <= 1.0:
+                i += 1
+            s = i
+        self.weights = np.add.reduceat(weights, starts)
+        self.means = np.add.reduceat(means * weights, starts) / self.weights
 
     # -- query -------------------------------------------------------------------
 
@@ -137,23 +140,8 @@ class TDigest:
         self._flush()
         self._min = min(self._min, other._min)
         self._max = max(self._max, other._max)
-        self.means = np.concatenate([self.means, other.means])
-        self.weights = np.concatenate([self.weights, other.weights])
-        order = np.argsort(self.means, kind="stable")
-        self.means, self.weights = self.means[order], self.weights[order]
-        self.buffer = []
-        self._reflush_centroids()
-
-    def _reflush_centroids(self) -> None:
-        means, weights = self.means, self.weights
-        self.means = np.zeros(0)
-        self.weights = np.zeros(0)
-        self.buffer = []
-        # re-run the merge pass over weighted centroids
-        self.means, self.weights = means, weights
-        saved_min, saved_max = self._min, self._max
-        self._flush()
-        self._min, self._max = saved_min, saved_max
+        self._compress(np.concatenate([self.means, other.means]),
+                       np.concatenate([self.weights, other.weights]))
 
     def encode(self) -> bytes:
         self._flush()

@@ -224,11 +224,11 @@ def _blob_walk(spark, df, groups, quantiles, cfg):
 
 def _salted_walk(spark, df, groups, quantiles, cfg):
     """Skew-safe grouped build via explicit deterministic salting
-    (ddsketch_aggregate_salted): level 1 groups on (keys..., salt) so a
-    zipfian hot group spreads over 16 reducers; level 2 merges the per-salt
-    blobs. Mergeability makes the split lossless, so the SAME unsalted
-    quantile oracle pins it — the hard proof that salting does not change
-    results."""
+    (ddsketch_aggregate_salted): raw rows are shuffled on (keys..., salt) so
+    a zipfian hot group spreads over 16 hash partitions, each partition
+    builds partial blobs, and level 2 merges them. Mergeability makes the
+    split lossless, so the SAME unsalted quantile oracle pins it — the hard
+    proof that salting does not change results."""
     agg = ddsketch_aggregate_salted(df, "_v", groups, cfg, num_salts=16)
     return agg.select(*groups, *_quantile_cols(quantiles))
 

@@ -5,6 +5,8 @@ sketch aggregation, salted-vs-unsalted identity, partition-count invariance,
 SQL UDF surface, and error bounds vs exact quantiles.
 """
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -69,6 +71,32 @@ def test_salted_equals_unsalted(spark, documents):
     a = {r["lang"]: bytes(r["sketch"]) for r in plain.collect()}
     b = {r["lang"]: bytes(r["sketch"]) for r in salted.collect()}
     assert a == b
+
+
+@pytest.mark.parametrize("num_salts,salt_from", [(1, None), (4, None), (16, None),
+                                                (4, "doc_id")])
+def test_salted_blobs_and_rows_match_unsalted(spark, documents, num_salts, salt_from):
+    """Salted blobs and rows_in equal ddsketch_aggregate's, including a null
+    group key; a key whose every value is rejected (null, NaN, inf) gets no
+    row. The plan has one Python partial stage and one Python merge stage,
+    so no per-(key, salt) Python grouping is left."""
+    docs = documents.select("doc_id", "lang", F.length("text").cast("double").alias("v"))
+    extra = spark.createDataFrame(
+        [(-1, None, 3.0), (-2, None, 40.0), (-3, "rejected", None),
+         (-4, "rejected", float("nan")), (-5, "rejected", float("inf")),
+         (-6, "rejected", float("-inf"))], docs.schema)
+    df = docs.unionByName(extra)
+    salted = ddsketch_aggregate_salted(df, "v", ["lang"], CFG,
+                                       num_salts=num_salts, salt_from=salt_from)
+    # the plan as planned: after a run, AQE prints the final plan too
+    plan = salted._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bMapInPandas\b", plan)) == 1, plan
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    plain = ddsketch_aggregate(df, "v", ["lang"], CFG)
+    got = {r["lang"]: (bytes(r["sketch"]), r["rows_in"]) for r in salted.collect()}
+    want = {r["lang"]: (bytes(r["sketch"]), r["rows_in"]) for r in plain.collect()}
+    assert got == want
+    assert got[None][1] == 2 and "rejected" not in got
 
 
 def test_global_aggregate_and_quantile_udf(spark, documents):

@@ -2,12 +2,23 @@
 
 Each sketch is tested against its published error bound, for merge
 associativity (partition-split == whole-build within bound), and for
-serde round-trips.
+serde round-trips. The merge contract runs every two-level adapter
+(DDSketch included) through 1 to 512 partial merges.
 """
 
 import numpy as np
+import pandas as pd
 import pytest
 
+from sketches_rust_spark.functions.ddsketch_spark import DEFAULT_CONFIG, _ddsketch_adapter
+from sketches_rust_spark.functions.sketch_udafs import (
+    bloom_adapter,
+    cms_adapter,
+    hll_adapter,
+    kll_adapter,
+    kmv_adapter,
+    tdigest_adapter,
+)
 from sketches_rust_spark.kernel.bits import clz64, popcount64, splitmix64
 from sketches_rust_spark.kernel.bloom import BloomFilter
 from sketches_rust_spark.kernel.cms import CountMinSketch
@@ -191,6 +202,125 @@ def test_tdigest_compression_mismatch_rejected():
     b.accept_many(np.ones(10))
     with pytest.raises(ValueError):
         a.merge_with(b)
+
+
+def _reference_merge_pass(td: TDigest, means, weights):
+    """The scalar merge loop t-digest used before its vectorized pass: it
+    pins the pass's clusters (same weights, means to rounding)."""
+    total = weights.sum()
+    out_means, out_weights = [], []
+    cum = 0.0  # weight fully to the left of the current centroid
+    cur_mean, cur_w = float(means[0]), float(weights[0])
+    k_left = float(td._k(np.array([0.0]))[0])
+    for i in range(1, means.shape[0]):
+        proposed = cur_w + float(weights[i])
+        q_right = (cum + proposed) / total
+        if float(td._k(np.array([q_right]))[0]) - k_left <= 1.0:
+            cur_mean += (float(means[i]) - cur_mean) * float(weights[i]) / proposed
+            cur_w = proposed
+        else:
+            out_means.append(cur_mean)
+            out_weights.append(cur_w)
+            cum += cur_w
+            k_left = float(td._k(np.array([cum / total]))[0])
+            cur_mean, cur_w = float(means[i]), float(weights[i])
+    out_means.append(cur_mean)
+    out_weights.append(cur_w)
+    return np.array(out_means), np.array(out_weights)
+
+
+_PASS_INPUTS = {
+    "lognormal": lambda rng, n: rng.lognormal(6, 1.2, n),
+    "uniform": lambda rng, n: rng.uniform(0, 1000, n),
+    "bimodal": lambda rng, n: np.r_[rng.normal(10, 1, n // 2),
+                                    rng.normal(1000, 50, n - n // 2)],
+    "heavy_tie": lambda rng, n: rng.integers(0, 7, n).astype(np.float64),
+}
+
+
+@pytest.mark.parametrize("n", [50, 2_000, 100_000])
+@pytest.mark.parametrize("dist", sorted(_PASS_INPUTS))
+@pytest.mark.parametrize("weighted", [False, True], ids=["values", "centroids"])
+def test_tdigest_merge_pass_matches_scalar_loop(dist, n, weighted):
+    """On the same sorted (means, weights) the vectorized pass gives the
+    scalar loop's clusters: equal weights, means within 1e-12 relative.
+    ``centroids``: the input is the centroid union of 8 partial digests,
+    as a merge sees it."""
+    rng = np.random.default_rng(n)
+    values = _PASS_INPUTS[dist](rng, n)
+    td = TDigest(200)
+    if weighted:
+        parts = [TDigest(200) for _ in range(8)]
+        for part, chunk in zip(parts, np.array_split(values, 8)):
+            part.accept_many(chunk)
+            part.total_weight()  # flush
+        means = np.concatenate([p.means for p in parts])
+        weights = np.concatenate([p.weights for p in parts])
+    else:
+        means, weights = values, np.ones(n)
+    order = np.argsort(means, kind="stable")
+    means, weights = means[order], weights[order]
+    td._compress(means, weights)
+    want_means, want_weights = _reference_merge_pass(td, means, weights)
+    assert np.array_equal(td.weights, want_weights)
+    np.testing.assert_allclose(td.means, want_means, rtol=1e-12, atol=0)
+
+
+# -- merge contract of the two-level adapters ----------------------------------------
+
+PARTIAL_VALUES = 2_000
+MERGE_ADAPTERS = {
+    "hll": lambda: hll_adapter(hash_mode="splitmix"),
+    "cms": lambda: cms_adapter(hash_mode="splitmix"),
+    "kmv": lambda: kmv_adapter(hash_mode="splitmix"),
+    "bloom": lambda: bloom_adapter(hash_mode="splitmix"),
+    "ddsketch": lambda: _ddsketch_adapter(DEFAULT_CONFIG),
+    "tdigest": lambda: tdigest_adapter(200.0),
+    "kll": lambda: kll_adapter(200),
+}
+
+
+def _adapter_blob(adapter, column: np.ndarray) -> bytes:
+    sk = adapter.new()
+    adapter.insert(sk, [adapter.prepare(pd.Series(column))])
+    return sk.encode()
+
+
+def _rank_error(srt: np.ndarray, est: float, q: float) -> float:
+    return abs(np.searchsorted(srt, est) / len(srt) - q)
+
+
+@pytest.mark.parametrize("n_partials", [1, 8, 64, 256, 512])
+@pytest.mark.parametrize("family", list(MERGE_ADAPTERS))
+def test_adapter_merge_contract(family, n_partials):
+    """Level 2 of the two-level core folds N partial blobs into a fresh
+    sketch. Order-insensitive families must give the one-shot build's
+    bytes; t-digest and KLL must stay within a size bound set by their
+    parameters, and within their rank-error bound, whatever N is."""
+    adapter = MERGE_ADAPTERS[family]()
+    rng = np.random.default_rng(n_partials)
+    n = n_partials * PARTIAL_VALUES
+    column = (rng.lognormal(6, 1.2, n) if family in ("ddsketch", "tdigest", "kll")
+              else rng.integers(0, n // 3 + 1, n))
+    merged = adapter.new()
+    for chunk in np.array_split(column, n_partials):
+        merged.decode_and_merge_with(_adapter_blob(adapter, chunk))
+    blob = merged.encode()
+    if family not in ("tdigest", "kll"):
+        assert blob == _adapter_blob(adapter, column)
+        return
+    srt = np.sort(column)
+    back = type(merged).decode(blob)
+    assert back.total_weight() == pytest.approx(n, rel=0.02 if family == "kll" else 0)
+    if family == "tdigest":
+        assert len(blob) < 4096, len(blob)
+        bound = 0.01
+    else:
+        # each level holds at most its capacity: ceil(k (2/3)^depth), min 2
+        assert sum(map(len, back.levels)) <= 3 * back.k + 2 * len(back.levels)
+        bound = 0.03
+    for q in (0.01, 0.5, 0.99):
+        assert _rank_error(srt, back.quantile(q), q) <= bound, q
 
 
 # -- KLL --------------------------------------------------------------------------
