@@ -1,9 +1,15 @@
 #!/usr/bin/env python
 """Pre-flight correctness harness: run EVERY registered query against its
 DuckDB oracle the same way the driver does (sf0.01 by default, columns
-sorted by name, per-column compare with float rounding) and write
-CORRECTNESS_LOCAL_r{N}.json. Catches a red query before the driver run and
-proves coverage for queries the driver's 50-row artifact cap would drop.
+sorted by name, per-column compare with float rounding), print one status
+line per query and, when an output path is given, write the results there
+as JSON (the committed CORRECTNESS_LOCAL_r{N}.json records are written this
+way). Catches a red query before the driver run and proves coverage for
+queries the driver's 50-row artifact cap would drop.
+
+The local master gets one core per CPU of the host (SPARK_GRAFT_CPUS when
+set, else os.cpu_count()) and the 4 GB driver the test suite runs the same
+queries with.
 
 Usage: python scripts/correctness_local.py [out.json] [sf_dir]
 """
@@ -21,7 +27,7 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 
 def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "CORRECTNESS_LOCAL_r4.json"
+    out_path = sys.argv[1] if len(sys.argv) > 1 else None
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
 
     import duckdb
@@ -30,12 +36,13 @@ def main() -> None:
 
     import __spark_entry__ as entry
 
-    spark = (SparkSession.builder.master("local[16]")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    spark = (SparkSession.builder.master(f"local[{cpus}]")
              .appName("correctness-local")
              .config("spark.sql.shuffle.partitions", "16")
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.ui.enabled", "false")
-             .config("spark.driver.memory", "16g")
+             .config("spark.driver.memory", "4g")
              .getOrCreate())
 
     qs, oracles = entry.queries(), entry.oracle_sql()
@@ -88,10 +95,12 @@ def main() -> None:
                   else row["err"] or "MISMATCH")
         print(f"{name}: {status}", flush=True)
 
-    with open(out_path, "w") as f:
-        json.dump(results, f, indent=1)
+    if out_path is not None:
+        with open(out_path, "w") as f:
+            json.dump(results, f, indent=1)
     n_green = sum(1 for r in results.values() if r["hash_match"])
-    print(f"\n{n_green}/{len(results)} hash-green -> {out_path}")
+    print(f"\n{n_green}/{len(results)} hash-green"
+          + (f" -> {out_path}" if out_path else ""))
     spark.stop()
     if n_green != len(results):
         sys.exit(1)

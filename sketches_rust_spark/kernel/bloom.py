@@ -58,13 +58,6 @@ class BloomFilter:
             raise ValueError("Unmatched Bloom dimensions")
         np.bitwise_or(self.bits, other.bits, out=self.bits)
 
-    def fill_ratio(self) -> float:
-        from .bits import popcount64
-        padded = np.zeros((self.bits.shape[0] + 7) // 8 * 8, dtype=np.uint8)
-        padded[:self.bits.shape[0]] = self.bits
-        ones = int(popcount64(padded.view(np.uint64)).sum())
-        return ones / self.m_bits
-
     def encode(self) -> bytes:
         return _MAGIC + struct.pack("<QI", self.m_bits, self.k) + self.bits.tobytes()
 

@@ -62,10 +62,3 @@ def winnow(hashes: np.ndarray, w: int) -> np.ndarray:
 def document_fingerprints(text: str, k: int = 8, w: int = 16) -> np.ndarray:
     """Winnowed fingerprint set of a document (uint64 hashes)."""
     return winnow(kgram_hashes(text.encode("utf-8"), k), w)
-
-
-def fingerprint_jaccard(a: np.ndarray, b: np.ndarray) -> float:
-    """Resemblance of two fingerprint sets."""
-    inter = np.intersect1d(a, b).shape[0]
-    union = np.union1d(a, b).shape[0]
-    return inter / union if union else 0.0

@@ -42,8 +42,6 @@ LOG_CUBIC = 3
 # reference imposes no minimum — only local construction is.
 MIN_RELATIVE_ACCURACY = 1.0 / (1 << 15)
 
-_LAYOUT_NAMES = {LOG: "LOG", LOG_CUBIC: "LogCubic"}
-
 # Cubic interpolation constants (spec mod.rs:12-19).
 _A = 6.0 / 35.0
 _B = -3.0 / 5.0
@@ -210,9 +208,6 @@ class IndexMapping:
         buf.append(0b10 | (self.layout << 2))
         import struct
         buf.extend(struct.pack("<dd", self.gamma, self.index_offset))
-
-    def layout_name(self) -> str:
-        return _LAYOUT_NAMES[self.layout]
 
 
 # -- vectorized f64 bit-field helpers (numpy twins of serde.py scalars) -------

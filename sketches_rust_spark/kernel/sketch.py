@@ -261,9 +261,6 @@ class DDSketch:
                 return self.index_mapping.value(int(pos_idx[pos_in]))
         return None
 
-    def get_values_at_quantiles(self, quantiles) -> list[float | None]:
-        return [self.get_value_at_quantile(q) for q in quantiles]
-
     # -- merge (spec sketch.rs:211-221) -----------------------------------------
 
     def merge_with(self, other: "DDSketch") -> None:

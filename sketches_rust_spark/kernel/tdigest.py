@@ -123,14 +123,6 @@ class TDigest:
             return lo_x
         return lo_x + (hi_x - lo_x) * (target - lo_c) / (hi_c - lo_c)
 
-    def cdf(self, x: float) -> float:
-        self._flush()
-        n = self.weights.sum()
-        if n <= 0:
-            return float("nan")
-        cum = np.cumsum(self.weights) - self.weights / 2.0
-        return float(np.interp(x, self.means, cum / n, left=0.0, right=1.0))
-
     # -- merge / serde --------------------------------------------------------------
 
     def merge_with(self, other: "TDigest") -> None:
@@ -154,9 +146,21 @@ class TDigest:
     def decode(data: bytes) -> "TDigest":
         if data[:4] != _MAGIC:
             raise ValueError("not a TDG1 blob")
+        if len(data) < 4 + 28:
+            raise ValueError("truncated TDG1 header")
         delta, n, mn, mx = struct.unpack_from("<dIdd", data, 4)
-        td = TDigest(delta)
+        if len(data) != 4 + 28 + 16 * n:
+            raise ValueError(f"TDG1 blob of {len(data)} bytes does not hold "
+                             f"{n} centroids ({4 + 28 + 16 * n} bytes)")
         arr = np.frombuffer(data[4 + 28:], dtype="<f8").reshape(n, 2)
+        # means need not be sorted: a merged digest's weighted means can sit
+        # 1 ulp out of order
+        if not np.isfinite(arr[:, 0]).all():
+            raise ValueError("TDG1 blob has a non-finite centroid mean")
+        if not (np.isfinite(arr[:, 1]) & (arr[:, 1] > 0)).all():
+            raise ValueError("TDG1 blob has a non-finite or non-positive "
+                             "centroid weight")
+        td = TDigest(delta)
         td.means = arr[:, 0].copy()
         td.weights = arr[:, 1].copy()
         td._min, td._max = mn, mx

@@ -68,16 +68,6 @@ def exact_dup_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 # -- shingling + base hash ----------------------------------------------------------
 
-def _shingles(text: Column, k: int) -> Column:
-    """Word k-shingles as an array<string> (JVM-side, no UDF)."""
-    toks = F.split(text, " ")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.when(n >= k,
-                  F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)))
-                  ).otherwise(F.array(F.concat_ws(" ", toks)))
-
-
 def _base_hash(col: Column) -> Column:
     """Portable 60-bit hash: first 15 hex chars of md5, as bigint.
     Bit-identical in DuckDB: CAST(concat('0x', substr(md5(x),1,15)) AS UBIGINT).

@@ -20,7 +20,7 @@ from the bytes — keeping every downstream stage real and testable. Swap
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -37,13 +37,26 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("kind", StringType(), False),       # image | audio | video
-    StructField("payload", BinaryType(), False),     # opaque encoded bytes
-    StructField("mime", StringType(), True),
-    StructField("n_bytes", LongType(), True),
-])
+
+def _media_stage(df: DataFrame, kind: str | None, schema: StructType,
+                 item: Callable[[int, bytes], Iterable[tuple]]) -> DataFrame:
+    """The one Arrow-batched stage every media operator runs: for each
+    (media_id, payload) row of ``kind`` (every row when None),
+    ``item(media_id, payload_bytes)`` returns that item's output rows as
+    tuples in ``schema``'s column order (any number, so 1->N fan-out works
+    too)."""
+    names = schema.fieldNames()
+
+    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [out for mid, payload in zip(pdf["media_id"], pdf["payload"])
+                    for out in item(int(mid), bytes(payload))]
+            if rows:
+                yield pd.DataFrame(rows, columns=names)
+
+    if kind is not None:
+        df = df.where(F.col("kind") == kind)
+    return df.select("media_id", "payload").mapInPandas(stage, schema=schema)
 
 
 def _fake_decode(payload: bytes) -> tuple[int, int, float]:
@@ -67,6 +80,13 @@ IMAGE_FEATURES_SCHEMA = StructType([
 _PPM_WIDTH = 64  # fixed raster width encode_ppm_rgb uses
 _PPM_MAGIC = b"P6"
 
+# output of the encoders: the same media rows with a re-encoded payload
+_ENCODED_SCHEMA = StructType([
+    StructField("media_id", LongType(), False),
+    StructField("kind", StringType(), False),
+    StructField("payload", BinaryType(), False),
+])
+
 
 def encode_ppm_rgb(df: DataFrame, width: int = _PPM_WIDTH) -> DataFrame:
     """Wrap each payload's bytes as a REAL binary-PPM (P6) image: raw RGB
@@ -76,26 +96,15 @@ def encode_ppm_rgb(df: DataFrame, width: int = _PPM_WIDTH) -> DataFrame:
     genuine image encode -> parse -> features path with no native deps.
 
     Output: (media_id, kind='image', payload=ppm bytes)."""
-    out_schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
     row_bytes = 3 * width
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload)
-                height = max(1, -(-len(data) // row_bytes))
-                raster = data.ljust(width * height * 3, b"\0")
-                header = f"P6\n{width} {height}\n255\n".encode("ascii")
-                rows.append((int(mid), "image", header + raster))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload"])
+    def item(mid: int, data: bytes) -> list[tuple]:
+        height = max(1, -(-len(data) // row_bytes))
+        raster = data.ljust(width * height * 3, b"\0")
+        header = f"P6\n{width} {height}\n255\n".encode("ascii")
+        return [(mid, "image", header + raster)]
 
-    return (df.select("media_id", "payload")
-            .mapInPandas(stage, schema=out_schema))
+    return _media_stage(df, None, _ENCODED_SCHEMA, item)
 
 
 def _decode_ppm(data: bytes) -> tuple[int, int, float]:
@@ -134,21 +143,11 @@ def decode_image_features(df: DataFrame, fake: bool = False) -> DataFrame:
     fake=True: the deterministic stub that derives pseudo-features from
     raw bytes (kept for parity with the stubbed video path)."""
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload)
-                if fake:
-                    w, h, luma = _fake_decode(data)
-                else:
-                    w, h, luma = _decode_ppm(data)
-                rows.append((int(mid), w, h, luma, len(data)))
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_FEATURES_SCHEMA])
+    def item(mid: int, data: bytes) -> list[tuple]:
+        w, h, luma = _fake_decode(data) if fake else _decode_ppm(data)
+        return [(mid, w, h, luma, len(data))]
 
-    return (df.where(F.col("kind") == "image")
-            .select("media_id", "payload")
-            .mapInPandas(stage, schema=IMAGE_FEATURES_SCHEMA))
+    return _media_stage(df, "image", IMAGE_FEATURES_SCHEMA, item)
 
 
 def sample_video_frames(df: DataFrame, every_nth: int = 30,
@@ -163,23 +162,15 @@ def sample_video_frames(df: DataFrame, every_nth: int = 30,
         StructField("frame", BinaryType(), False),
     ])
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload)
-                if not fake:
-                    raise NotImplementedError(
-                        "video demuxing requires ffmpeg; pass fake=True")
-                n_frames = max(1, len(data) // 64)
-                for fi in range(0, n_frames, every_nth):
-                    rows.append((int(mid), fi, data[fi * 64:(fi + 1) * 64]))
-            if rows:
-                yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "frame"])
+    def item(mid: int, data: bytes) -> list[tuple]:
+        if not fake:
+            raise NotImplementedError(
+                "video demuxing requires ffmpeg; pass fake=True")
+        n_frames = max(1, len(data) // 64)
+        return [(mid, fi, data[fi * 64:(fi + 1) * 64])
+                for fi in range(0, n_frames, every_nth)]
 
-    return (df.where(F.col("kind") == "video")
-            .select("media_id", "payload")
-            .mapInPandas(stage, schema=out_schema))
+    return _media_stage(df, "video", out_schema, item)
 
 
 AUDIO_FEATURES_SCHEMA = StructType([
@@ -204,27 +195,16 @@ def encode_wav_pcm8(df: DataFrame, rate: int = _FAKE_SAMPLE_RATE) -> DataFrame:
     import io
     import wave
 
-    out_schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
+    def item(mid: int, data: bytes) -> list[tuple]:
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(1)
+            w.setframerate(rate)
+            w.writeframes(data)
+        return [(mid, "audio", buf.getvalue())]
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(1)
-                    w.setframerate(rate)
-                    w.writeframes(bytes(payload))
-                rows.append((int(mid), "audio", buf.getvalue()))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload"])
-
-    return (df.select("media_id", "payload")
-            .mapInPandas(stage, schema=out_schema))
+    return _media_stage(df, None, _ENCODED_SCHEMA, item)
 
 
 def _decode_wav(data: bytes) -> tuple[float, float]:
@@ -269,24 +249,17 @@ def decode_audio_features(df: DataFrame, fake: bool = False) -> DataFrame:
     fake=True: the headerless stub — payload treated as raw unsigned 8-bit
     PCM at 16 kB/s (kept for parity with the other stubbed codecs)."""
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload)
-                if fake:
-                    b = np.frombuffer(data, dtype=np.uint8)
-                    duration = len(data) / _FAKE_SAMPLE_RATE
-                    amp = float(np.abs(b.astype(np.float64) - 128.0).mean()) / 128.0 \
-                        if len(b) else 0.0
-                else:
-                    duration, amp = _decode_wav(data)
-                rows.append((int(mid), duration, amp, len(data)))
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA])
+    def item(mid: int, data: bytes) -> list[tuple]:
+        if fake:
+            b = np.frombuffer(data, dtype=np.uint8)
+            duration = len(data) / _FAKE_SAMPLE_RATE
+            amp = float(np.abs(b.astype(np.float64) - 128.0).mean()) / 128.0 \
+                if len(b) else 0.0
+        else:
+            duration, amp = _decode_wav(data)
+        return [(mid, duration, amp, len(data))]
 
-    return (df.where(F.col("kind") == "audio")
-            .select("media_id", "payload")
-            .mapInPandas(stage, schema=AUDIO_FEATURES_SCHEMA))
+    return _media_stage(df, "audio", AUDIO_FEATURES_SCHEMA, item)
 
 
 def resize_images(df: DataFrame, factor: int = 2,
@@ -301,22 +274,15 @@ def resize_images(df: DataFrame, factor: int = 2,
         StructField("resized", BinaryType(), False),
     ])
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload)
-                if not fake:
-                    raise NotImplementedError(
-                        "image resizing requires PIL, not present in this "
-                        "sandbox; pass fake=True")
-                out = data[::factor]
-                rows.append((int(mid), len(out), out))
-            yield pd.DataFrame(rows, columns=["media_id", "out_bytes", "resized"])
+    def item(mid: int, data: bytes) -> list[tuple]:
+        if not fake:
+            raise NotImplementedError(
+                "image resizing requires PIL, not present in this "
+                "sandbox; pass fake=True")
+        out = data[::factor]
+        return [(mid, len(out), out)]
 
-    return (df.where(F.col("kind") == "image")
-            .select("media_id", "payload")
-            .mapInPandas(stage, schema=out_schema))
+    return _media_stage(df, "image", out_schema, item)
 
 
 def media_from_documents(docs: DataFrame, kind: str = "image",
@@ -332,32 +298,6 @@ def media_from_documents(docs: DataFrame, kind: str = "image",
 
 
 # -- DuckDB oracles (exact replicas of the fake decoders' byte arithmetic) --------
-
-def image_features_oracle_sql(table: str, id_col: str = "doc_id",
-                              text_col: str = "text",
-                              luma_digits: int = 9) -> str:
-    """Oracle for decode_image_features(media_from_documents(...), fake=True):
-    width/height from the first 8/next 8 byte sums of the 256-byte
-    zero-padded prefix, mean luma over all 256 padded bytes (zeros beyond
-    the text contribute nothing to the sums)."""
-    return f"""
-WITH m AS (SELECT {id_col} AS media_id, {text_col} AS text,
-                  length({text_col}) AS n FROM {table}),
-sums AS (
-  SELECT media_id, n,
-    list_aggregate(list_transform(range(1, least(n, 8) + 1), i -> ascii(text[i])), 'sum') AS s8,
-    list_aggregate(list_transform(range(9, least(n, 16) + 1), i -> ascii(text[i])), 'sum') AS s16,
-    list_aggregate(list_transform(range(1, least(n, 256) + 1), i -> ascii(text[i])), 'sum') AS sall
-  FROM m
-)
-SELECT media_id,
-       CAST(64 + (s8 % 1984) AS BIGINT) AS width,
-       CAST(64 + (s16 % 1984) AS BIGINT) AS height,
-       round((CAST(sall AS DOUBLE) / 256) / 255, {luma_digits}) AS mean_luma,
-       CAST(n AS BIGINT) AS n_bytes
-FROM sums
-"""
-
 
 def ppm_image_features_oracle_sql(table: str, id_col: str = "doc_id",
                                   text_col: str = "text",
@@ -447,16 +387,3 @@ SELECT media_id,
                                           i -> text[i]), '')) AS resized_md5
 FROM m
 """
-
-
-def synthetic_media(spark, n: int = 200) -> DataFrame:
-    """Deterministic fake media table exercising the binary-column plumbing."""
-    rng = np.random.default_rng(42)
-    rows = []
-    kinds = ["image", "audio", "video"]
-    for i in range(n):
-        kind = kinds[i % 3]
-        size = int(rng.integers(256, 4096))
-        payload = rng.integers(0, 256, size=size, dtype=np.uint8).tobytes()
-        rows.append((i, kind, bytearray(payload), f"{kind}/x-fake", size))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)

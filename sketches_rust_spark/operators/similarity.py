@@ -1,4 +1,5 @@
-"""Similarity search over an embedding column (array<float>).
+"""Similarity search and near-duplicate detection over an embedding column
+(array<float>).
 
 * brute-force cosine top-k — baseline; broadcast the (small) probe set and
   score every row with built-in array functions (F.zip_with / F.aggregate,
@@ -8,6 +9,18 @@
   search only the probe's bucket (plus optional multi-probe neighbors).
   Hyperplane coefficients derive from SplitMix64, so signatures are
   deterministic and oracle-reproducible.
+* IVF (inverted file) — md5-seeded centroids; each row is assigned to its
+  nearest centroid and each probe scores only its n_probe nearest clusters.
+* embedding near-duplicates — pairs whose LSH signatures lie within a
+  Hamming ball, scored with exact cosine (embedding_near_dup_pairs), and
+  the daily-ingest filter that checks a new shard against a persisted,
+  signature-partitioned corpus (incremental_near_dup_filter).
+
+Every operator scores candidate pairs with ONE cosine (`_scored`: the
+sequential-fold dot product over precomputed norms, rounded to 6 digits),
+and every top-k operator ends in ONE per-probe rank (`_top_k`). The DuckDB
+oracles likewise share the signature CTEs (`_sql_sigs`) and the rank tail
+(`_SQL_RANKED`).
 
 Float caveat: cosine sums are order-sensitive at the last ulp; scores are
 rounded to 6 digits and ties broken by vec_id, which makes top-k stable and
@@ -39,6 +52,10 @@ def _seq_dot_np(mat_a: np.ndarray, mat_b: np.ndarray) -> np.ndarray:
     return np.cumsum(mat_a * mat_b, axis=1, dtype=np.float64)[:, -1]
 
 
+def _f64(col: str) -> Column:
+    return F.col(col).cast("array<double>")
+
+
 def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
@@ -55,6 +72,24 @@ def cosine(a: Column, b: Column) -> Column:
 # and 3x less lambda work per candidate at scale. (A fully unrolled
 # element_at dot was measured SLOWER — the 64-term expression tree defeats
 # codegen.)
+def _scored(cand: DataFrame, id_col: str, vec_col: str, probe_id_col: str,
+            probe_vec_col: str, *keep: str) -> DataFrame:
+    """(*keep, probe_id, vec_id, score) per candidate pair. The pair must
+    carry the row's norm as `_nv` and the probe's as `_np`; the score is
+    their cosine rounded to 6 digits."""
+    dot = _dot(_f64(vec_col), _f64(probe_vec_col))
+    return cand.select(*keep, F.col(probe_id_col).alias("probe_id"),
+                       F.col(id_col).alias("vec_id"),
+                       F.round(dot / (F.col("_nv") * F.col("_np")), 6)
+                       .alias("score"))
+
+
+def _top_k(scored: DataFrame, k: int, by: tuple = ("probe_id",)) -> DataFrame:
+    """The k best rows per ``by`` key, ranked 1..k by (score desc, vec_id
+    asc) in a long ``rank`` column."""
+    w = Window.partitionBy(*by).orderBy(F.desc("score"), F.asc("vec_id"))
+    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
+            .where(F.col("rank") <= k))
 
 
 def brute_force_topk(df: DataFrame, probes: DataFrame, k: int,
@@ -81,27 +116,16 @@ def brute_force_topk(df: DataFrame, probes: DataFrame, k: int,
     This is still the exact scorer — O(n x p) dot products by definition.
     For sublinear per-query cost use lsh_topk / ivf_topk (the scale paths).
     """
-    vd = F.col(vec_col).cast("array<double>")
-    pd_ = F.col(probe_vec_col).cast("array<double>")
-    d = df.select(F.col(id_col), vd.alias("_v"), _norm(vd).alias("_nv"),
+    d = df.select(F.col(id_col), _f64(vec_col).alias("_v"),
+                  _norm(_f64(vec_col)).alias("_nv"),
                   F.spark_partition_id().alias("_part"))
-    p = probes.select(F.col(probe_id_col), pd_.alias("_p"),
-                      _norm(pd_).alias("_np"))
-    scored = (d.crossJoin(F.broadcast(p))
-              .where(F.col(id_col) != F.col(probe_id_col))
-              .select("_part",
-                      F.col(probe_id_col).alias("probe_id"),
-                      F.col(id_col).alias("vec_id"),
-                      F.round(_dot(F.col("_v"), F.col("_p"))
-                              / (F.col("_nv") * F.col("_np")), 6).alias("score")))
-    w_local = Window.partitionBy("_part", "probe_id").orderBy(
-        F.desc("score"), F.asc("vec_id"))
-    survivors = (scored.withColumn("_lr", F.row_number().over(w_local))
-                 .where(F.col("_lr") <= k)
-                 .drop("_lr", "_part"))
-    w = Window.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (survivors.withColumn("rank", F.row_number().over(w).cast("long"))
-            .where(F.col("rank") <= k))
+    p = probes.select(F.col(probe_id_col), _f64(probe_vec_col).alias("_p"),
+                      _norm(_f64(probe_vec_col)).alias("_np"))
+    cand = (d.crossJoin(F.broadcast(p))
+            .where(F.col(id_col) != F.col(probe_id_col)))
+    scored = _scored(cand, id_col, "_v", probe_id_col, "_p", "_part")
+    survivors = _top_k(scored, k, ("_part", "probe_id")).drop("rank", "_part")
+    return _top_k(survivors, k)
 
 
 def hyperplanes(dim: int, nbits: int) -> np.ndarray:
@@ -144,6 +168,13 @@ def probe_masks(nbits: int, multi_probe: int) -> list[int]:
     return masks
 
 
+def _flip_buckets(sig: str, nbits: int, multi_probe: int) -> Column:
+    """Explode a signature into every bucket within Hamming distance
+    ``multi_probe`` of it (itself included): one output row per bucket."""
+    return F.explode(F.array(*[F.col(sig).bitwiseXOR(F.lit(m).cast("long"))
+                               for m in probe_masks(nbits, multi_probe)]))
+
+
 def with_lsh_signature(df: DataFrame, vec_col: str, dim: int, nbits: int,
                        sig_col: str = "_sig") -> DataFrame:
     """Attach the deterministic LSH signature column. Precompute this once
@@ -151,6 +182,15 @@ def with_lsh_signature(df: DataFrame, vec_col: str, dim: int, nbits: int,
     few single-bucket lookups instead of a full-table signature pass."""
     planes = hyperplanes(dim, nbits)
     return df.withColumn(sig_col, lsh_signature_col(F.col(vec_col), planes))
+
+
+def _with_sig(df: DataFrame, vec_col: str, dim: int, nbits: int,
+              sig_col: str | None) -> DataFrame:
+    """df with its signature as `_sig`: computed here, or copied from the
+    precomputed column ``sig_col``."""
+    if sig_col is None:
+        return with_lsh_signature(df, vec_col, dim, nbits)
+    return df.withColumn("_sig", F.col(sig_col))
 
 
 def write_bucketed_signatures(df: DataFrame, path: str, table: str,
@@ -185,33 +225,15 @@ def lsh_topk(df: DataFrame, probes: DataFrame, k: int, nbits: int = 12,
         raise ValueError(
             "lsh_topk requires dim= (the embedding width); array schemas "
             "carry no length and inferring it would run a driver-side job")
-    planes = hyperplanes(dim, nbits)
-    if sig_col is None:
-        data_sig = df.withColumn("_sig", lsh_signature_col(F.col(vec_col), planes))
-    else:
-        data_sig = df.withColumn("_sig", F.col(sig_col))
-    base_sig = probes.withColumn("_psig", lsh_signature_col(F.col(probe_vec_col), planes))
-    masks = probe_masks(nbits, multi_probe)
-    if len(masks) > 1:
-        flips = F.array(*[F.col("_psig").bitwiseXOR(F.lit(m).cast("long"))
-                          for m in masks])
-        probe_sig = base_sig.withColumn("_psig", F.explode(flips))
-    else:
-        probe_sig = base_sig
-    vd = F.col(vec_col).cast("array<double>")
-    pd_ = F.col(probe_vec_col).cast("array<double>")
-    data_sig = data_sig.withColumn("_nv", _norm(vd))
-    probe_sig = probe_sig.withColumn("_np", _norm(pd_))
-    cand = (data_sig.join(F.broadcast(probe_sig), F.col("_sig") == F.col("_psig"))
+    data = (_with_sig(df, vec_col, dim, nbits, sig_col)
+            .withColumn("_nv", _norm(_f64(vec_col))))
+    probe_sig = (with_lsh_signature(probes, probe_vec_col, dim, nbits, "_psig")
+                 .withColumn("_psig", _flip_buckets("_psig", nbits, multi_probe))
+                 .withColumn("_np", _norm(_f64(probe_vec_col))))
+    cand = (data.join(F.broadcast(probe_sig), F.col("_sig") == F.col("_psig"))
             .where(F.col(id_col) != F.col(probe_id_col))
             .dropDuplicates([probe_id_col, id_col]))
-    scored = cand.select(F.col(probe_id_col).alias("probe_id"),
-                         F.col(id_col).alias("vec_id"),
-                         F.round(_dot(vd, pd_)
-                                 / (F.col("_nv") * F.col("_np")), 6).alias("score"))
-    w = Window.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .where(F.col("rank") <= k))
+    return _top_k(_scored(cand, id_col, vec_col, probe_id_col, probe_vec_col), k)
 
 
 # -- IVF (inverted-file) ANN ------------------------------------------------------
@@ -245,8 +267,8 @@ def ivf_assign(df: DataFrame, centroids: DataFrame,
     centroid index. Scoring is a broadcast cross-join with JVM array
     arithmetic — the standard IVF build cost of n_rows x n_centroids dot
     products, with no Python and no shuffle of the corpus."""
-    vd = F.col(vec_col).cast("array<double>")
-    cd = F.col("cvec").cast("array<double>")
+    vd = _f64(vec_col)
+    cd = _f64("cvec")
     d = df.select(F.col(id_col).alias("_id"), F.col(vec_col),
                   _norm(vd).alias("_nv"))
     cents = centroids.withColumn("_nc", _norm(cd))
@@ -258,70 +280,6 @@ def ivf_assign(df: DataFrame, centroids: DataFrame,
             .agg(F.max(F.struct(F.col("_s"), (-F.col("c")).alias("_negc"))).alias("_m"))
             .select("_id", (-F.col("_m._negc")).alias("cluster")))
     return best
-
-
-def write_clustered_corpus(df: DataFrame, path: str, table: str,
-                           n_centroids: int,
-                           id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           centroids_table: str | None = None) -> None:
-    """Persist the IVF build product: the corpus with its cluster assignment,
-    PARTITIONED BY cluster — the inverted file on disk. A query then reads
-    only its n_probe clusters' directories (partition pruning at the scan:
-    n_probe/n_centroids of the bytes), instead of re-assigning the corpus
-    per query. The centroid table (n_centroids tiny rows) is saved alongside
-    for probe-side routing. Analogous to write_bucketed_signatures for LSH.
-    """
-    cents = ivf_centroids(df, n_centroids, id_col, vec_col)
-    assigned = (df.join(ivf_assign(df, cents, id_col, vec_col),
-                        F.col(id_col) == F.col("_id"))
-                .drop("_id"))
-    (assigned.write.mode("overwrite").format("parquet")
-     .partitionBy("cluster")
-     .option("path", path).saveAsTable(table))
-    if centroids_table is not None:
-        (cents.write.mode("overwrite").format("parquet")
-         .option("path", f"{path}__centroids").saveAsTable(centroids_table))
-
-
-def ivf_topk_clustered(spark, table: str, probes: DataFrame, k: int,
-                       n_probe: int,
-                       centroids_table: str,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding",
-                       probe_id_col: str = "probe_id",
-                       probe_vec_col: str = "probe_vec") -> DataFrame:
-    """Query path over a persisted clustered corpus (write_clustered_corpus):
-    route each probe to its n_probe nearest centroids, then scan ONLY those
-    cluster partitions (the `cluster IN (...)` filter prunes at the file
-    level). Same scoring/rank contract as ivf_topk.
-
-    centroids_table is required (written by write_clustered_corpus):
-    re-deriving centroids here would either run a driver-side job during
-    query construction or rescan the whole corpus — both anti-patterns."""
-    corpus = spark.table(table)
-    cents = spark.table(centroids_table)
-    pv = F.col(probe_vec_col).cast("array<double>")
-    cd = F.col("cvec").cast("array<double>")
-    pscore = (probes.crossJoin(F.broadcast(cents))
-              .select(probe_id_col, probe_vec_col, "c",
-                      cosine(pv, cd).alias("_s")))
-    wp = Window.partitionBy(probe_id_col).orderBy(F.desc("_s"), F.asc("c"))
-    probed = (pscore.withColumn("_r", F.row_number().over(wp))
-              .where(F.col("_r") <= n_probe)
-              .select(probe_id_col, probe_vec_col,
-                      F.col("c").alias("cluster")))
-    cand = (corpus.withColumn("_nv", _norm(F.col(vec_col).cast("array<double>")))
-            .join(F.broadcast(probed.withColumn("_np", _norm(pv))), "cluster")
-            .where(F.col(id_col) != F.col(probe_id_col)))
-    vd = F.col(vec_col).cast("array<double>")
-    scored = cand.select(F.col(probe_id_col).alias("probe_id"),
-                         F.col(id_col).alias("vec_id"),
-                         F.round(_dot(vd, pv)
-                                 / (F.col("_nv") * F.col("_np")), 6).alias("score"))
-    w = Window.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .where(F.col("rank") <= k))
 
 
 def ivf_topk(df: DataFrame, probes: DataFrame, k: int,
@@ -338,18 +296,16 @@ def ivf_topk(df: DataFrame, probes: DataFrame, k: int,
     deterministic (md5-hash centroid seeds, sequential-fold cosine), so the
     whole pipeline has an exact DuckDB oracle."""
     cents = ivf_centroids(df, n_centroids, id_col, vec_col)
-    vd = F.col(vec_col).cast("array<double>")
-    pv = F.col(probe_vec_col).cast("array<double>")
-    cd = F.col("cvec").cast("array<double>")
+    pv = _f64(probe_vec_col)
     assigned = (df.join(ivf_assign(df, cents, id_col, vec_col),
                         F.col(id_col) == F.col("_id"))
                 .drop("_id")
-                .withColumn("_nv", _norm(vd)))
+                .withColumn("_nv", _norm(_f64(vec_col))))
     # probe-side: top n_probe clusters per probe by centroid cosine
     # (probes x centroids is tiny — the plain per-pair cosine is fine here)
     pscore = (probes.crossJoin(F.broadcast(cents))
               .select(probe_id_col, probe_vec_col, "c",
-                      cosine(pv, cd).alias("_s")))
+                      cosine(pv, _f64("cvec")).alias("_s")))
     wp = Window.partitionBy(probe_id_col).orderBy(F.desc("_s"), F.asc("c"))
     probed = (pscore.withColumn("_r", F.row_number().over(wp))
               .where(F.col("_r") <= n_probe)
@@ -358,13 +314,7 @@ def ivf_topk(df: DataFrame, probes: DataFrame, k: int,
               .withColumn("_np", _norm(pv)))
     cand = (assigned.join(F.broadcast(probed), "cluster")
             .where(F.col(id_col) != F.col(probe_id_col)))
-    scored = cand.select(F.col(probe_id_col).alias("probe_id"),
-                         F.col(id_col).alias("vec_id"),
-                         F.round(_dot(vd, pv)
-                                 / (F.col("_nv") * F.col("_np")), 6).alias("score"))
-    w = Window.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .where(F.col("rank") <= k))
+    return _top_k(_scored(cand, id_col, vec_col, probe_id_col, probe_vec_col), k)
 
 
 def ivf_topk_oracle_sql(table: str, probe_ids: list[int], k: int,
@@ -373,7 +323,6 @@ def ivf_topk_oracle_sql(table: str, probe_ids: list[int], k: int,
                         vec_col: str = "embedding") -> str:
     """Exact replica of ivf_topk: same centroid seeds (md5 base hash order),
     same sequential-fold cosine, same argmax/rank tie-breaks."""
-    probes = ", ".join(str(int(p)) for p in probe_ids)
 
     def dot(a_vec: str, b_vec: str) -> str:
         return (f"list_reduce(list_transform(range(1, len({a_vec}) + 1), "
@@ -406,10 +355,7 @@ assigned AS (
     FROM {table} d, cents ct
   ) WHERE rr = 1
 ),
-p AS (
-  SELECT {id_col} AS probe_id, CAST({vec_col} AS DOUBLE[]) AS pv
-  FROM {table} WHERE {id_col} IN ({probes})
-),
+{_sql_probes(table, probe_ids, id_col, vec_col)},
 probed AS (
   SELECT probe_id, pv, cluster FROM (
     SELECT p.probe_id, p.pv, ct.c AS cluster,
@@ -425,13 +371,7 @@ scored AS (
   JOIN {table} d ON d.{id_col} = a.vid
   WHERE d.{id_col} <> p.probe_id
 ),
-ranked AS (
-  SELECT probe_id, vec_id, score,
-         row_number() OVER (PARTITION BY probe_id ORDER BY score DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT probe_id, vec_id, score, rank FROM ranked WHERE rank <= {k}
-"""
+{_SQL_RANKED.format(k=k)}"""
 
 
 def embedding_near_dup_pairs(df: DataFrame, threshold: float, dim: int,
@@ -470,15 +410,9 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float, dim: int,
     the raw cosine is bit-identical to the expression fold (pinned in
     tests/test_sibling_spark.py); rounding and thresholding stay
     Spark-side, unchanged."""
-    if sig_col is None:
-        sigs = with_lsh_signature(df, vec_col, dim, nbits)
-    else:
-        sigs = df.withColumn("_sig", F.col(sig_col))
-    masks = probe_masks(nbits, multi_probe)
+    sigs = _with_sig(df, vec_col, dim, nbits, sig_col)
     a = sigs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"),
-                    F.col("_sig").alias("_sa"))
-    a_exp = a.withColumn("_sb", F.explode(F.array(
-        *[F.col("_sa").bitwiseXOR(F.lit(m).cast("long")) for m in masks])))
+                    _flip_buckets("_sig", nbits, multi_probe).alias("_sb"))
     b = sigs.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"),
                     F.col("_sig").alias("_sb"))
     id_type = df.schema[id_col].dataType.simpleString()
@@ -514,7 +448,7 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float, dim: int,
                              "id_b": np.concatenate(out_b),
                              "_cos": np.concatenate(out_c)})
 
-    scored = (a_exp.groupby("_sb").cogroup(b.groupby("_sb"))
+    scored = (a.groupby("_sb").cogroup(b.groupby("_sb"))
               .applyInPandas(score_bucket,
                              schema=f"id_a {id_type}, id_b {id_type}, "
                                     "_cos double"))
@@ -530,26 +464,7 @@ def embedding_near_dup_oracle_sql(table: str, threshold: float, dim: int,
     """Exact replica: a pair is a candidate iff its signatures are within
     Hamming distance multi_probe (equivalent to the exploded-bucket join),
     scored with the same sequential-fold cosine."""
-    from ..functions.sibling_oracle import splitmix64_sql
-
-    sm = splitmix64_sql("CAST(bj AS UBIGINT)")
-    return f"""
-WITH planes AS (
-  SELECT bj // {dim} AS b, bj % {dim} AS j,
-         CASE WHEN ({sm}) >= 9223372036854775808 THEN 1.0 ELSE -1.0 END AS w
-  FROM (SELECT unnest(range(0, {nbits * dim})) AS bj)
-),
-planes_list AS (SELECT b, list(w ORDER BY j) AS ws FROM planes GROUP BY b),
-sigs AS (
-  SELECT d.{id_col} AS vid,
-         CAST(sum(CASE WHEN list_reduce(
-                 list_transform(range(1, {dim} + 1),
-                                i -> CAST(d.{vec_col}[i] AS DOUBLE) * p.ws[i]),
-                 (a, b) -> a + b) > 0
-               THEN 1 << p.b ELSE 0 END) AS BIGINT) AS sig
-  FROM {table} d, planes_list p
-  GROUP BY d.{id_col}
-),
+    return f"""{_sql_sigs(table, dim, nbits, id_col, vec_col)}
 cand AS (
   SELECT a.vid AS id_a, b.vid AS id_b
   FROM sigs a JOIN sigs b
@@ -599,31 +514,21 @@ def incremental_near_dup_filter(new_shard: DataFrame, corpus: DataFrame,
     shard probes (the corpus text/vectors outside those buckets are never
     read). The new shard (small side) computes its signatures fresh and is
     broadcast after exploding its probe masks."""
-    masks = probe_masks(nbits, multi_probe)
-    new_sig = with_lsh_signature(new_shard, vec_col, dim, nbits)
-    vn = F.col("_vn").cast("array<double>")
-    vc = F.col(vec_col).cast("array<double>")
-    probe = (new_sig.select(F.col(id_col).alias("_nid"),
-                            F.col(vec_col).alias("_vn"),
-                            F.col("_sig").alias("_nsig"))
-             .withColumn("_nn", _norm(vn))
-             .withColumn("_sig", F.explode(F.array(
-                 *[F.col("_nsig").bitwiseXOR(F.lit(m).cast("long"))
-                   for m in masks]))))
+    probe = (with_lsh_signature(new_shard, vec_col, dim, nbits)
+             .select(F.col(id_col).alias("_nid"), F.col(vec_col).alias("_vn"),
+                     _norm(_f64(vec_col)).alias("_np"),
+                     _flip_buckets("_sig", nbits, multi_probe).alias("_sig")))
     # broadcast the exploded new shard; the corpus scan joins on its
     # partition column -> dynamic partition pruning limits the scan to
     # the probed buckets (plan-asserted in tests). Corpus norm is computed
     # once per corpus ROW before the join (not per candidate pair — the
     # interpreted fold is the expensive part; see module header).
-    corpus_n = corpus.withColumn("_nc", _norm(vc))
-    cand = corpus_n.join(F.broadcast(probe), "_sig").where(
-        F.col(id_col) != F.col("_nid"))
-    dup_ids = (cand.select(
-        "_nid",
-        (F.round(_dot(vc, vn) / (F.col("_nc") * F.col("_nn")), 6)
-         >= threshold).alias("_isdup"))
-        .where(F.col("_isdup"))
-        .select(F.col("_nid").alias(id_col)).distinct())
+    cand = (corpus.withColumn("_nv", _norm(_f64(vec_col)))
+            .join(F.broadcast(probe), "_sig")
+            .where(F.col(id_col) != F.col("_nid")))
+    dup_ids = (_scored(cand, id_col, vec_col, "_nid", "_vn")
+               .where(F.col("score") >= threshold)
+               .select(F.col("probe_id").alias(id_col)).distinct())
     return (new_shard.select(id_col)
             .join(dup_ids, id_col, "left_anti")
             .select(F.col(id_col).cast("long").alias(id_col)))
@@ -638,26 +543,7 @@ def incremental_near_dup_oracle_sql(table: str, new_pred: str,
     split by ``new_pred`` (rows satisfying it = the new shard, the rest =
     the persisted corpus): a new row survives iff no corpus row lies within
     Hamming distance multi_probe of its signature with cosine >= threshold."""
-    from ..functions.sibling_oracle import splitmix64_sql
-
-    sm = splitmix64_sql("CAST(bj AS UBIGINT)")
-    return f"""
-WITH planes AS (
-  SELECT bj // {dim} AS b, bj % {dim} AS j,
-         CASE WHEN ({sm}) >= 9223372036854775808 THEN 1.0 ELSE -1.0 END AS w
-  FROM (SELECT unnest(range(0, {nbits * dim})) AS bj)
-),
-planes_list AS (SELECT b, list(w ORDER BY j) AS ws FROM planes GROUP BY b),
-sigs AS (
-  SELECT d.{id_col} AS vid, ({new_pred}) AS is_new,
-         CAST(sum(CASE WHEN list_reduce(
-                 list_transform(range(1, {dim} + 1),
-                                i -> CAST(d.{vec_col}[i] AS DOUBLE) * p.ws[i]),
-                 (a, b) -> a + b) > 0
-               THEN 1 << p.b ELSE 0 END) AS BIGINT) AS sig
-  FROM {table} d, planes_list p
-  GROUP BY d.{id_col}, ({new_pred})
-),
+    return f"""{_sql_sigs(table, dim, nbits, id_col, vec_col, new_pred)}
 dups AS (
   SELECT DISTINCT n.vid
   FROM sigs n
@@ -687,20 +573,30 @@ def make_probes(spark: SparkSession, df: DataFrame, probe_ids: list[int],
 
 # -- DuckDB oracle ----------------------------------------------------------------
 
-def lsh_topk_oracle_sql(table: str, probe_ids: list[int], k: int,
-                        nbits: int, dim: int, multi_probe: int = 1,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> str:
-    """Exact oracle for lsh_topk: rebuilds the hyperplanes from SplitMix64
-    (sign = top bit of splitmix64(b*dim + j), see hyperplanes()) via the
-    HUGEINT-limb SQL port, folds the per-bit dot products in the same
-    sequential order as F.aggregate, reproduces the multi-probe bucket set,
-    and scores candidates with the brute-force cosine CTE."""
+# The per-probe rank every top-k oracle ends with; `scored` holds
+# (probe_id, vec_id, score). Format with k.
+_SQL_RANKED = """ranked AS (
+  SELECT probe_id, vec_id, score,
+         row_number() OVER (PARTITION BY probe_id ORDER BY score DESC, vec_id ASC) AS rank
+  FROM scored
+)
+SELECT probe_id, vec_id, score, rank FROM ranked WHERE rank <= {k}
+"""
+
+
+def _sql_sigs(table: str, dim: int, nbits: int, id_col: str, vec_col: str,
+              new_pred: str | None = None) -> str:
+    """The WITH clause's `planes`, `planes_list` and `sigs` CTEs: sigs is
+    (vid, sig) per row of ``table``, plus ``is_new`` = new_pred when given.
+    The hyperplanes are rebuilt from SplitMix64 (sign = top bit of
+    splitmix64(b*dim + j), see hyperplanes()) via the HUGEINT-limb SQL
+    port, and each per-bit dot product folds in the same sequential order
+    as F.aggregate."""
     from ..functions.sibling_oracle import splitmix64_sql
 
     sm = splitmix64_sql("CAST(bj AS UBIGINT)")
-    probes = ", ".join(str(int(p)) for p in probe_ids)
-    masks = ", ".join(str(m) for m in probe_masks(nbits, multi_probe))
+    is_new = "" if new_pred is None else f", ({new_pred}) AS is_new"
+    group_new = "" if new_pred is None else f", ({new_pred})"
     return f"""
 WITH planes AS (
   SELECT bj // {dim} AS b, bj % {dim} AS j,
@@ -709,15 +605,37 @@ WITH planes AS (
 ),
 planes_list AS (SELECT b, list(w ORDER BY j) AS ws FROM planes GROUP BY b),
 sigs AS (
-  SELECT d.{id_col} AS vid,
+  SELECT d.{id_col} AS vid{is_new},
          CAST(sum(CASE WHEN list_reduce(
                  list_transform(range(1, {dim} + 1),
                                 i -> CAST(d.{vec_col}[i] AS DOUBLE) * p.ws[i]),
                  (a, b) -> a + b) > 0
                THEN 1 << p.b ELSE 0 END) AS BIGINT) AS sig
   FROM {table} d, planes_list p
-  GROUP BY d.{id_col}
-),
+  GROUP BY d.{id_col}{group_new}
+),"""
+
+
+def _sql_probes(table: str, probe_ids: list[int], id_col: str,
+                vec_col: str) -> str:
+    """The `p` CTE: (probe_id, pv) for each probe row of ``table``."""
+    probes = ", ".join(str(int(p)) for p in probe_ids)
+    return f"""p AS (
+  SELECT {id_col} AS probe_id, CAST({vec_col} AS DOUBLE[]) AS pv
+  FROM {table} WHERE {id_col} IN ({probes})
+)"""
+
+
+def lsh_topk_oracle_sql(table: str, probe_ids: list[int], k: int,
+                        nbits: int, dim: int, multi_probe: int = 1,
+                        id_col: str = "vec_id",
+                        vec_col: str = "embedding") -> str:
+    """Exact oracle for lsh_topk: rebuilds the signatures (`_sql_sigs`),
+    reproduces the multi-probe bucket set, and scores candidates with the
+    brute-force cosine CTE."""
+    probes = ", ".join(str(int(p)) for p in probe_ids)
+    masks = ", ".join(str(m) for m in probe_masks(nbits, multi_probe))
+    return f"""{_sql_sigs(table, dim, nbits, id_col, vec_col)}
 probe_buckets AS (
   SELECT s.vid AS probe_id, xor(s.sig, m.mask) AS bsig
   FROM sigs s, (SELECT unnest([{masks}]) AS mask) m
@@ -743,13 +661,7 @@ scored AS (
   JOIN {table} d ON d.{id_col} = c.vec_id
   JOIN pv ON pv.pid = c.probe_id
 ),
-ranked AS (
-  SELECT probe_id, vec_id, score,
-         row_number() OVER (PARTITION BY probe_id ORDER BY score DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT probe_id, vec_id, score, rank FROM ranked WHERE rank <= {k}
-"""
+{_SQL_RANKED.format(k=k)}"""
 
 
 def brute_force_topk_oracle_sql(table: str, probe_ids: list[int], k: int,
@@ -759,12 +671,8 @@ def brute_force_topk_oracle_sql(table: str, probe_ids: list[int], k: int,
     ordered sum would not pin order, so we use the same fold shape —
     list_reduce is sequential in DuckDB, matching Spark's F.aggregate fold.
     """
-    probes = ", ".join(str(int(p)) for p in probe_ids)
     return f"""
-WITH p AS (
-  SELECT {id_col} AS probe_id, CAST({vec_col} AS DOUBLE[]) AS pv
-  FROM {table} WHERE {id_col} IN ({probes})
-),
+WITH {_sql_probes(table, probe_ids, id_col, vec_col)},
 scored AS (
   SELECT p.probe_id, d.{id_col} AS vec_id,
          round(
@@ -775,10 +683,4 @@ scored AS (
   FROM {table} d, p
   WHERE d.{id_col} <> p.probe_id
 ),
-ranked AS (
-  SELECT probe_id, vec_id, score,
-         row_number() OVER (PARTITION BY probe_id ORDER BY score DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT probe_id, vec_id, score, rank FROM ranked WHERE rank <= {k}
-"""
+{_SQL_RANKED.format(k=k)}"""

@@ -67,7 +67,31 @@ def test_query_matches_oracle(spark, duck, name):
     q = entry_mod.queries()[name]
     got = q(spark, SF_DIR).toPandas()
     want = duck.execute(entry_mod.oracle_sql()[name]).df()
+    _assert_matches(name, got, want)
 
+
+@pytest.mark.parametrize("multi_probe", [0, 2])
+@pytest.mark.parametrize("op", ["lsh_topk", "embedding_near_dup_pairs"])
+def test_lsh_multi_probe_matches_oracle(spark, duck, op, multi_probe):
+    """The driver proofs run multi_probe=1 only. The single-bucket join
+    (0) and the distance-2 flip buckets (2) must equal their oracles too."""
+    from sketches_rust_spark.operators import queries as Q
+
+    if op == "lsh_topk":
+        q, sql = Q.ann_query(Q.lsh_topk, Q.lsh_topk_oracle_sql,
+                             Q._ANN_PROBES, nbits=6, dim=64,
+                             multi_probe=multi_probe)
+    else:
+        q, sql = Q.table_proof(
+            "embeddings", Q.embedding_near_dup_pairs,
+            Q.embedding_near_dup_oracle_sql, 0.4, dim=64, nbits=6,
+            multi_probe=multi_probe)
+    want = duck.execute(sql).df()
+    assert len(want) > 0
+    _assert_matches(f"{op}[{multi_probe}]", q(spark, SF_DIR).toPandas(), want)
+
+
+def _assert_matches(name: str, got: pd.DataFrame, want: pd.DataFrame) -> None:
     assert sorted(got.columns) == sorted(want.columns), (
         f"{name}: columns {sorted(got.columns)} != {sorted(want.columns)}")
     assert len(got) == len(want), f"{name}: {len(got)} rows vs {len(want)}"

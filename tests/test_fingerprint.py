@@ -2,9 +2,9 @@
 
 import numpy as np
 
+from helpers import fingerprint_jaccard
 from sketches_rust_spark.kernel.fingerprint import (
     document_fingerprints,
-    fingerprint_jaccard,
     kgram_hashes,
     winnow,
 )

@@ -7,6 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from helpers import synthetic_media
 from sketches_rust_spark.operators.dedup import (
     exact_dedup,
     exact_dup_stats,
@@ -20,7 +21,6 @@ from sketches_rust_spark.operators.dedup import (
 from sketches_rust_spark.operators.multimodal import (
     decode_image_features,
     sample_video_frames,
-    synthetic_media,
 )
 from sketches_rust_spark.operators.similarity import (
     brute_force_topk,
@@ -246,10 +246,8 @@ def test_real_ppm_codec_round_trip(spark):
     # the FAKE image path stays pinned by its own DuckDB oracle
     import duckdb
 
-    from sketches_rust_spark.operators.multimodal import (
-        image_features_oracle_sql,
-        media_from_documents,
-    )
+    from helpers import image_features_oracle_sql
+    from sketches_rust_spark.operators.multimodal import media_from_documents
     # oracle domain matches the documents fixture: texts >= 16 bytes (the
     # s16 window sum is NULL-degenerate below that)
     docs = spark.createDataFrame(
@@ -710,34 +708,6 @@ def test_embedding_near_dup_precomputed_signatures(spark, embeddings, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_write_clustered_corpus_and_pruned_query(spark, embeddings, tmp_path):
-    """The persisted inverted file (corpus partitioned by cluster) must
-    serve ivf queries with results identical to the inline assignment, and
-    the scan must prune to the probed cluster partitions (partition filter
-    visible in the plan)."""
-    from sketches_rust_spark.operators.similarity import (
-        ivf_topk, ivf_topk_clustered, make_probes, write_clustered_corpus)
-
-    table, ctable = "emb_ivf_test", "emb_ivf_cents_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {ctable}")
-    write_clustered_corpus(embeddings, str(tmp_path / "emb_ivf"), table,
-                           n_centroids=8, centroids_table=ctable)
-    probes = make_probes(spark, embeddings, [0, 1, 2])
-    inline = ivf_topk(embeddings, probes, k=5, n_centroids=8, n_probe=3)
-    via_table = ivf_topk_clustered(spark, table, probes, k=5, n_probe=3,
-                                   centroids_table=ctable)
-    key = lambda r: (r["probe_id"], r["rank"])  # noqa: E731
-    assert sorted(inline.collect(), key=key) == sorted(
-        via_table.collect(), key=key)
-    # cluster is a partition column of the saved table -> the probed-cluster
-    # join prunes at the file level (PartitionFilters on the scan)
-    plan = via_table._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cluster" in plan
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {ctable}")
-
-
 def test_ivf_recall_vs_n_probe_sweep(spark, embeddings):
     """Recall against exact top-k must be monotone-ish in n_probe and reach
     1.0 when probing every centroid (records the recall curve the docs
@@ -972,14 +942,14 @@ def test_python_shingler_matches_expression_path(spark, sf_dir):
     pipeline (split on ' ', k-windows joined by ' ', md5[:15] base hash,
     distinct per doc) EXACTLY — the DuckDB oracles recompute the same."""
     from pyspark.sql import functions as F
-    from sketches_rust_spark.operators.dedup import (
-        _base_hash, _shingles, shingle_hashes)
+    from helpers import shingles
+    from sketches_rust_spark.operators.dedup import _base_hash, shingle_hashes
 
     documents = spark.read.parquet(f"{sf_dir}/documents.parquet")
     k = 3
     expr_path = (documents.select(
         F.col("doc_id").alias("_id"),
-        F.explode(_shingles(F.col("text"), k)).alias("_sh"))
+        F.explode(shingles(F.col("text"), k)).alias("_sh"))
         .select("_id", _base_hash(F.col("_sh")).alias("h"))
         .distinct())
     old = {(r["_id"], r["h"]) for r in expr_path.collect()}

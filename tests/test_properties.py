@@ -9,10 +9,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from sketches_rust_spark.kernel.fingerprint import (
-    document_fingerprints,
-    fingerprint_jaccard,
-)
+from helpers import fingerprint_jaccard
+from sketches_rust_spark.kernel.fingerprint import document_fingerprints
 from sketches_rust_spark.kernel.sketch import DDSketch
 
 finite_positive = st.floats(min_value=1e-100, max_value=1e100,

@@ -426,6 +426,51 @@ def test_kmv_decode_rejects_malformed_blobs():
     assert KMV.decode(blob(16, h)).encode() == blob(16, h)
 
 
+def test_tdigest_decode_rejects_malformed_blobs():
+    import struct
+
+    import numpy as np
+    import pytest
+    from sketches_rust_spark.kernel.tdigest import TDigest
+
+    td = TDigest(100)
+    td.accept_many(np.arange(1.0, 11.0))
+    good = td.encode()
+    n = struct.unpack_from("<I", good, 12)[0]
+
+    def with_centroid(i: int, mean: float, weight: float) -> bytes:
+        buf = bytearray(good)
+        struct.pack_into("<dd", buf, 32 + 16 * i, mean, weight)
+        return bytes(buf)
+
+    # a bad weight or mean would corrupt every total and quantile (weight
+    # -5 in a 10-value digest makes total_weight 4.0)
+    for bad_weight in (-5.0, 0.0, float("nan"), float("inf")):
+        with pytest.raises(ValueError, match="weight"):
+            TDigest.decode(with_centroid(0, 1.0, bad_weight))
+    for bad_mean in (float("nan"), float("inf")):
+        with pytest.raises(ValueError, match="mean"):
+            TDigest.decode(with_centroid(n - 1, bad_mean, 1.0))
+    other = TDigest(100)
+    with pytest.raises(ValueError, match="mean"):
+        other.decode_and_merge_with(with_centroid(0, float("nan"), 1.0))
+    # the body must hold exactly the n centroids the header declares
+    for blob in (good[:-8], good + bytes(16), good[:20]):
+        with pytest.raises(ValueError, match="TDG1"):
+            TDigest.decode(blob)
+    assert TDigest.decode(good).encode() == good
+
+    # means are NOT required sorted: merging tie-heavy digests leaves
+    # equal-valued centroids whose weighted means differ in the last ulp
+    rng = np.random.default_rng(0)
+    a, b = TDigest(100), TDigest(100)
+    a.accept_many(rng.integers(0, 5, 3000) * 0.1)
+    b.accept_many(rng.integers(0, 5, 3000) * 0.1 + 0.3)
+    a.merge_with(b)
+    assert (np.diff(a.means) < 0).any()
+    assert TDigest.decode(a.encode()).encode() == a.encode()
+
+
 def test_kmv_difference_estimate():
     import numpy as np
     from sketches_rust_spark.kernel.bits import splitmix64
