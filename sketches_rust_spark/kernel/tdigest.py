@@ -153,13 +153,25 @@ class TDigest:
             raise ValueError(f"TDG1 blob of {len(data)} bytes does not hold "
                              f"{n} centroids ({4 + 28 + 16 * n} bytes)")
         arr = np.frombuffer(data[4 + 28:], dtype="<f8").reshape(n, 2)
-        # means need not be sorted: a merged digest's weighted means can sit
-        # 1 ulp out of order
-        if not np.isfinite(arr[:, 0]).all():
-            raise ValueError("TDG1 blob has a non-finite centroid mean")
         if not (np.isfinite(arr[:, 1]) & (arr[:, 1] > 0)).all():
             raise ValueError("TDG1 blob has a non-finite or non-positive "
                              "centroid weight")
+        if n == 0:
+            if not (mn == math.inf and mx == -math.inf):
+                raise ValueError("TDG1 blob of an empty digest has a min/max "
+                                 "other than (inf, -inf)")
+        else:
+            # means need not be sorted (a merged digest's weighted means can
+            # sit 1 ulp out of order), and NaN propagates through min/max
+            lo, hi = float(arr[:, 0].min()), float(arr[:, 0].max())
+            if not (math.isfinite(lo) and math.isfinite(hi)):
+                raise ValueError("TDG1 blob has a non-finite centroid mean")
+            # a merged weighted mean can round a few ulps past min or max
+            slack = 1e-9 * max(abs(mn), abs(mx))
+            if not (math.isfinite(mn) and math.isfinite(mx) and mn <= mx
+                    and lo >= mn - slack and hi <= mx + slack):
+                raise ValueError("TDG1 blob has a min/max that is not "
+                                 "finite, reversed or around every mean")
         td = TDigest(delta)
         td.means = arr[:, 0].copy()
         td.weights = arr[:, 1].copy()

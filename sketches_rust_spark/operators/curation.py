@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _base_hash
+from .dedup import _base_hash, _duck_base_hash
 
 _HASH_SPACE = float(1 << 60)  # _base_hash is uniform on [0, 2^60)
 
@@ -76,8 +76,7 @@ def rebalance_stats_oracle_sql(table: str, fracs: dict[str, float],
         f"THEN {float(frac) * _HASH_SPACE!r}"
         for g, frac in fracs.items())
     thresh = f"(CASE {arms} ELSE {default_frac * _HASH_SPACE!r} END)"
-    h = (f"CAST(CAST(concat('0x', substr(md5(CAST({id_col} AS VARCHAR)), 1, 15)) "
-         f"AS UBIGINT) AS DOUBLE)")
+    h = f"CAST({_duck_base_hash(f'CAST({id_col} AS VARCHAR)')} AS DOUBLE)"
     return f"""
 SELECT {group_col}, CAST(count(*) AS BIGINT) AS n_total,
        CAST(sum(CASE WHEN {h} < {thresh} THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
@@ -268,6 +267,8 @@ def chunk_stats_oracle_sql(table: str, chunk_tokens: int = 24,
     chunk text via 1-based inclusive list slicing (matches F.slice), same
     md5 base hash as the Spark side."""
     stride = chunk_tokens - overlap_tokens
+    chunk_key = ("\n               CAST(did AS VARCHAR) || ':' || CAST(cid AS VARCHAR)"
+                 "\n               || ':' || ctext")
     return f"""
 WITH toks AS (
   SELECT {id_col} AS did, string_split({text_col}, ' ') AS tk,
@@ -289,9 +290,7 @@ chunks AS (
 ),
 per_doc AS (
   SELECT did, count(*) AS n_chunks, sum(nt) AS t,
-         sum(CAST(concat('0x', substr(md5(
-               CAST(did AS VARCHAR) || ':' || CAST(cid AS VARCHAR)
-               || ':' || ctext), 1, 15)) AS UBIGINT)
+         sum({_duck_base_hash(chunk_key)}
              % {_CHUNK_HASH_MOD}) AS h
   FROM chunks GROUP BY did
 )

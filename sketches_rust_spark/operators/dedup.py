@@ -14,11 +14,24 @@ Five flavors, each with a scale story:
                  small Hamming distance.
 * embedding cosine near-dup lives in operators/similarity.py.
 
+Shared steps, each defined once:
+
+* ``_hamming_pairs`` — the Manku et al. (WWW'07) blocked simhash join, used
+  by the batch pair search, keep-canonical dedup and the incremental
+  shard-vs-corpus filter; ``_hamming`` is the one Hamming expression.
+* ``near_dup_clusters`` — connected components: a size-gated driver-side
+  union-find (``_solve_locally``) or the contraction + pointer-jumping loop
+  (``_propagate_labels``), composed back to the input ids in one place.
+* ``_cap_doc_freq`` / ``_duck_cap`` — the shingle doc-frequency cap of the
+  n-gram Jaccard and contamination operators and of their oracles.
+
 Cross-engine reproducibility: the base shingle/token hash is the first 15
-hex chars of md5 parsed as int (identical in Spark and DuckDB); MinHash
-permutations apply SplitMix64(base XOR seed_i) — integer-exact in both
-engines (see functions/sibling_oracle.splitmix64_sql), so LSH buckets and
-candidate pairs admit exact oracles.
+hex chars of md5 parsed as int, in three forms that must stay bit-identical:
+``_base_hash`` (Spark), ``_py_base_hash`` (the Arrow-batched Python stages)
+and ``_duck_base_hash`` (the DuckDB text every oracle in the package uses).
+MinHash permutations apply SplitMix64(base XOR seed_i) — integer-exact in
+both engines (see functions/sibling_oracle.splitmix64_sql), so LSH buckets
+and candidate pairs admit exact oracles.
 """
 
 from __future__ import annotations
@@ -28,7 +41,7 @@ import hashlib
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -69,17 +82,20 @@ def exact_dup_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 # -- shingling + base hash ----------------------------------------------------------
 
 def _base_hash(col: Column) -> Column:
-    """Portable 60-bit hash: first 15 hex chars of md5, as bigint.
-    Bit-identical in DuckDB: CAST(concat('0x', substr(md5(x),1,15)) AS UBIGINT).
-    """
+    """Portable 60-bit hash: first 15 hex chars of md5, as bigint."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def _py_base_hash(s: str) -> int:
     """Python twin of ``_base_hash`` for the Arrow-batched stages. MUST stay
-    bit-identical to the SQL expression and the DuckDB oracles — every
-    cross-engine hash in this module routes through these two functions."""
+    bit-identical to it and to ``_duck_base_hash`` — every cross-engine
+    hash in the package routes through these three functions."""
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+
+
+def _duck_base_hash(expr: str) -> str:
+    """DuckDB text of ``_base_hash`` over the SQL expression ``expr``."""
+    return f"CAST(concat('0x', substr(md5({expr}), 1, 15)) AS UBIGINT)"
 
 
 def shingle_hashes(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
@@ -117,6 +133,17 @@ def shingle_hashes(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFra
                                 "h": np.array(hs_out, dtype=np.int64)})
 
     return narrow.mapInPandas(gen, schema=f"_id {id_type}, h long")
+
+
+def _cap_doc_freq(sh: DataFrame, cap: int | None) -> DataFrame:
+    """Drop the (_id, h) rows of every shingle h found in more than ``cap``
+    documents (None = no cap). The doc frequency comes from a window over
+    h: ONE shuffle keyed by h (which a shared-shingle join needs anyway)
+    and one pass — no second shingle explosion or anti-join scan."""
+    if cap is None:
+        return sh
+    dfreq = F.count(F.lit(1)).over(Window.partitionBy("h"))
+    return sh.withColumn("_df", dfreq).where(F.col("_df") <= cap).drop("_df")
 
 
 # -- MinHash + LSH --------------------------------------------------------------------
@@ -178,13 +205,9 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
             })
 
     partials = sh.mapInPandas(partial, schema=out_schema)
-    # exact final min per permutation position
-    return (partials
-            .select("_id", F.posexplode("sig").alias("perm", "mh"))
-            .groupBy("_id", "perm").agg(F.min("mh").alias("mh"))
-            .groupBy("_id")
-            .agg(F.array_sort(F.collect_list(F.struct("perm", "mh"))).alias("_s"))
-            .select("_id", F.transform("_s", lambda s: s["mh"]).alias("sig")))
+    # exact final min per permutation position: one exchange keyed by _id
+    return partials.groupBy("_id").agg(F.array(*[
+        F.min(F.col("sig")[i]) for i in range(num_perm)]).alias("sig"))
 
 
 def lsh_candidate_pairs(signatures: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
@@ -246,18 +269,9 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     materialize: localCheckpoint the (possibly df-capped) shingle table
     before its three uses below (sizes + both self-join sides) — without it
     each use re-derives the explode+distinct pipeline."""
-    sh = (shingles if shingles is not None
-          else shingle_hashes(df, id_col, text_col, shingle_k))
-    if max_shingle_df is not None:
-        # annotate each (doc, shingle) row with the shingle's doc frequency
-        # via a window over h: ONE shuffle keyed by h (which the self-join
-        # needs anyway) and one pass — no second shingle explosion or
-        # anti-join scan
-        from pyspark.sql import Window
-        dfreq = F.count(F.lit(1)).over(Window.partitionBy("h"))
-        sh = (sh.withColumn("_df", dfreq)
-              .where(F.col("_df") <= max_shingle_df)
-              .drop("_df"))
+    sh = _cap_doc_freq(shingles if shingles is not None
+                       else shingle_hashes(df, id_col, text_col, shingle_k),
+                       max_shingle_df)
     if materialize:
         sh = sh.localCheckpoint()
     sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("n"))
@@ -302,12 +316,8 @@ def contamination_pairs(corpus: DataFrame, evalset: DataFrame,
     # exchange in the whole plan carries matched (doc, item) partial counts.
     c_sh = shingle_hashes(corpus, corpus_id, text_col, shingle_k
                           ).withColumnRenamed("_id", "doc_id")
-    e_sh = shingle_hashes(evalset, eval_id, text_col, shingle_k)
-    if max_eval_df is not None:
-        from pyspark.sql import Window
-        dfreq = F.count(F.lit(1)).over(Window.partitionBy("h"))
-        e_sh = (e_sh.withColumn("_df", dfreq)
-                .where(F.col("_df") <= max_eval_df).drop("_df"))
+    e_sh = _cap_doc_freq(shingle_hashes(evalset, eval_id, text_col, shingle_k),
+                         max_eval_df)
     joined = c_sh.join(
         F.broadcast(e_sh.withColumnRenamed("_id", "item_id")), "h")
     return (joined.groupBy("doc_id", "item_id")
@@ -327,16 +337,7 @@ def contamination_oracle_sql(corpus_table: str, eval_table: str,
     ``corpus_table``/``eval_table`` are trusted SQL fragments (table names
     or subqueries), the same convention as every oracle builder's ``table``
     arg — they are NOT escaped; don't pass user-controlled strings."""
-    e_src = "shh_e"
-    if max_eval_df is not None:
-        e_src = "capped_e"
-        cap = f""",
-capped_e AS (
-  SELECT _id, h FROM shh_e
-  WHERE h IN (SELECT h FROM shh_e GROUP BY h HAVING count(*) <= {max_eval_df})
-)"""
-    else:
-        cap = ""
+    cap, e_src = _duck_cap("shh_e", "capped_e", max_eval_df)
     return f"""
 WITH {_duck_shingle_hashes(corpus_table, corpus_id, text_col, shingle_k, suffix='_c')},
 {_duck_shingle_hashes(eval_table, eval_id, text_col, shingle_k, suffix='_e').lstrip()}{cap}
@@ -417,36 +418,22 @@ def simhash_signatures(df: DataFrame, id_col: str = "doc_id",
     return narrow.mapInPandas(stage, schema=out_schema)
 
 
-def simhash_candidates(signatures: DataFrame, max_hamming: int = 3,
-                       n_blocks: int | None = None) -> DataFrame:
-    """Distinct candidate pairs from the blocked self-join, BEFORE the exact
-    Hamming filter: (id_a, id_b, sh_a, sh_b). Exposed separately so the
-    candidate waste of a blocking configuration (candidates per true pair —
-    THE knob-tuning metric at scale) is directly measurable."""
-    # materialize the signatures before the self-join: both join sides (and
-    # the combo-key explode feeding each) otherwise re-derive the FULL
-    # signature pipeline — text tokenize -> collect_set aggregate -> Python
-    # bit-vote stage — once per side. The checkpoint is 16 bytes/doc (the
-    # same table the incremental path persists to parquet). Interleaved A/B
-    # at sf0.1/local[32], 4 rounds each: pairs median 4.47 s vs 5.10 s and
-    # keep_canonical 5.83 s vs 6.88 s in favor of the checkpoint — and at
-    # scale it halves the dominant CPU cost (one signature pass, not two).
-    signatures = signatures.localCheckpoint()
-    keyed, packable = _simhash_combo_keyed(signatures, max_hamming, n_blocks)
-    a, b = keyed.alias("a"), keyed.alias("b")
-    same_key = (F.col("a.v") == F.col("b.v")) if packable else (
-        (F.col("a.q") == F.col("b.q")) & (F.col("a.v") == F.col("b.v")))
-    return (a.join(b, same_key & (F.col("a._id") < F.col("b._id")))
-            .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"),
-                    F.col("a.simhash").alias("sh_a"), F.col("b.simhash").alias("sh_b"))
-            .distinct())
+def _hamming(a: str, b: str) -> Column:
+    """Hamming distance between two named simhash columns."""
+    return F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
 
 
-def _simhash_combo_keyed(signatures: DataFrame, max_hamming: int,
-                         n_blocks: int | None) -> tuple[DataFrame, bool]:
-    """(_id, simhash, q, v): one row per Manku combo key per signature.
-    Shared by the self-join (simhash_candidates) and the incremental
-    shard-vs-persisted-corpus join (incremental_simhash_filter)."""
+def _hamming_pairs(left: DataFrame, right: DataFrame, max_hamming: int,
+                   n_blocks: int | None, self_join: bool) -> DataFrame:
+    """Candidate pairs (id_a, id_b, sh_a, sh_b) of the Manku blocked join of
+    two (_id, simhash) tables, BEFORE the exact Hamming filter: one row per
+    combo key the pair shares, so callers take the distinct pairs they need.
+    ``self_join`` keeps id_a < id_b; otherwise every id_a != id_b pair.
+
+    The signature is split into n_blocks bit spans; a pair within distance
+    d differs in at most d spans, so SOME combination of (n_blocks - d)
+    spans agrees exactly (pigeonhole) and joining on every such combination
+    is lossless. Each side explodes one key per combination."""
     if not 0 <= max_hamming <= 63:
         raise ValueError(f"max_hamming must be in [0, 63], got {max_hamming}")
     if n_blocks is None:
@@ -491,14 +478,26 @@ def _simhash_combo_keyed(signatures: DataFrame, max_hamming: int,
             return blocks[combo[0]]
         return F.array(*[blocks[b] for b in combo])
 
-    keyed = signatures.select(
-        "_id", "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(ci).alias("q"), combo_key(ci, combo).alias("v"))
-            for ci, combo in enumerate(combos)
-        ])).alias("qv"),
-    ).select("_id", "simhash", F.col("qv.q").alias("q"), F.col("qv.v").alias("v"))
-    return keyed, packable
+    def keyed(sigs: DataFrame) -> DataFrame:
+        return sigs.select(
+            "_id", "simhash",
+            F.explode(F.array(*[
+                F.struct(F.lit(ci).alias("q"), combo_key(ci, combo).alias("v"))
+                for ci, combo in enumerate(combos)
+            ])).alias("qv"),
+        ).select("_id", "simhash", F.col("qv.q").alias("q"),
+                 F.col("qv.v").alias("v"))
+
+    ka = keyed(left)
+    a, b = ka.alias("a"), (ka if right is left else keyed(right)).alias("b")
+    same_key = (F.col("a.v") == F.col("b.v")) if packable else (
+        (F.col("a.q") == F.col("b.q")) & (F.col("a.v") == F.col("b.v")))
+    ids = (F.col("a._id") < F.col("b._id")) if self_join else (
+        F.col("a._id") != F.col("b._id"))
+    return (a.join(b, same_key & ids)
+            .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"),
+                    F.col("a.simhash").alias("sh_a"),
+                    F.col("b.simhash").alias("sh_b")))
 
 
 def incremental_simhash_filter(new_docs: DataFrame, sig_table: DataFrame,
@@ -517,15 +516,10 @@ def incremental_simhash_filter(new_docs: DataFrame, sig_table: DataFrame,
     Manku combo keys, so the join is bucket-local exactly like the batch
     self-join; pigeonhole keeps it lossless."""
     new_sigs = simhash_signatures(new_docs, id_col=id_col, text_col=text_col)
-    ka, packable = _simhash_combo_keyed(new_sigs, max_hamming, n_blocks)
-    kb, _ = _simhash_combo_keyed(sig_table, max_hamming, n_blocks)
-    a, b = ka.alias("a"), kb.alias("b")
-    same_key = (F.col("a.v") == F.col("b.v")) if packable else (
-        (F.col("a.q") == F.col("b.q")) & (F.col("a.v") == F.col("b.v")))
-    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    dup_ids = (a.join(b, same_key & (F.col("a._id") != F.col("b._id")))
-               .where(hamming <= max_hamming)
-               .select(F.col("a._id").alias(id_col)).distinct())
+    dup_ids = (_hamming_pairs(new_sigs, sig_table, max_hamming, n_blocks,
+                              self_join=False)
+               .where(_hamming("sh_a", "sh_b") <= max_hamming)
+               .select(F.col("id_a").alias(id_col)).distinct())
     # survivors come from the SIGNATURE set (not new_docs): a doc with no
     # tokens gets no signature and is out of scope on both engine and
     # oracle sides — basing survivors on new_docs would let such a doc
@@ -564,16 +558,10 @@ def _simhash_sig_pairs(sigs: DataFrame, max_hamming: int,
     connected-components path of keep-canonical dedup (which clusters the
     signature graph directly)."""
     usig = (sigs.select(F.col("simhash").alias("_id"), "simhash").distinct())
-    keyed, packable = _simhash_combo_keyed(usig, max_hamming, n_blocks)
-    a, b = keyed.alias("a"), keyed.alias("b")
-    same_key = (F.col("a.v") == F.col("b.v")) if packable else (
-        (F.col("a.q") == F.col("b.q")) & (F.col("a.v") == F.col("b.v")))
-    sig_hamming = F.bit_count(F.col("_sga").bitwiseXOR(F.col("_sgb")))
-    return (a.join(b, same_key & (F.col("a._id") < F.col("b._id")))
-            .select(F.col("a._id").alias("_sga"),
-                    F.col("b._id").alias("_sgb"))
+    return (_hamming_pairs(usig, usig, max_hamming, n_blocks, self_join=True)
+            .select(F.col("id_a").alias("_sga"), F.col("id_b").alias("_sgb"))
             .distinct()
-            .withColumn("hamming", sig_hamming)
+            .withColumn("hamming", _hamming("_sga", "_sgb"))
             .where(F.col("hamming") <= max_hamming))
 
 
@@ -629,9 +617,7 @@ def simhash_near_pairs(signatures: DataFrame, max_hamming: int = 3,
                     & (F.col("x._id") < F.col("y._id")))
              .select(F.col("x._id").alias("id_a"),
                      F.col("y._id").alias("id_b"),
-                     F.bit_count(F.col("x.simhash")
-                                 .bitwiseXOR(F.col("y.simhash")))
-                     .alias("hamming")))
+                     _hamming("x.simhash", "y.simhash").alias("hamming")))
     return cross.unionByName(intra)
 
 
@@ -702,8 +688,9 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
     regardless of max_iters).
 
     stats: optional dict filled with {'input_edges', 'contracted_edges',
-    'rounds', 'changed_per_round'} — extra count() actions, so pass it only
-    when instrumenting (adversarial-skew evidence lives in
+    'rounds', 'changed_per_round'}, plus 'local_solve': True when union-find
+    solved the graph (contracted_edges stays None when the input gate
+    fired) — extra count() actions, so pass it only when instrumenting (adversarial-skew evidence lives in
     tests/test_pipeline_ops.py, scripts/cc_scale_point.py and
     BENCH/BASELINE.md).
 
@@ -727,24 +714,21 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
              ).persist(StorageLevel.MEMORY_AND_DISK)  # blocked join runs ONCE
     if not isinstance(edges.schema["src"].dataType, (IntegralType, StringType)):
         local_edge_cap = 0
-    if local_edge_cap > 0:
+    # the run record (``stats`` when given); its edge counts are actions, so
+    # they run only when a gate or the caller reads them
+    run = stats if stats is not None else {}
+    counted = stats is not None or local_edge_cap > 0
+    run.update(input_edges=edges.count() if counted else None,
+               contracted_edges=None, rounds=0, changed_per_round=[])
+    if local_edge_cap > 0 and run["input_edges"] <= local_edge_cap:
         # early gate on the INPUT graph: counting the persisted edge set
         # costs one cache scan (the contraction's groupBy would materialize
         # the same persist anyway), and when the whole pair graph fits the
         # local cap the contraction + loop machinery is skipped outright
-        n_edges = edges.count()
-        if stats is not None:
-            stats["input_edges"] = n_edges
-        if n_edges <= local_edge_cap:
-            sol = _local_union_find(edges.toPandas())
-            edges.unpersist()
-            if stats is not None:
-                stats.update({"contracted_edges": None, "rounds": 0,
-                              "changed_per_round": [], "local_solve": True})
-            id_t = edges.schema["src"].dataType
-            schema = StructType([StructField("_id", id_t, False),
-                                 StructField("cluster", id_t, False)])
-            return pairs.sparkSession.createDataFrame(sol, schema)
+        run["local_solve"] = True
+        labels = _solve_locally(edges)
+        edges.unpersist()
+        return labels
     # phase 1: contract v -> min(closed neighborhood); every node appears as
     # src (edges are bidirectional), so m covers every node exactly once
     m = (edges.groupBy("src").agg(F.min("dst").alias("_mn"))
@@ -757,34 +741,41 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
           .select(F.col("_ts").alias("src"), F.col("_td").alias("dst"))
           .where(F.col("src") != F.col("dst"))
           .distinct()).localCheckpoint()
-    if stats is not None:
-        if "input_edges" not in stats:
-            stats["input_edges"] = edges.count()
-        stats["contracted_edges"] = e2.count()
-        stats["rounds"] = 0
-        stats["changed_per_round"] = []
     # m and e2 are materialized (eager checkpoints) and nothing below reads
     # the raw edges again — release the data-scale blocks NOW, not at GC
     edges.unpersist()
-    # phase 2a: size-gated exact local solve of the CONTRACTED graph (see
-    # docstring; covers input > cap but contracted remainder <= cap). The
-    # gate is a count() of the already-checkpointed contracted edges (a
-    # metadata-cheap job — no row ever reaches the driver when the graph is
-    # big), and the fetch when it fits is one Arrow toPandas.
-    if local_edge_cap > 0:
-        n_e2 = (stats["contracted_edges"] if stats is not None
-                else e2.count())
-        if n_e2 <= local_edge_cap:
-            sol = _local_union_find(e2.toPandas())
-            if stats is not None:
-                stats["local_solve"] = True
-            id_t = e2.schema["src"].dataType
-            schema = StructType([StructField("_rep2", id_t, False),
-                                 StructField("_fc", id_t, False)])
-            final = pairs.sparkSession.createDataFrame(sol, schema)
-            return (m.join(final, m.rep == final._rep2, "left")
-                    .select("_id", F.coalesce("_fc", "rep").alias("cluster")))
-    # phase 2b: pointer-jumping min-label loop over the contracted graph
+    if counted:
+        run["contracted_edges"] = e2.count()
+    # phase 2: size-gated exact local solve of the CONTRACTED graph (see
+    # docstring; covers input > cap but contracted remainder <= cap), else
+    # the distributed loop. The gate is a count() of the already-checkpointed
+    # contracted edges (no row reaches the driver when the graph is big).
+    if local_edge_cap > 0 and run["contracted_edges"] <= local_edge_cap:
+        run["local_solve"] = True
+        labels = _solve_locally(e2)
+    else:
+        labels = _propagate_labels(e2, max_iters, run)
+    # compose: original node -> contraction rep -> final label (isolated
+    # reps — clique minima — are absent from the labels; they label themselves)
+    final = labels.select(F.col("_id").alias("_rep2"),
+                          F.col("cluster").alias("_fc"))
+    return (m.join(final, m.rep == final._rep2, "left")
+            .select("_id", F.coalesce("_fc", "rep").alias("cluster")))
+
+
+def _solve_locally(edges: DataFrame) -> DataFrame:
+    """(_id, cluster) of a small (src, dst) edge set: one Arrow toPandas,
+    union-find on the driver, back as a DataFrame of the edge id type."""
+    id_t = edges.schema["src"].dataType
+    schema = StructType([StructField("_id", id_t, False),
+                         StructField("cluster", id_t, False)])
+    return edges.sparkSession.createDataFrame(
+        _local_union_find(edges.toPandas()), schema)
+
+
+def _propagate_labels(e2: DataFrame, max_iters: int, run: dict) -> DataFrame:
+    """(_id, cluster) of the contracted (src, dst) graph by the
+    pointer-jumping min-label loop; counts rounds into ``run``."""
     labels = (e2.select(F.col("src").alias("_id")).distinct()
               .withColumn("cluster", F.col("_id"))).localCheckpoint()
     changed = labels.count()  # nonzero iff any contracted edges remain
@@ -804,8 +795,7 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
     for _ in range(max_iters):
         if changed == 0:
             break
-        if stats is not None:
-            stats["rounds"] += 1
+        run["rounds"] += 1
         nmin = (e2.join(labels, e2.dst == labels._id)
                 .groupBy("src").agg(F.min("cluster").alias("nmin")))
         jump = labels.select(F.col("_id").alias("_jid"),
@@ -818,8 +808,7 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
                                ).alias("_chg"))
                       ).coalesce(loop_parts).localCheckpoint()
         changed = new_labels.where(F.col("_chg")).count()
-        if stats is not None:
-            stats["changed_per_round"].append(changed)
+        run["changed_per_round"].append(changed)
         labels.unpersist()
         labels = new_labels.drop("_chg")
     if changed != 0:
@@ -827,12 +816,7 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
             f"near_dup_clusters did not converge within max_iters="
             f"{max_iters} (labels still changing); the component "
             f"diameter exceeds the cap — raise max_iters")
-    # compose: original node -> contraction rep -> final label (isolated
-    # reps — clique minima — are absent from the loop; they label themselves)
-    final = labels.select(F.col("_id").alias("_rep2"),
-                          F.col("cluster").alias("_fc"))
-    return (m.join(final, m.rep == final._rep2, "left")
-            .select("_id", F.coalesce("_fc", "rep").alias("cluster")))
+    return labels
 
 
 def dedup_keep_canonical(df: DataFrame, pairs: DataFrame,
@@ -912,24 +896,28 @@ sh{suffix} AS (
 ),
 shh{suffix} AS (
   SELECT DISTINCT _id,
-         CAST(concat('0x', substr(md5(s), 1, 15)) AS UBIGINT) AS h
+         {_duck_base_hash('s')} AS h
   FROM sh{suffix}
 )"""
+
+
+def _duck_cap(src: str, name: str, cap: int | None) -> tuple[str, str]:
+    """DuckDB twin of ``_cap_doc_freq``: (the ``name`` CTE text that keeps
+    the (_id, h) rows of ``src`` whose h is in at most ``cap`` documents,
+    the CTE to read from). No cap: no CTE, read ``src``."""
+    if cap is None:
+        return "", src
+    return f""",
+{name} AS (
+  SELECT _id, h FROM {src}
+  WHERE h IN (SELECT h FROM {src} GROUP BY h HAVING count(*) <= {cap})
+)""", name
 
 
 def ngram_jaccard_oracle_sql(table: str, id_col: str, text_col: str,
                              shingle_k: int, threshold: float,
                              max_shingle_df: int | None = None) -> str:
-    if max_shingle_df is not None:
-        capped = f""",
-capped AS (
-  SELECT _id, h FROM shh
-  WHERE h IN (SELECT h FROM shh GROUP BY h HAVING count(*) <= {max_shingle_df})
-)"""
-        src = "capped"
-    else:
-        capped = ""
-        src = "shh"
+    capped, src = _duck_cap("shh", "capped", max_shingle_df)
     return f"""
 WITH {_duck_shingle_hashes(table, id_col, text_col, shingle_k)}{capped},
 sizes AS (SELECT _id, count(*) AS n FROM {src} GROUP BY _id),
@@ -957,7 +945,7 @@ def _duck_simhash_sig(table: str, id_col: str, text_col: str,
     return f"""
 thh{suffix} AS (
   SELECT DISTINCT {id_col} AS _id,
-         CAST(concat('0x', substr(md5(t), 1, 15)) AS UBIGINT) AS h
+         {_duck_base_hash('t')} AS h
   FROM (SELECT {id_col}, unnest(string_split({text_col}, ' ')) AS t FROM {table})
 ),
 votes{suffix} AS (

@@ -821,6 +821,15 @@ def probe_query(family: str, table: str, id_expr: str, probes: list[int],
     return run, oracle(table, id_expr, probes, where=where, **params)
 
 
+def _two_groups(agg: DataFrame, group_a: str, group_b: str) -> DataFrame:
+    """One row (_sa, _sb): the ``sketch`` blobs of groups ``group_a`` and
+    ``group_b`` of a per-``_g`` sketch aggregate."""
+    def blob(g: str) -> Column:
+        return F.first(F.when(F.col("_g") == g, F.col("sketch")),
+                       ignorenulls=True)
+    return agg.agg(blob(group_a).alias("_sa"), blob(group_b).alias("_sb"))
+
+
 def kmv_difference_query(table: str, id_expr: str, group_col: str,
                          group_a: str, group_b: str, k: int = 256) -> Proof:
     """Set-difference estimate |A ∖ B| between two groups' id sets — the
@@ -835,12 +844,7 @@ def kmv_difference_query(table: str, id_expr: str, group_col: str,
                       F.expr(id_expr).cast("long").alias("_id")))
         agg = sketch_aggregate(df, "_id", ["_g"],
                                kmv_adapter(k, hash_mode="splitmix"))
-        both = agg.agg(
-            F.first(F.when(F.col("_g") == group_a, F.col("sketch")),
-                    ignorenulls=True).alias("_sa"),
-            F.first(F.when(F.col("_g") == group_b, F.col("sketch")),
-                    ignorenulls=True).alias("_sb"))
-        return both.select(
+        return _two_groups(agg, group_a, group_b).select(
             F.round(kmv_difference("_sa", "_sb"), 2).alias("est_diff"))
     return run, kmv_difference_oracle_sql(table, id_expr, group_col,
                                           group_a, group_b, k)
@@ -874,12 +878,7 @@ def kmv_surface_query(table: str, id_expr: str, group_col: str,
             F.lit("by_event_type").alias("proof"),
             F.col("_g").alias("key"),
             F.round(kmv_estimate("sketch"), 2).cast("double").alias("est"))
-        both = agg.agg(
-            F.first(F.when(F.col("_g") == group_a, F.col("sketch")),
-                    ignorenulls=True).alias("_sa"),
-            F.first(F.when(F.col("_g") == group_b, F.col("sketch")),
-                    ignorenulls=True).alias("_sb"))
-        b = both.select(
+        b = _two_groups(agg, group_a, group_b).select(
             F.lit("common_users_purchase_click").alias("proof"),
             F.lit("-").alias("key"),
             F.round(kmv_intersection("_sa", "_sb"), 2)

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..kernel.bits import splitmix64
+from .dedup import _base_hash, _duck_base_hash
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -249,8 +250,6 @@ def ivf_centroids(df: DataFrame, n_centroids: int,
     At real scale you would k-means-refine these seeds; the seed selection
     itself is already the deterministic, shuffle-light part (TakeOrdered of
     n_centroids rows)."""
-    from .dedup import _base_hash
-
     hashed = df.select(F.col(id_col).alias("_cid"),
                        F.col(vec_col).alias("cvec"),
                        _base_hash(F.col(id_col).cast("string")).alias("_h"))
@@ -335,16 +334,17 @@ def ivf_topk_oracle_sql(table: str, probe_ids: list[int], k: int,
     cos_dc = (f"{dot(f'd.{vec_col}', 'ct.cv')} / "
               f"({norm(f'd.{vec_col}')} * {norm('ct.cv')})")
     cos_pc = (f"{dot('p.pv', 'ct.cv')} / ({norm('p.pv')} * {norm('ct.cv')})")
+    seed_order = _duck_base_hash(f"CAST({id_col} AS VARCHAR)")
     cos_dp = (f"round({dot(f'd.{vec_col}', 'p.pv')} / "
               f"({norm(f'd.{vec_col}')} * {norm('p.pv')}), 6)")
     return f"""
 WITH cents AS (
   SELECT row_number() OVER (
-           ORDER BY CAST(concat('0x', substr(md5(CAST({id_col} AS VARCHAR)), 1, 15)) AS UBIGINT),
+           ORDER BY {seed_order},
                     {id_col}) - 1 AS c,
          CAST({vec_col} AS DOUBLE[]) AS cv
   FROM {table}
-  ORDER BY CAST(concat('0x', substr(md5(CAST({id_col} AS VARCHAR)), 1, 15)) AS UBIGINT), {id_col}
+  ORDER BY {seed_order}, {id_col}
   LIMIT {n_centroids}
 ),
 assigned AS (

@@ -3,16 +3,16 @@
 All hot paths are built-in Spark SQL functions (JVM, whole-stage codegen) so
 they run at scan speed on 100 TB; every operator has an exact DuckDB oracle.
 
-* token counting — whitespace tokens.
 * quality scoring — length / punctuation ratio / mean token length,
-  combined into a [0,1] score.
-* language ID — stopword-hit heuristic over a small per-language marker list
-  (argmax of per-language hit counts; deterministic tiebreak by language
-  code). Not a real langid model — a deterministic, cheap heuristic of the
-  kind used for fast pre-filtering.
-* fingerprinting — md5 content fingerprint (exact dedup key) plus a 64-bit
-  rolling-hash winnowing fingerprint in the kernel (tests) — the md5 path is
-  the oracled one.
+  combined into a [0,1] score (``quality_score`` alone, or fused into
+  ``text_features``; one formula, ``_quality``, serves both).
+* feature extraction (``text_features``) — token and sub-token counts, the
+  quality parts, a stopword-hit language guess (argmax of per-language
+  marker hits, deterministic tiebreak by language code; not a real langid
+  model, a cheap heuristic of the kind used for fast pre-filtering) and
+  the md5 content fingerprint (exact dedup key).
+* winnowing fingerprints (SIGMOD'03), line-level boilerplate removal and
+  intra-document repetition metrics.
 """
 
 from __future__ import annotations
@@ -36,29 +36,28 @@ LANG_MARKERS: dict[str, list[str]] = {
 _PUNCT_CHARS = ".,!?;:"
 
 
-def token_count(text: Column) -> Column:
-    return F.size(F.split(text, " "))
+def _quality(n: Column, ntok: Column, punct: Column) -> tuple[Column, Column, Column]:
+    """(punct_ratio, mean_token_len, quality) from the text length, the
+    " "-split token count and the punctuation count, all unrounded.
 
-
-def punct_ratio(text: Column) -> Column:
-    return (F.length(text) - F.length(F.translate(text, _PUNCT_CHARS, ""))) / \
-        F.greatest(F.length(text), F.lit(1))
-
-
-def mean_token_length(text: Column) -> Column:
-    toks = F.split(text, " ")
-    return F.length(F.regexp_replace(text, " ", "")) / F.greatest(F.size(toks), F.lit(1))
+    Mean token length uses the identity length-without-spaces = length -
+    (n_tokens - 1): splitting on a single space yields exactly #spaces + 1
+    tokens (consecutive spaces produce empty tokens), so it needs no second
+    regex pass and equals length(regexp_replace(text, ' ', ''))."""
+    pr = punct / F.greatest(n, F.lit(1))
+    mtl = (n - (ntok - 1)) / F.greatest(ntok, F.lit(1))
+    len_ok = F.when((n >= 100) & (n <= 20000), 1.0).when(n >= 20, 0.5).otherwise(0.0)
+    punct_ok = F.when(pr <= 0.1, 1.0).otherwise(0.0)
+    mtl_ok = F.when((mtl >= 2.0) & (mtl <= 12.0), 1.0).otherwise(0.0)
+    return pr, mtl, (len_ok + punct_ok + mtl_ok) / 3.0
 
 
 def quality_score(text: Column) -> Column:
     """Deterministic [0,1] quality heuristic: length band + low punctuation +
     sane mean token length."""
     n = F.length(text)
-    len_ok = F.when((n >= 100) & (n <= 20000), 1.0).when(n >= 20, 0.5).otherwise(0.0)
-    punct_ok = F.when(punct_ratio(text) <= 0.1, 1.0).otherwise(0.0)
-    mtl = mean_token_length(text)
-    mtl_ok = F.when((mtl >= 2.0) & (mtl <= 12.0), 1.0).otherwise(0.0)
-    return (len_ok + punct_ok + mtl_ok) / 3.0
+    punct = n - F.length(F.translate(text, _PUNCT_CHARS, ""))
+    return _quality(n, F.size(F.split(text, " ")), punct)[2]
 
 
 def _lang_id_from_tokens(toks: Column) -> Column:
@@ -87,30 +86,16 @@ def _lang_id_from_tokens(toks: Column) -> Column:
     return F.when(best["h"] > 0, best["c"]).otherwise(F.lit("und"))
 
 
-def lang_id(text: Column) -> Column:
-    return _lang_id_from_tokens(F.split(F.lower(text), " "))
-
-
-def content_fingerprint(text: Column) -> Column:
-    """Exact content fingerprint (dedup key): md5 hex of the text."""
-    return F.md5(text)
-
-
 def text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """One-pass feature extraction: everything a quality-filter stage needs.
 
     Fused: the expensive intermediates (token split, lowercase token split,
     punctuation strip) are each computed ONCE in a first projection and
-    referenced by every downstream feature — the composable one-off helpers
-    above recompute them per feature, which at scan scale multiplies the
-    regex cost several-fold (measured ~3x on the driver bench). Spark's
+    referenced by every downstream feature — per-feature helpers would
+    recompute them, which at scan scale multiplies the regex cost
+    several-fold (measured ~3x on the driver bench). Spark's
     CollapseProject keeps the split because the aliased expressions are
-    non-cheap and multiply referenced.
-
-    Identity used for mean token length: split-on-single-space yields
-    exactly (#spaces + 1) tokens (consecutive spaces produce empty tokens),
-    so length-without-spaces = length - (n_tokens - 1) — one fewer regex,
-    same value as length(regexp_replace(text, ' ', ''))."""
+    non-cheap and multiply referenced."""
     t = F.col(text_col)
     base = df.select(
         "*",
@@ -123,11 +108,7 @@ def text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     n = F.col("_len")
     ntok = F.size("_toks")
     punct = F.col("_punct")
-    pr = punct / F.greatest(n, F.lit(1))
-    mtl = (n - (ntok - 1)) / F.greatest(ntok, F.lit(1))
-    len_ok = F.when((n >= 100) & (n <= 20000), 1.0).when(n >= 20, 0.5).otherwise(0.0)
-    punct_ok = F.when(pr <= 0.1, 1.0).otherwise(0.0)
-    mtl_ok = F.when((mtl >= 2.0) & (mtl <= 12.0), 1.0).otherwise(0.0)
+    pr, mtl, quality = _quality(n, ntok, punct)
     out = base.select(
         "*",
         n.cast("long").alias("text_len"),
@@ -135,9 +116,9 @@ def text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
         (ntok + F.col("_digruns") + punct).cast("long").alias("n_subtokens"),
         F.round(pr, 6).alias("punct_ratio"),
         F.round(mtl, 6).alias("mean_token_len"),
-        F.round((len_ok + punct_ok + mtl_ok) / 3.0, 6).alias("quality"),
+        F.round(quality, 6).alias("quality"),
         _lang_id_from_tokens(F.col("_ltoks")).alias("lang_pred"),
-        content_fingerprint(t).alias("fingerprint"),
+        F.md5(t).alias("fingerprint"),
     )
     return out.drop("_len", "_toks", "_ltoks", "_punct", "_digruns")
 
@@ -153,7 +134,7 @@ def text_features_oracle_sql(table: str, id_col: str) -> str:
             f"len(list_filter(string_split(lower(text), ' '), t -> t IN ({lst})))"
             f" AS hits_{code}")
     hits_cols = ",\n       ".join(marker_cases)
-    # argmax with code-order tiebreak, matching lang_id()
+    # argmax with code-order tiebreak, matching _lang_id_from_tokens
     best = "'und'"
     best_hits = "0"
     for code in sorted(LANG_MARKERS):

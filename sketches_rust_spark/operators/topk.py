@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _base_hash, _duck_base_hash
+
 
 def _topk_round_plan(ranked_local: DataFrame, k: int, limit: int) -> DataFrame:
     """One pruning round's lazy plan: candidates' exact top-k with the
@@ -161,7 +163,6 @@ def topk_cms(df: DataFrame, item_col: str, k: int,
     """
     from ..functions.sketch_udafs import (
         cms_adapter, cms_point_estimate, sketch_aggregate)
-    from .dedup import _base_hash
 
     hashed = df.select(F.col(item_col).cast("string").alias("item"))
     hashed = hashed.withColumn("_h", _base_hash(F.col("item")))
@@ -193,7 +194,7 @@ def topk_cms_oracle_sql(table: str, item_expr: str, k: int,
     return f"""
 WITH hashed AS (
   SELECT CAST({item_expr} AS VARCHAR) AS item,
-         CAST(concat('0x', substr(md5(CAST({item_expr} AS VARCHAR)), 1, 15)) AS UBIGINT) AS h
+         {_duck_base_hash(f'CAST({item_expr} AS VARCHAR)')} AS h
   FROM {table}
 ),
 cells AS (

@@ -620,7 +620,11 @@ def test_simhash_wide_blocking_cuts_candidates(spark):
     Manku n_blocks=6 wide-key blocking must cut candidates by >10x AND
     return identical final pairs (blocking is lossless by pigeonhole)."""
     from sketches_rust_spark.operators.dedup import (
-        simhash_candidates, simhash_near_pairs)
+        _hamming_pairs, simhash_near_pairs)
+
+    def candidates(n_blocks):
+        return (_hamming_pairs(sigs, sigs, 3, n_blocks, self_join=True)
+                .select("id_a", "id_b").distinct().count())
 
     n = 200
     fixed_low = 0x2AAA  # shared low 16 bits -> single-block bucket is hot
@@ -628,8 +632,8 @@ def test_simhash_wide_blocking_cuts_candidates(spark):
             for i in range(n)]
     sigs = spark.createDataFrame(rows, ["_id", "simhash"]).cache()
     try:
-        single = simhash_candidates(sigs, max_hamming=3, n_blocks=4).count()
-        multi = simhash_candidates(sigs, max_hamming=3, n_blocks=6).count()
+        single = candidates(4)
+        multi = candidates(6)
         assert single == n * (n - 1) // 2  # hot block: all-pairs candidates
         assert multi < single / 10
         p_single = {(r["id_a"], r["id_b"], r["hamming"]) for r in
@@ -637,6 +641,46 @@ def test_simhash_wide_blocking_cuts_candidates(spark):
         p_multi = {(r["id_a"], r["id_b"], r["hamming"]) for r in
                    simhash_near_pairs(sigs, max_hamming=3, n_blocks=6).collect()}
         assert p_single == p_multi
+    finally:
+        sigs.unpersist()
+
+
+@pytest.mark.parametrize("max_hamming,n_blocks", [(3, 6), (0, 1), (0, 2)])
+def test_blocked_join_key_shapes_match_all_pairs(spark, max_hamming, n_blocks):
+    """The shared blocked join under each combo-key shape — packed long
+    (3, 6), single-block long (0, 1) and block array (0, 2) — equals a
+    Python all-pairs Hamming reference, in the batch pair search and in the
+    incremental shard-vs-corpus filter."""
+    from sketches_rust_spark.operators.dedup import (
+        incremental_simhash_filter, simhash_near_pairs, simhash_signatures)
+
+    # exact duplicates (Hamming 0) and one-token variants of a few templates
+    rows = [(i, f"tpl{i % 5} shared words mostly common here "
+             + ("" if i % 3 else f"tail{i % 2}")) for i in range(30)]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    sigs = simhash_signatures(df).cache()
+    try:
+        sp = {r["_id"]: r["simhash"] for r in sigs.collect()}
+
+        def ham(a, b):
+            return bin((sp[a] ^ sp[b]) & (2 ** 64 - 1)).count("1")
+
+        ids = sorted(sp)
+        want = {(a, b, ham(a, b)) for i, a in enumerate(ids)
+                for b in ids[i + 1:] if ham(a, b) <= max_hamming}
+        assert any(h == 0 for _, _, h in want)
+        got = {(r["id_a"], r["id_b"], r["hamming"]) for r in
+               simhash_near_pairs(sigs, max_hamming, n_blocks).collect()}
+        assert got == want
+
+        new = df.where("doc_id % 4 = 0")
+        corpus = sigs.where("_id % 4 != 0")
+        dup = {a for a in ids if a % 4 == 0
+               and any(ham(a, b) <= max_hamming for b in ids if b % 4)}
+        kept = {r["doc_id"] for r in incremental_simhash_filter(
+            new, corpus, max_hamming, n_blocks).collect()}
+        assert kept == {a for a in ids if a % 4 == 0} - dup
+        assert dup and kept
     finally:
         sigs.unpersist()
 
@@ -956,6 +1000,27 @@ def test_python_shingler_matches_expression_path(spark, sf_dir):
     new = {(r["_id"], r["h"]) for r in
            shingle_hashes(documents, "doc_id", "text", k).collect()}
     assert old == new and len(old) > 0
+
+
+def test_portable_base_hash_forms_agree(spark):
+    """The Spark, Python and DuckDB forms of the md5[:15] base hash give
+    the same 60-bit value on ASCII, empty and non-ASCII strings."""
+    import duckdb
+    from sketches_rust_spark.operators.dedup import (
+        _base_hash, _duck_base_hash, _py_base_hash)
+
+    words = ["the quick brown fox", "", "naïve café", "日本語のテキスト",
+             "emoji \U0001F600 tail"]
+    df = spark.createDataFrame([(i, w) for i, w in enumerate(words)],
+                               ["i", "w"])
+    got_spark = [r["h"] for r in df.orderBy("i").select(
+        _base_hash(F.col("w")).alias("h")).collect()]
+    con = duckdb.connect()
+    got_duck = [con.execute(f"SELECT {_duck_base_hash('?')}", [w]).fetchone()[0]
+                for w in words]
+    want = [_py_base_hash(w) for w in words]
+    assert got_spark == want and got_duck == want
+    assert all(0 <= h < 1 << 60 for h in want)
 
 
 def test_cc_local_gate_only_for_integral_or_string_ids(spark):

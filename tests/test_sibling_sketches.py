@@ -460,6 +460,27 @@ def test_tdigest_decode_rejects_malformed_blobs():
             TDigest.decode(blob)
     assert TDigest.decode(good).encode() == good
 
+    # the header's min/max: finite, min <= max, around every mean (a NaN
+    # min would make quantile(0) NaN and vanish from min() in a merge)
+    def with_min_max(blob: bytes, mn: float, mx: float) -> bytes:
+        buf = bytearray(blob)
+        struct.pack_into("<dd", buf, 16, mn, mx)
+        return bytes(buf)
+
+    inf, nan = float("inf"), float("nan")
+    for mn, mx in ((50.0, -50.0), (nan, 10.0), (1.0, nan), (-inf, 10.0),
+                   (1.0, inf), (5.0, 10.0), (1.0, 5.0), (10.0, 1.0)):
+        with pytest.raises(ValueError, match="min/max"):
+            TDigest.decode(with_min_max(good, mn, mx))
+    # a wider [min, max] than the means is fine (min/max are exact values,
+    # centroid means are averages)
+    assert TDigest.decode(with_min_max(good, 0.0, 20.0)).quantile(0.0) == 0.0
+    empty = TDigest(100).encode()
+    assert TDigest.decode(empty).total_weight() == 0.0
+    for mn, mx in ((0.0, 0.0), (inf, inf), (nan, nan), (-inf, inf)):
+        with pytest.raises(ValueError, match="min/max"):
+            TDigest.decode(with_min_max(empty, mn, mx))
+
     # means are NOT required sorted: merging tie-heavy digests leaves
     # equal-valued centroids whose weighted means differ in the last ulp
     rng = np.random.default_rng(0)
