@@ -1,11 +1,11 @@
 #!/usr/bin/env python
 """spark-submit entrypoint: checkpointed grouped DDSketch build over the
-pages table (or any parquet/Iceberg table with the input_hint schema).
+pages table (or any parquet input with the input_hint schema).
 
 Packaging:
     cd /root/repo && zip -r /tmp/sketches_rust_spark.zip sketches_rust_spark
     spark-submit --py-files /tmp/sketches_rust_spark.zip \\
-        jobs/sketch_job.py --input <path-or-iceberg-table> \\
+        jobs/sketch_job.py --input <parquet-path> \\
         --value-expr 'length(text)' --keys lang,day \\
         --checkpoint /data/ckpt --alpha 0.01 --shards 64
 
@@ -27,8 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True,
-                    help="parquet directory or (with --catalog iceberg) table name")
-    ap.add_argument("--catalog", default="parquet", choices=["parquet", "iceberg"])
+                    help="parquet directory or single parquet file")
     ap.add_argument("--value-expr", default="length(text)")
     ap.add_argument("--keys", default="lang")
     ap.add_argument("--checkpoint", required=True)

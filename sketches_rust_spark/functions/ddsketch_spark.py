@@ -256,12 +256,10 @@ def make_build_udaf(config: SketchConfig = DEFAULT_CONFIG):
 
 def register_sql_functions(spark: SparkSession, config: SketchConfig = DEFAULT_CONFIG) -> None:
     """Register the sketch function surface for ``spark.sql`` use."""
-    spark.udf.register("ddsketch_quantile", ddsketch_quantile)
-    spark.udf.register("ddsketch_count", ddsketch_count)
-    spark.udf.register("ddsketch_sum", ddsketch_sum)
-    spark.udf.register("ddsketch_min", ddsketch_min)
-    spark.udf.register("ddsketch_max", ddsketch_max)
-    spark.udf.register("ddsketch_avg", ddsketch_avg)
+    for udf in [ddsketch_quantile, ddsketch_count, ddsketch_sum, ddsketch_min,
+                ddsketch_max]:
+        spark.udf.register(udf.__name__, udf)
+    spark.udf.register("ddsketch_avg", ddsketch_avg)  # named ddsketch_average
     spark.udf.register("ddsketch_merge", make_merge_udaf(config))
     spark.udf.register("ddsketch_build", make_build_udaf(config))
 

@@ -54,6 +54,15 @@ def log_mapping_params(alpha: float) -> tuple[float, float, float]:
     return mapping_params(alpha, "log")
 
 
+def group_sql(group_cols: list[str]) -> tuple[str, str, str, str]:
+    """(select list, select prefix, GROUP BY, PARTITION BY) texts of the
+    optional group columns; all four are empty when there are none."""
+    if not group_cols:
+        return "", "", "", ""
+    gsel = ", ".join(group_cols)
+    return gsel, f"{gsel}, ", f"GROUP BY {gsel}", f"PARTITION BY {gsel}"
+
+
 def _log_expr(mult: float, layout: str, value_sql: str = "v") -> str:
     """mapping._log(|value|) * multiplier as a SQL double expression."""
     if layout == "log":
@@ -129,10 +138,7 @@ def ddsketch_quantile_oracle_sql(
             "(a 0-bin clamp would silently fold every bucket into one)")
     mult, ra, min_indexed = mapping_params(alpha, layout)
     side, idx = _bucket_exprs(mult, min_indexed, layout=layout)
-    gsel = ", ".join(group_cols)
-    gpre = f"{gsel}, " if group_cols else ""
-    gby = f"GROUP BY {gsel}" if group_cols else ""
-    part = f"PARTITION BY {gsel}" if group_cols else ""
+    gsel, gpre, gby, part = group_sql(group_cols)
     wh = f"AND ({where})" if where else ""
     if weight_expr:
         wsel = f"CAST({weight_expr} AS DOUBLE) AS w"
@@ -152,7 +158,7 @@ def ddsketch_quantile_oracle_sql(
         collapse_ctes = ""
         walk_src = "buckets"
     else:
-        spart = f"PARTITION BY {gsel + ', ' if group_cols else ''}side"
+        spart = f"PARTITION BY {gpre}side"
         if collapse == "lowest":
             clamp = f"greatest(idx, max(idx) OVER ({spart}) - {max_bins - 1})"
         elif collapse == "highest":
@@ -204,8 +210,7 @@ def ddsketch_stats_oracle_sql(
     """count (exact), and sketch-estimated sum/avg/min/max in SQL."""
     mult, ra, min_indexed = log_mapping_params(alpha)
     side, idx = _bucket_exprs(mult, min_indexed)
-    gsel = ", ".join(group_cols)
-    gpre = f"{gsel}, " if group_cols else ""
+    gsel, gpre, gby, _ = group_sql(group_cols)
     wh = f"AND ({where})" if where else ""
     bucket_value = _bucket_value(mult, ra)
     return f"""
@@ -229,5 +234,5 @@ SELECT {gpre}
        round(min(bv), {ROUND_DIGITS}) AS min_est,
        round(max(bv), {ROUND_DIGITS}) AS max_est
 FROM valued
-{f'GROUP BY {gsel}' if group_cols else ''}
+{gby}
 """

@@ -1,4 +1,4 @@
-"""DuckDB-oracle SQL for the hash-based sibling sketches (HLL, CMS, Bloom).
+"""DuckDB-oracle SQL for the hashed sibling sketches (HLL, KMV, CMS, Bloom).
 
 These sketches are deterministic functions of (data, hash, parameters). The
 engine hashes with SplitMix64 — chosen because it is expressible in portable
@@ -11,6 +11,12 @@ counters / bit positions in DuckDB:
 * everything else is integer ops, so register contents match bit-for-bit and
   estimates match after shared rounding.
 
+Each rule is written once: ``_hashed`` is the id hash, ``_km_cell`` the
+Kirsch-Mitzenmacher cell of CMS rows and Bloom bits (kernel.bits.km_cells;
+``operators/topk.py`` reuses it), ``_probe_hashes`` the hashed probe list,
+``_theta_ctes`` the per-side theta of both KMV set oracles, and
+``oracle.group_sql`` the optional group-column clauses.
+
 t-digest and KLL are intentionally absent: their state depends on input
 order (centroid merging / compaction coin flips), so they get rows-only
 driver checks plus error-bound pytest coverage instead.
@@ -19,6 +25,7 @@ driver checks plus error-bound pytest coverage instead.
 from __future__ import annotations
 
 from ..kernel.hll import _alpha
+from .oracle import group_sql
 
 _M64 = "18446744073709551616"
 
@@ -55,19 +62,42 @@ smf AS (SELECT * EXCLUDE a, 64 - bit_count(a) AS clz FROM (SELECT * EXCLUDE a, a
 """
 
 
+def _hashed(id_expr: str) -> str:
+    """SplitMix64 of an id expression cast to UBIGINT: the engine's
+    ``hash_mode='splitmix'`` hash of the same id."""
+    return splitmix64_sql(f"CAST({id_expr} AS UBIGINT)")
+
+
+# Kirsch-Mitzenmacher halves of hash column h (kernel.bits.km_cells)
+_LO, _HI = "h & 4294967295", "(h >> 32) | 1"
+# one row r.i per CMS row / Bloom hash function
+_ROWS = "(SELECT unnest(range(0, {n})) AS i) r"
+
+
+def _km_cell(mod: int, lo: str = _LO, hi: str = _HI) -> str:
+    """Cell r.i of hash column h: (lo + r.i*hi) mod ``mod``, in HUGEINT so
+    the product cannot wrap — kernel.bits.km_cells in SQL."""
+    return (f"CAST((CAST({lo} AS HUGEINT) + CAST(r.i AS HUGEINT) * "
+            f"CAST({hi} AS HUGEINT)) % {mod} AS BIGINT)")
+
+
+def _probe_hashes(probes: list[int]) -> str:
+    """(probe, h) rows for a fixed integer probe list."""
+    probes_sql = ", ".join(str(int(x)) for x in probes)
+    return (f"SELECT probe, {_hashed('probe')} AS h FROM "
+            f"(SELECT unnest([{probes_sql}]) AS probe)")
+
+
 def hll_oracle_sql(table: str, id_expr: str, group_cols: list[str], p: int,
                    round_digits: int = 2, where: str = "") -> str:
     """HLL estimate per group, register-identical to the engine."""
     m = 1 << p
     alpha = _alpha(m)
-    gsel = ", ".join(group_cols)
-    gpre = f"{gsel}, " if group_cols else ""
-    gby = f"GROUP BY {gsel}" if group_cols else ""
+    _, gpre, gby, _ = group_sql(group_cols)
     wh = f"WHERE ({where})" if where else ""
-    h = splitmix64_sql(f"CAST({id_expr} AS UBIGINT)")
     return f"""
 WITH hashed AS (
-  SELECT {gpre}{h} AS h FROM {table} {wh}
+  SELECT {gpre}{_hashed(id_expr)} AS h FROM {table} {wh}
 ),
 bw AS (
   SELECT {gpre}h >> {64 - p} AS bucket,
@@ -97,15 +127,11 @@ def kmv_oracle_sql(table: str, id_expr: str, group_cols: list[str], k: int,
     """KMV distinct estimate per group, retained-hash-set-identical to the
     engine: bottom-k of the distinct SplitMix64 hashes; exact count below k,
     else (k-1)*2^64/h_(k) with the same double arithmetic order."""
-    gsel = ", ".join(group_cols)
-    gpre = f"{gsel}, " if group_cols else ""
-    gby = f"GROUP BY {gsel}" if group_cols else ""
-    part = f"PARTITION BY {gsel}" if group_cols else ""
+    _, gpre, gby, part = group_sql(group_cols)
     wh = f"WHERE ({where})" if where else ""
-    h = splitmix64_sql(f"CAST({id_expr} AS UBIGINT)")
     return f"""
 WITH hashed AS (
-  SELECT DISTINCT {gpre}{h} AS h FROM {table} {wh}
+  SELECT DISTINCT {gpre}{_hashed(id_expr)} AS h FROM {table} {wh}
 ),
 rk AS (
   SELECT {gpre}h, row_number() OVER ({part} ORDER BY h) AS r FROM hashed
@@ -123,20 +149,16 @@ FROM agg
 """
 
 
-def kmv_intersection_oracle_sql(table: str, id_expr: str, group_col: str,
-                                group_a: str, group_b: str, k: int,
-                                round_digits: int = 2) -> str:
-    """Theta-sketch intersection estimate between two groups' id sets,
-    arithmetic-identical to KMV.intersection_estimate: theta = min of the
-    two k-th smallest hashes (2^64 when below capacity), count common
-    retained hashes below theta, scale by 2^64/theta."""
-    h = splitmix64_sql(f"CAST({id_expr} AS UBIGINT)")
-    two64 = "CAST(18446744073709551616 AS HUGEINT)"
-
+def _theta_ctes(table: str, id_expr: str, group_col: str, group_a: str,
+                group_b: str, k: int) -> str:
+    """The CTEs both theta-set oracles share, as KMV.intersection_estimate
+    and KMV.difference_estimate build them: per side, its distinct hashes
+    (h_), their ranks (r_) and its theta (t_: the k-th smallest hash, 2^64
+    below capacity); then th, the smaller of the two thetas."""
     def side(name: str, gval: str) -> str:
         return f"""
 h_{name} AS (
-  SELECT DISTINCT {h} AS h FROM {table} WHERE {group_col} = '{gval}'
+  SELECT DISTINCT {_hashed(id_expr)} AS h FROM {table} WHERE {group_col} = '{gval}'
 ),
 r_{name} AS (
   SELECT h, row_number() OVER (ORDER BY h) AS r FROM h_{name}
@@ -144,13 +166,23 @@ r_{name} AS (
 t_{name} AS (
   SELECT CASE WHEN count(*) >= {k}
           THEN CAST(max(CASE WHEN r = {k} THEN h END) AS HUGEINT)
-          ELSE {two64} END AS theta
+          ELSE CAST({_M64} AS HUGEINT) END AS theta
   FROM r_{name}
 )"""
 
+    return (f"{side('a', group_a).lstrip()},{side('b', group_b)},\n"
+            "th AS (SELECT least(t_a.theta, t_b.theta) AS theta FROM t_a, t_b)")
+
+
+def kmv_intersection_oracle_sql(table: str, id_expr: str, group_col: str,
+                                group_a: str, group_b: str, k: int,
+                                round_digits: int = 2) -> str:
+    """Theta-sketch intersection estimate between two groups' id sets,
+    arithmetic-identical to KMV.intersection_estimate: theta = min of the
+    two k-th smallest hashes (2^64 when below capacity), count common
+    retained hashes below theta, scale by 2^64/theta."""
     return f"""
-WITH {side('a', group_a).lstrip()},{side('b', group_b)},
-th AS (SELECT least(t_a.theta, t_b.theta) AS theta FROM t_a, t_b),
+WITH {_theta_ctes(table, id_expr, group_col, group_a, group_b, k)},
 common AS (
   SELECT count(*) AS c
   FROM r_a JOIN r_b USING (h), th
@@ -169,27 +201,8 @@ def kmv_difference_oracle_sql(table: str, id_expr: str, group_col: str,
     sets, arithmetic-identical to KMV.difference_estimate: theta = min of
     the two k-th smallest hashes (2^64 below capacity), count retained A
     hashes below theta absent from B's retained set, scale by 2^64/theta."""
-    h = splitmix64_sql(f"CAST({id_expr} AS UBIGINT)")
-    two64 = "CAST(18446744073709551616 AS HUGEINT)"
-
-    def side(name: str, gval: str) -> str:
-        return f"""
-h_{name} AS (
-  SELECT DISTINCT {h} AS h FROM {table} WHERE {group_col} = '{gval}'
-),
-r_{name} AS (
-  SELECT h, row_number() OVER (ORDER BY h) AS r FROM h_{name}
-),
-t_{name} AS (
-  SELECT CASE WHEN count(*) >= {k}
-          THEN CAST(max(CASE WHEN r = {k} THEN h END) AS HUGEINT)
-          ELSE {two64} END AS theta
-  FROM r_{name}
-)"""
-
     return f"""
-WITH {side('a', group_a).lstrip()},{side('b', group_b)},
-th AS (SELECT least(t_a.theta, t_b.theta) AS theta FROM t_a, t_b),
+WITH {_theta_ctes(table, id_expr, group_col, group_a, group_b, k)},
 only_a AS (
   SELECT count(*) AS c
   FROM r_a, th
@@ -209,28 +222,26 @@ def cms_oracle_sql(table: str, id_expr: str, probes: list[int],
     """CMS point estimates for a fixed integer probe list, counter-identical
     to the engine (Kirsch-Mitzenmacher rows from one SplitMix64 hash)."""
     wh = f"WHERE ({where})" if where else ""
-    h = splitmix64_sql(f"CAST({id_expr} AS UBIGINT)")
-    probes_sql = ", ".join(str(int(x)) for x in probes)
-    ph = splitmix64_sql("CAST(probe AS UBIGINT)")
+    rows = _ROWS.format(n=depth)
     return f"""
-WITH hashed AS (SELECT {h} AS h FROM {table} {wh}),
+WITH hashed AS (SELECT {_hashed(id_expr)} AS h FROM {table} {wh}),
 parts AS (
-  SELECT h & 4294967295 AS lo, (h >> 32) | 1 AS hi FROM hashed
+  SELECT {_LO} AS lo, {_HI} AS hi FROM hashed
 ),
 cells AS (
   SELECT r.i AS row_i,
-         CAST((CAST(lo AS HUGEINT) + CAST(r.i AS HUGEINT) * CAST(hi AS HUGEINT)) % {width} AS BIGINT) AS idx,
+         {_km_cell(width, "lo", "hi")} AS idx,
          count(*) AS c
-  FROM parts, (SELECT unnest(range(0, {depth})) AS i) r
+  FROM parts, {rows}
   GROUP BY 1, 2
 ),
 probe_h AS (
-  SELECT probe, {ph} AS h FROM (SELECT unnest([{probes_sql}]) AS probe)
+  {_probe_hashes(probes)}
 ),
 probe_cells AS (
   SELECT probe, r.i AS row_i,
-         CAST((CAST(h & 4294967295 AS HUGEINT) + CAST(r.i AS HUGEINT) * CAST((h >> 32) | 1 AS HUGEINT)) % {width} AS BIGINT) AS idx
-  FROM probe_h, (SELECT unnest(range(0, {depth})) AS i) r
+         {_km_cell(width)} AS idx
+  FROM probe_h, {rows}
 )
 SELECT CAST(p.probe AS BIGINT) AS probe, CAST(min(coalesce(c.c, 0)) AS BIGINT) AS est
 FROM probe_cells p LEFT JOIN cells c USING (row_i, idx)
@@ -242,19 +253,17 @@ def bloom_oracle_sql(table: str, id_expr: str, probes: list[int],
                      m_bits: int, k: int, where: str = "") -> str:
     """Bloom membership for a fixed probe list, bit-position-identical."""
     wh = f"WHERE ({where})" if where else ""
-    h = splitmix64_sql(f"CAST({id_expr} AS UBIGINT)")
-    ph = splitmix64_sql("CAST(probe AS UBIGINT)")
-    probes_sql = ", ".join(str(int(x)) for x in probes)
+    rows = _ROWS.format(n=k)
     return f"""
-WITH hashed AS (SELECT DISTINCT {h} AS h FROM {table} {wh}),
+WITH hashed AS (SELECT DISTINCT {_hashed(id_expr)} AS h FROM {table} {wh}),
 set_bits AS (
-  SELECT DISTINCT CAST((CAST(h & 4294967295 AS HUGEINT) + CAST(r.i AS HUGEINT) * CAST((h >> 32) | 1 AS HUGEINT)) % {m_bits} AS BIGINT) AS pos
-  FROM hashed, (SELECT unnest(range(0, {k})) AS i) r
+  SELECT DISTINCT {_km_cell(m_bits)} AS pos
+  FROM hashed, {rows}
 ),
 probe_bits AS (
-  SELECT probe, CAST((CAST(h & 4294967295 AS HUGEINT) + CAST(r.i AS HUGEINT) * CAST((h >> 32) | 1 AS HUGEINT)) % {m_bits} AS BIGINT) AS pos
-  FROM (SELECT probe, {ph} AS h FROM (SELECT unnest([{probes_sql}]) AS probe)),
-       (SELECT unnest(range(0, {k})) AS i) r
+  SELECT probe, {_km_cell(m_bits)} AS pos
+  FROM ({_probe_hashes(probes)}),
+       {rows}
 )
 SELECT CAST(probe AS BIGINT) AS probe, CAST(bool_and(pos IN (SELECT pos FROM set_bits)) AS BOOLEAN) AS member
 FROM probe_bits

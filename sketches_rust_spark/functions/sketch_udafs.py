@@ -162,15 +162,10 @@ def register_sibling_sql(spark: SparkSession,
     """Register extraction + merge functions for SQL composition, e.g.
     SELECT lang, hll_estimate(hll_merge(sketch)) FROM partials GROUP BY lang.
     """
-    spark.udf.register("hll_estimate", hll_estimate)
-    spark.udf.register("kmv_estimate", kmv_estimate)
-    spark.udf.register("kmv_intersection", kmv_intersection)
-    spark.udf.register("kmv_difference", kmv_difference)
-    spark.udf.register("cms_total", cms_total)
-    spark.udf.register("cms_point_estimate", cms_point_estimate)
-    spark.udf.register("bloom_might_contain", bloom_might_contain)
-    spark.udf.register("tdigest_quantile", tdigest_quantile)
-    spark.udf.register("kll_quantile", kll_quantile)
+    for udf in [hll_estimate, kmv_estimate, kmv_intersection, kmv_difference,
+                cms_total, cms_point_estimate, bloom_might_contain,
+                tdigest_quantile, kll_quantile]:
+        spark.udf.register(udf.__name__, udf)
     for adapter in [hll_adapter(hll_p), cms_adapter(cms_depth, cms_width),
                     bloom_adapter(bloom_m, bloom_k), kmv_adapter(kmv_k),
                     tdigest_adapter(tdigest_delta), kll_adapter(kll_k)]:

@@ -35,3 +35,14 @@ def splitmix64(x: np.ndarray) -> np.ndarray:
     z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
     return z ^ (z >> np.uint64(31))
+
+
+def km_cells(hashes: np.ndarray, n: int, mod: int) -> np.ndarray:
+    """Kirsch-Mitzenmacher double hashing: cell i of each 64-bit hash is
+    (lo + i*(hi|1)) mod ``mod`` for i < n, from the hash's 32-bit halves
+    (hi forced odd so the n cells differ). Shape (n, len(hashes))."""
+    h = hashes.astype(np.uint64, copy=False)
+    lo = h & np.uint64(0xFFFFFFFF)
+    hi = (h >> np.uint64(32)) | np.uint64(1)
+    i = np.arange(n, dtype=np.uint64)[:, None]
+    return ((lo[None, :] + i * hi[None, :]) % np.uint64(mod)).astype(np.int64)

@@ -14,6 +14,8 @@ import struct
 
 import numpy as np
 
+from .bits import km_cells
+
 _MAGIC = b"BLM1"
 
 
@@ -33,23 +35,16 @@ class BloomFilter:
         k = max(1, round(m / n * math.log(2))) if n else 1
         return BloomFilter(m, k)
 
-    def _positions(self, hashes: np.ndarray) -> np.ndarray:
-        h = hashes.astype(np.uint64, copy=False)
-        lo = h & np.uint64(0xFFFFFFFF)
-        hi = (h >> np.uint64(32)) | np.uint64(1)
-        i = np.arange(self.k, dtype=np.uint64)[:, None]
-        return ((lo[None, :] + i * hi[None, :]) % np.uint64(self.m_bits)).astype(np.int64)
-
     def add_hashes(self, hashes: np.ndarray) -> None:
         if hashes.size == 0:
             return
-        pos = self._positions(hashes).ravel()
+        pos = km_cells(hashes, self.k, self.m_bits).ravel()
         np.bitwise_or.at(self.bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
 
     def might_contain_hashes(self, hashes: np.ndarray) -> np.ndarray:
         if hashes.size == 0:
             return np.zeros(0, dtype=bool)
-        pos = self._positions(hashes)
+        pos = km_cells(hashes, self.k, self.m_bits)
         hit = (self.bits[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
         return hit.all(axis=0).astype(bool)
 

@@ -16,6 +16,8 @@ import struct
 
 import numpy as np
 
+from .bits import km_cells
+
 _MAGIC = b"CMS1"
 
 
@@ -37,17 +39,10 @@ class CountMinSketch:
             width=max(2, math.ceil(math.e / eps)),
         )
 
-    def _row_indexes(self, hashes: np.ndarray) -> np.ndarray:
-        h = hashes.astype(np.uint64, copy=False)
-        lo = h & np.uint64(0xFFFFFFFF)
-        hi = (h >> np.uint64(32)) | np.uint64(1)  # odd so rows differ
-        i = np.arange(self.depth, dtype=np.uint64)[:, None]
-        return ((lo[None, :] + i * hi[None, :]) % np.uint64(self.width)).astype(np.int64)
-
     def add_hashes(self, hashes: np.ndarray, counts: np.ndarray | None = None) -> None:
         if hashes.size == 0:
             return
-        idx = self._row_indexes(hashes)
+        idx = km_cells(hashes, self.depth, self.width)
         c = np.ones(hashes.shape[0], dtype=np.int64) if counts is None \
             else counts.astype(np.int64)
         for r in range(self.depth):
@@ -55,7 +50,7 @@ class CountMinSketch:
 
     def estimate_hashes(self, hashes: np.ndarray) -> np.ndarray:
         """Point-query estimates for an array of item hashes."""
-        idx = self._row_indexes(hashes)
+        idx = km_cells(hashes, self.depth, self.width)
         ests = np.stack([self.table[r][idx[r]] for r in range(self.depth)])
         return ests.min(axis=0)
 

@@ -87,6 +87,9 @@ class HyperLogLog:
         h.registers = np.frombuffer(data[5:], dtype=np.uint8).copy()
         if h.registers.shape[0] != h.m:
             raise ValueError("corrupt HLL blob")
+        # a register holds at most the rank of an all-zero 64-p bit window
+        if h.registers.max() > 64 - h.p + 1:
+            raise ValueError("corrupt HLL blob: register above 64-p+1")
         return h
 
     def decode_and_merge_with(self, data: bytes) -> None:

@@ -141,19 +141,31 @@ class KLL:
 
     @staticmethod
     def decode(data: bytes) -> "KLL":
+        """Rejects a blob with bytes missing or left over, a non-finite
+        item, or a header ``n`` other than the levels' total weight
+        sum(len(level_h) * 2^h) — which every build and merge keeps exact."""
         if data[:4] != _MAGIC:
             raise ValueError("not a KLL1 blob")
-        k, n, n_levels = struct.unpack_from("<IQI", data, 4)
-        kll = KLL(k)
+        try:
+            k, n, n_levels = struct.unpack_from("<IQI", data, 4)
+            kll = KLL(k)
+            kll.levels = []
+            off = 4 + 16
+            for _ in range(n_levels):
+                (ln,) = struct.unpack_from("<I", data, off)
+                off += 4
+                kll.levels.append(np.frombuffer(data, dtype="<f8", count=ln, offset=off).copy())
+                off += 8 * ln
+            (kll._compactions,) = struct.unpack_from("<Q", data, off)
+        except struct.error:
+            raise ValueError("corrupt KLL blob: truncated") from None
+        if off + 8 != len(data) or not kll.levels:
+            raise ValueError(f"corrupt KLL blob: {len(data)} bytes for {n_levels} levels")
+        if not np.isfinite(np.concatenate(kll.levels)).all():
+            raise ValueError("corrupt KLL blob: non-finite item")
+        if n != sum(lv.shape[0] << h for h, lv in enumerate(kll.levels)):
+            raise ValueError(f"corrupt KLL blob: n={n} is not the levels' weight")
         kll.n = n
-        kll.levels = []
-        off = 4 + 16
-        for _ in range(n_levels):
-            (ln,) = struct.unpack_from("<I", data, off)
-            off += 4
-            kll.levels.append(np.frombuffer(data, dtype="<f8", count=ln, offset=off).copy())
-            off += 8 * ln
-        (kll._compactions,) = struct.unpack_from("<Q", data, off)
         return kll
 
     def decode_and_merge_with(self, data: bytes) -> None:

@@ -11,11 +11,13 @@ channel count) — real bytes in, real demux, ValueError on corrupt input —
 and ``encode_wav_pcm8`` writes real WAV containers, so the driver pipeline
 runs encode -> decode -> features end-to-end on actual media bytes.
 
-The image/video codecs (PIL/ffmpeg) are NOT available in this sandbox, so
-those decode steps are stubbed: they raise NotImplementedError unless
-``fake=True``, in which case a deterministic fake decoder derives features
-from the bytes — keeping every downstream stage real and testable. Swap
-``_fake_decode`` for a PIL call on a real cluster; nothing else changes.
+The image/video codecs (PIL/ffmpeg) are not dependencies, so those steps
+are deterministic byte-level stubs: ``decode_image_features(fake=True)``
+derives pseudo-features from the bytes, and ``sample_video_frames`` /
+``resize_images`` slice and downsample the payload — keeping every
+downstream stage real and testable. Swap ``_fake_decode`` (or the two stub
+item functions) for a PIL/ffmpeg call on a real cluster; nothing else
+changes.
 """
 
 from __future__ import annotations
@@ -150,11 +152,10 @@ def decode_image_features(df: DataFrame, fake: bool = False) -> DataFrame:
     return _media_stage(df, "image", IMAGE_FEATURES_SCHEMA, item)
 
 
-def sample_video_frames(df: DataFrame, every_nth: int = 30,
-                        fake: bool = False) -> DataFrame:
+def sample_video_frames(df: DataFrame, every_nth: int = 30) -> DataFrame:
     """Frame-sampling plumbing: emits (media_id, frame_idx, frame binary).
-    The fake path slices the payload deterministically; a real decoder would
-    demux with ffmpeg. One input row fans out to ceil(n_frames/every_nth)
+    A stub: it slices the payload into 64-byte frames deterministically; a
+    real decoder would demux with ffmpeg. One input row fans out to ceil(n_frames/every_nth)
     rows — mapInPandas handles the 1->N shape natively."""
     out_schema = StructType([
         StructField("media_id", LongType(), False),
@@ -163,9 +164,6 @@ def sample_video_frames(df: DataFrame, every_nth: int = 30,
     ])
 
     def item(mid: int, data: bytes) -> list[tuple]:
-        if not fake:
-            raise NotImplementedError(
-                "video demuxing requires ffmpeg; pass fake=True")
         n_frames = max(1, len(data) // 64)
         return [(mid, fi, data[fi * 64:(fi + 1) * 64])
                 for fi in range(0, n_frames, every_nth)]
@@ -262,10 +260,9 @@ def decode_audio_features(df: DataFrame, fake: bool = False) -> DataFrame:
     return _media_stage(df, "audio", AUDIO_FEATURES_SCHEMA, item)
 
 
-def resize_images(df: DataFrame, factor: int = 2,
-                  fake: bool = False) -> DataFrame:
+def resize_images(df: DataFrame, factor: int = 2) -> DataFrame:
     """Image resize plumbing: binary in -> binary out, one row per image.
-    The fake path downsamples by keeping every ``factor``-th byte
+    A stub: it downsamples by keeping every ``factor``-th byte
     (deterministic); a real implementation decodes, resizes, re-encodes.
     Output: (media_id, out_bytes, resized binary)."""
     out_schema = StructType([
@@ -275,10 +272,6 @@ def resize_images(df: DataFrame, factor: int = 2,
     ])
 
     def item(mid: int, data: bytes) -> list[tuple]:
-        if not fake:
-            raise NotImplementedError(
-                "image resizing requires PIL, not present in this "
-                "sandbox; pass fake=True")
         out = data[::factor]
         return [(mid, len(out), out)]
 
@@ -333,8 +326,8 @@ FROM dims
 def frame_sample_oracle_sql(table: str, id_col: str = "doc_id",
                             text_col: str = "text",
                             every_nth: int = 2) -> str:
-    """Oracle for sample_video_frames(media_from_documents(..., 'video'),
-    fake=True): 64-byte frame slices at every_nth frame indexes; frames are
+    """Oracle for sample_video_frames(media_from_documents(..., 'video')):
+    64-byte frame slices at every_nth frame indexes; frames are
     compared by md5 (portable across Spark binary and DuckDB VARCHAR for
     ASCII payloads)."""
     return f"""
@@ -376,7 +369,7 @@ FROM m
 def resize_images_oracle_sql(table: str, factor: int = 2,
                              id_col: str = "doc_id",
                              text_col: str = "text") -> str:
-    """Oracle for resize_images(..., fake=True): every factor-th byte of the
+    """Oracle for resize_images: every factor-th byte of the
     ASCII payload, compared by md5."""
     return f"""
 WITH m AS (SELECT {id_col} AS media_id, {text_col} AS text,

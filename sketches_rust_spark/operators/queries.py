@@ -26,6 +26,7 @@ import shutil
 import tempfile
 import uuid
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 from typing import Callable
 
 import numpy as np
@@ -195,6 +196,14 @@ def _narrow(spark: SparkSession, sf_dir: str, table: str, groups: list[str],
 def _quantile_cols(quantiles: dict[str, float]) -> list[Column]:
     return [F.round(make_quantile_udf(q)("sketch"), ROUND_DIGITS).alias(name)
             for name, q in quantiles.items()]
+
+
+def _stacked(tag_col: str, parts: list[tuple]) -> DataFrame:
+    """Long-format union of sub-results: each ``(tag, df, cols)`` part
+    selects ``tag`` as ``tag_col`` and then ``cols``, unioned by name in
+    order (the Spark side of every consolidated surface proof)."""
+    return reduce(DataFrame.unionByName, [
+        df.select(F.lit(tag).alias(tag_col), *cols) for tag, df, cols in parts])
 
 
 def table_proof(table: str, op, oracle, *args, **kw) -> Proof:
@@ -548,14 +557,11 @@ def pages_features_query(quantiles: dict[str, float]) -> Proof:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         pages = pages_table(spark, PAGES_ROWS)
         cols = _quantile_cols(quantiles)
-        parts = []
-        for eng in ("jvm", "pandas"):
-            feats = page_features(pages, engine=eng, keep_cols=("lang",))
-            agg = ddsketch_aggregate_multi(
-                feats, _PAGE_FEATURES, ["lang"], _LOG)
-            parts.append(agg.select(F.lit(eng).alias("engine"),
-                                    "feature", "lang", *cols))
-        return parts[0].unionByName(parts[1])
+        return _stacked("engine", [
+            (eng, ddsketch_aggregate_multi(
+                page_features(pages, engine=eng, keep_cols=("lang",)),
+                _PAGE_FEATURES, ["lang"], _LOG), ["feature", "lang", *cols])
+            for eng in ("jvm", "pandas")])
 
     src = f"read_parquet('{pages_parquet_path(PAGES_ROWS)}')"
     exprs = {"text_len": "length(text)",
@@ -614,14 +620,12 @@ def sketch_stats_surface_query(docs: Proof, events: Proof) -> Proof:
     (docs_q, a), (events_q, b) = docs, events
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        a = docs_q(spark, sf_dir).select(
-            F.lit("docs_textlen").alias("src"), F.col("lang").alias("key"),
-            "cnt", "sum_est", "avg_est", "min_est", "max_est")
-        b = events_q(spark, sf_dir).select(
-            F.lit("events_centered").alias("src"),
-            F.col("event_type").alias("key"),
-            "cnt", "sum_est", "avg_est", "min_est", "max_est")
-        return a.unionByName(b)
+        stats = ["cnt", "sum_est", "avg_est", "min_est", "max_est"]
+        return _stacked("src", [
+            ("docs_textlen", docs_q(spark, sf_dir),
+             [F.col("lang").alias("key"), *stats]),
+            ("events_centered", events_q(spark, sf_dir),
+             [F.col("event_type").alias("key"), *stats])])
     return run, f"""
 WITH sub_a AS ({a}), sub_b AS ({b})
 SELECT 'docs_textlen' AS src, lang AS key, cnt, sum_est, avg_est, min_est, max_est FROM sub_a
@@ -725,15 +729,12 @@ def merged_rank_checks_query(tdigest: Proof, kll: Proof) -> Proof:
     (tdigest_q, t), (kll_q, k) = tdigest, kll
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        t = tdigest_q(spark, sf_dir).select(
-            F.lit("tdigest").alias("kind"),
-            F.col("event_type").alias("grp"),
-            "cnt", "p50_ok", "p90_ok", "p99_ok")
-        k = kll_q(spark, sf_dir).select(
-            F.lit("kll").alias("kind"),
-            F.col("l_returnflag").alias("grp"),
-            "cnt", "p50_ok", "p90_ok", "p99_ok")
-        return t.unionByName(k)
+        checks = ["cnt", "p50_ok", "p90_ok", "p99_ok"]
+        return _stacked("kind", [
+            ("tdigest", tdigest_q(spark, sf_dir),
+             [F.col("event_type").alias("grp"), *checks]),
+            ("kll", kll_q(spark, sf_dir),
+             [F.col("l_returnflag").alias("grp"), *checks])])
     return run, f"""
 WITH sub_t AS ({t}), sub_k AS ({k})
 SELECT 'tdigest' AS kind, event_type AS grp, cnt, p50_ok, p90_ok, p99_ok FROM sub_t
@@ -874,20 +875,16 @@ def kmv_surface_query(table: str, id_expr: str, group_col: str,
                                kmv_adapter(k, hash_mode="splitmix"))
         # one tiny row per group; materialized once, read by both proofs
         agg = agg.localCheckpoint()
-        a = agg.select(
-            F.lit("by_event_type").alias("proof"),
-            F.col("_g").alias("key"),
-            F.round(kmv_estimate("sketch"), 2).cast("double").alias("est"))
-        b = _two_groups(agg, group_a, group_b).select(
-            F.lit("common_users_purchase_click").alias("proof"),
-            F.lit("-").alias("key"),
-            F.round(kmv_intersection("_sa", "_sb"), 2)
-             .cast("double").alias("est"))
-        c = diff_q(spark, sf_dir).select(
-            F.lit("diff_orderkeys_r_not_n").alias("proof"),
-            F.lit("-").alias("key"),
-            F.col("est_diff").cast("double").alias("est"))
-        return a.unionByName(b).unionByName(c)
+        no_key = F.lit("-").alias("key")
+        return _stacked("proof", [
+            ("by_event_type", agg,
+             [F.col("_g").alias("key"),
+              F.round(kmv_estimate("sketch"), 2).cast("double").alias("est")]),
+            ("common_users_purchase_click", _two_groups(agg, group_a, group_b),
+             [no_key, F.round(kmv_intersection("_sa", "_sb"), 2)
+              .cast("double").alias("est")]),
+            ("diff_orderkeys_r_not_n", diff_q(spark, sf_dir),
+             [no_key, F.col("est_diff").cast("double").alias("est")])])
 
     by_type_sql = kmv_oracle_sql(table, id_expr, [group_col], k)
     common_sql = kmv_intersection_oracle_sql(table, id_expr, group_col,
@@ -959,22 +956,14 @@ def sketch_sql_union_surface_query(table: str, id_expr: str, group_col: str,
             "SELECT p.probe, bloom_might_contain(m.sk, p._h) AS member "
             "FROM (SELECT bloom_merge(sketch) AS sk FROM bloom_union_parts) m "
             "CROSS JOIN bloom_union_probes p")
-        return (
-            h.select(F.lit("hll").alias("sketch"),
-                     F.lit(-1).cast("long").alias("probe"),
-                     F.col("est").cast("double").alias("val"))
-            .unionByName(k.select(
-                F.lit("kmv").alias("sketch"),
-                F.lit(-1).cast("long").alias("probe"),
-                F.col("est").cast("double").alias("val")))
-            .unionByName(c.select(
-                F.lit("cms").alias("sketch"),
-                F.col("probe").cast("long").alias("probe"),
-                F.col("est").cast("double").alias("val")))
-            .unionByName(b.select(
-                F.lit("bloom").alias("sketch"),
-                F.col("probe").cast("long").alias("probe"),
-                F.when(F.col("member"), 1.0).otherwise(0.0).alias("val"))))
+        scalar = [F.lit(-1).cast("long").alias("probe"),
+                  F.col("est").cast("double").alias("val")]
+        probe = F.col("probe").cast("long").alias("probe")
+        return _stacked("sketch", [
+            ("hll", h, scalar), ("kmv", k, scalar),
+            ("cms", c, [probe, F.col("est").cast("double").alias("val")]),
+            ("bloom", b, [probe, F.when(F.col("member"), 1.0)
+                          .otherwise(0.0).alias("val")])])
 
     where = f"{group_col} IN ({', '.join(repr(v) for v in group_vals)})"
     hll_sql = hll_oracle_sql(table, id_expr, [], hll_p, where=where)
@@ -1049,13 +1038,9 @@ def ann_topk_surface_query(exact: Proof, lsh: Proof, ivf: Proof) -> Proof:
     (exact_q, exact_sql), (lsh_q, lsh_sql), (ivf_q, ivf_sql) = exact, lsh, ivf
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        parts = [q(spark, sf_dir).select(
-            F.lit(m).alias("method"), "probe_id", "vec_id", "score", "rank")
-            for m, q in (("exact", exact_q), ("lsh", lsh_q), ("ivf", ivf_q))]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _stacked("method", [
+            (m, q(spark, sf_dir), ["probe_id", "vec_id", "score", "rank"])
+            for m, q in (("exact", exact_q), ("lsh", lsh_q), ("ivf", ivf_q))])
     return run, f"""
 WITH sub_e AS ({exact_sql}), sub_l AS ({lsh_sql}), sub_i AS ({ivf_sql})
 SELECT 'exact' AS method, probe_id, vec_id, score, rank FROM sub_e
@@ -1224,11 +1209,9 @@ def dedup_jaccard_surface_query(shingle_k: int = 3, threshold: float = 0.3,
                                  threshold=threshold,
                                  max_shingle_df=capped_df, shingles=sh,
                                  materialize=True)
-        a = un.select(
-            F.lit("uncapped").alias("variant"), "id_a", "id_b", "jaccard")
-        b = cp.select(
-            F.lit("capped").alias("variant"), "id_a", "id_b", "jaccard")
-        return a.unionByName(b)
+        pair = ["id_a", "id_b", "jaccard"]
+        return _stacked("variant", [("uncapped", un, pair),
+                                    ("capped", cp, pair)])
 
     uncapped_sql = ngram_jaccard_oracle_sql("documents", "doc_id", "text",
                                             shingle_k, threshold)
@@ -1444,16 +1427,14 @@ def multimodal_all_query(every_nth: int = 2, factor: int = 2) -> Proof:
     Schema: (stage, media_id, metric, dval, sval); sval = '' where a stage
     has no string metric (no NULLs, keeping the driver hash unambiguous)."""
 
-    def melt(df: DataFrame, stage: str, id_col: str,
-             dcols: list[str]) -> DataFrame:
+    def melt(stage: str, df: DataFrame, dcols: list[str]) -> tuple:
         kvs = [F.struct(F.lit(c).alias("metric"),
                         F.col(c).cast("double").alias("dval"))
                for c in dcols]
-        return df.select(
-            F.lit(stage).alias("stage"), F.col(id_col).alias("media_id"),
-            F.explode(F.array(*kvs)).alias("kv")
-        ).select("stage", "media_id", F.col("kv.metric").alias("metric"),
-                 F.col("kv.dval").alias("dval"), F.lit("").alias("sval"))
+        return (stage,
+                df.select("media_id", F.explode(F.array(*kvs)).alias("kv")),
+                ["media_id", F.col("kv.metric").alias("metric"),
+                 F.col("kv.dval").alias("dval"), F.lit("").alias("sval")])
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = load(spark, sf_dir, "documents")
@@ -1474,26 +1455,20 @@ def multimodal_all_query(every_nth: int = 2, factor: int = 2) -> Proof:
             "media_id", F.round("duration_s", 9).alias("duration_s"),
             F.round("mean_amp", 9).alias("mean_amp"), "n_bytes")
         frames = sample_video_frames(
-            media_from_documents(docs, "video"), every_nth=every_nth,
-            fake=True).select(
-            F.lit("frame_sample").alias("stage"),
-            F.col("media_id"),
-            F.col("frame_idx").cast("string").alias("metric"),
-            F.length("frame").cast("double").alias("dval"),
-            F.md5("frame").alias("sval"))
-        rez = resize_images(
-            media_from_documents(docs), factor=factor, fake=True).select(
-            F.lit("image_resize").alias("stage"),
-            F.col("media_id"),
-            F.lit("resized").alias("metric"),
-            F.col("out_bytes").cast("double").alias("dval"),
-            F.md5("resized").alias("sval"))
-        return (melt(img, "image_features", "media_id",
-                     ["width", "height", "mean_luma", "n_bytes"])
-                .unionByName(melt(aud, "audio_features", "media_id",
-                                  ["duration_s", "mean_amp", "n_bytes"]))
-                .unionByName(frames)
-                .unionByName(rez))
+            media_from_documents(docs, "video"), every_nth=every_nth)
+        rez = resize_images(media_from_documents(docs), factor=factor)
+        return _stacked("stage", [
+            melt("image_features", img,
+                 ["width", "height", "mean_luma", "n_bytes"]),
+            melt("audio_features", aud, ["duration_s", "mean_amp", "n_bytes"]),
+            ("frame_sample", frames,
+             ["media_id", F.col("frame_idx").cast("string").alias("metric"),
+              F.length("frame").cast("double").alias("dval"),
+              F.md5("frame").alias("sval")]),
+            ("image_resize", rez,
+             ["media_id", F.lit("resized").alias("metric"),
+              F.col("out_bytes").cast("double").alias("dval"),
+              F.md5("resized").alias("sval")])])
 
     def melt_sql(inner: str, stage: str, pairs: list[str]) -> str:
         arms = " UNION ALL ".join(
@@ -1558,19 +1533,20 @@ def topk_exact_surface_query(langs: Proof, partkeys: Proof) -> Proof:
             fa = pool.submit(lang_q, spark, sf_dir)
             fb = pool.submit(partkey_q, spark, sf_dir)
             ra, rb = fa.result(), fb.result()
-        a = ra.select(
-            F.lit("langs").alias("kind"), F.col("item").cast("string").alias("item"),
-            "cnt", "rank")
-        b = rb.select(
-            F.lit("partkeys").alias("kind"), F.col("item").cast("string").alias("item"),
-            "cnt", "rank")
-        return a.unionByName(b)
+        cols = [F.col("item").cast("string").alias("item"), "cnt", "rank"]
+        return _stacked("kind", [("langs", ra, cols), ("partkeys", rb, cols)])
     return run, f"""
 WITH sub_l AS ({lang_sql}), sub_p AS ({partkey_sql})
 SELECT 'langs' AS kind, CAST(item AS VARCHAR) AS item, cnt, rank FROM sub_l
 UNION ALL
 SELECT 'partkeys' AS kind, CAST(item AS VARCHAR) AS item, cnt, rank FROM sub_p
 """
+
+
+def _metrics(*cols: str | None) -> list[Column]:
+    """Columns as bigint m1, m2, ...; None gives the -1 filler."""
+    return [(F.lit(-1) if c is None else F.col(c)).cast("bigint")
+            .alias(f"m{i}") for i, c in enumerate(cols, 1)]
 
 
 def curation_stats_surface_query(rebalance: Proof, vocab: Proof) -> Proof:
@@ -1581,17 +1557,11 @@ def curation_stats_surface_query(rebalance: Proof, vocab: Proof) -> Proof:
     (rebalance_q, rebalance_sql), (vocab_q, vocab_sql) = rebalance, vocab
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        a = rebalance_q(spark, sf_dir).select(
-            F.lit("rebalance").alias("src"), F.col("lang"),
-            F.col("n_total").cast("bigint").alias("m1"),
-            F.col("n_kept").cast("bigint").alias("m2"),
-            F.lit(-1).cast("bigint").alias("m3"))
-        b = vocab_q(spark, sf_dir).select(
-            F.lit("vocab").alias("src"), F.col("lang"),
-            F.col("n_tokens").cast("bigint").alias("m1"),
-            F.col("n_vocab").cast("bigint").alias("m2"),
-            F.col("n_hapax").cast("bigint").alias("m3"))
-        return a.unionByName(b)
+        return _stacked("src", [
+            ("rebalance", rebalance_q(spark, sf_dir),
+             ["lang", *_metrics("n_total", "n_kept", None)]),
+            ("vocab", vocab_q(spark, sf_dir),
+             ["lang", *_metrics("n_tokens", "n_vocab", "n_hapax")])])
     return run, f"""
 WITH sub_r AS ({rebalance_sql}), sub_v AS ({vocab_sql})
 SELECT 'rebalance' AS src, lang, CAST(n_total AS BIGINT) AS m1,
@@ -1610,23 +1580,17 @@ def curation_windows_surface_query(pack: Proof, chunk: Proof) -> Proof:
     (pack_q, pack_sql), (chunk_q, chunk_sql) = pack, chunk
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        a = pack_q(spark, sf_dir).select(
-            F.lit("pack").alias("src"),
+        return _stacked("src", [
             # coalesce on BOTH sides (oracle uses the same): concat_ws
             # SKIPS null args while SQL || propagates NULL — a NULL lang
             # would silently diverge the keys otherwise
-            F.concat_ws(":", F.coalesce(F.col("lang"), F.lit("")),
-                        F.col("chunk").cast("string")).alias("key"),
-            F.col("n_docs").cast("bigint").alias("m1"),
-            F.col("sum_tokens").cast("bigint").alias("m2"),
-            F.lit(-1).cast("bigint").alias("m3"))
-        b = chunk_q(spark, sf_dir).select(
-            F.lit("chunks").alias("src"),
-            F.col("n_chunks").cast("string").alias("key"),
-            F.col("n_docs").cast("bigint").alias("m1"),
-            F.col("sum_chunk_tokens").cast("bigint").alias("m2"),
-            F.col("sum_chunk_hash").cast("bigint").alias("m3"))
-        return a.unionByName(b)
+            ("pack", pack_q(spark, sf_dir),
+             [F.concat_ws(":", F.coalesce(F.col("lang"), F.lit("")),
+                          F.col("chunk").cast("string")).alias("key"),
+              *_metrics("n_docs", "sum_tokens", None)]),
+            ("chunks", chunk_q(spark, sf_dir),
+             [F.col("n_chunks").cast("string").alias("key"),
+              *_metrics("n_docs", "sum_chunk_tokens", "sum_chunk_hash")])])
     return run, f"""
 WITH sub_p AS ({pack_sql}), sub_c AS ({chunk_sql})
 SELECT 'pack' AS src, coalesce(lang, '') || ':' || CAST(chunk AS VARCHAR) AS key,

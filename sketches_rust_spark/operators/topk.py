@@ -24,42 +24,60 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sibling_oracle import _ROWS, _km_cell
 from .dedup import _base_hash, _duck_base_hash
+
+
+def _local_ranks(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Count ``c`` per (scan partition ``_p``, *cols) and its rank ``_r``
+    inside the partition (count desc, item asc)."""
+    local = (df.withColumn("_p", F.spark_partition_id())
+             .groupBy("_p", *cols).agg(F.count(F.lit(1)).alias("c")))
+    w = Window.partitionBy("_p").orderBy(F.desc("c"), F.asc("item"))
+    return local.withColumn("_r", F.row_number().over(w))
+
+
+def _summed(local: DataFrame) -> DataFrame:
+    """Exact global count ``cnt`` per item: the sum of its per-partition
+    counts, so no recount ever re-scans the raw items."""
+    return local.groupBy("item").agg(F.sum("c").cast("long").alias("cnt"))
+
+
+def _top_k(df: DataFrame, score: str, k: int) -> DataFrame:
+    """(item, score, rank) of the k best rows, score desc, item asc.
+
+    orderBy+limit -> TakeOrderedAndProject (each task keeps its local k,
+    the driver merges k-heaps) — never an unpartitioned window over all
+    rows. The rank window then sees at most k rows; pmod(score, 1) is a
+    constant-valued but non-foldable partition key (a bare literal gets
+    folded away and WindowExec would warn "No Partition Defined")."""
+    order = (F.desc(score), F.asc("item"))
+    wk = Window.partitionBy(F.pmod(F.col(score), F.lit(1))).orderBy(*order)
+    return (df.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(wk).cast("long"))
+            .select("item", score, "rank"))
 
 
 def _topk_round_plan(ranked_local: DataFrame, k: int, limit: int) -> DataFrame:
     """One pruning round's lazy plan: candidates' exact top-k with the
     cutoff-bound scalar attached to every row.
 
-    ``ranked_local`` is the cached per-(partition, item) count table with
-    its per-partition rank ``_r`` — computed ONCE outside the loop (the
-    rank does not depend on the round's limit; re-deriving the window per
-    round cost a full shuffle+sort of the local table each widening). The
-    candidate recount derives from it too: sum of a candidate's local
-    counts IS its exact global count, so no round ever re-scans the raw
-    items. The global top-k is orderBy+limit -> TakeOrderedAndProject (each
-    task keeps its local k, the driver merges k-heaps) — never an
-    unpartitioned window over all candidates. The rank window then sees at
-    most k rows; pmod(cnt, 1) is a constant-valued but non-foldable
-    partition key (a bare literal gets folded away and WindowExec would
-    warn "No Partition Defined")."""
+    ``ranked_local`` is the cached ``_local_ranks`` table — computed ONCE
+    outside the loop (the rank does not depend on the round's limit;
+    re-deriving the window per round cost a full shuffle+sort of the local
+    table each widening). The candidate recount sums it too."""
     candidates = (ranked_local.where(F.col("_r") <= limit)
                   .select("item").distinct())
     # upper bound on any non-candidate item's global count: the sum of each
     # partition's cutoff count (0 if a partition ran out)
     bound = (ranked_local.where(F.col("_r") == limit)
              .agg(F.coalesce(F.sum("c"), F.lit(0)).alias("b")))
-    recount = (ranked_local.join(F.broadcast(candidates), "item", "leftsemi")
-               .groupBy("item").agg(F.sum("c").cast("long").alias("cnt")))
-    wk = Window.partitionBy(F.pmod(F.col("cnt"), F.lit(1))).orderBy(
-        F.desc("cnt"), F.asc("item"))
-    top = (recount.orderBy(F.desc("cnt"), F.asc("item")).limit(k)
-           .withColumn("rank", F.row_number().over(wk).cast("long"))
-           .select("item", "cnt", "rank"))
+    recount = _summed(ranked_local.join(F.broadcast(candidates), "item",
+                                        "leftsemi"))
     # one action per round instead of two: attach the scalar bound to every
     # candidate row (broadcast of a 1-row aggregate), so the k result rows
     # and the exactness bound arrive in a single collect
-    return top.crossJoin(F.broadcast(bound))
+    return _top_k(recount, "cnt", k).crossJoin(F.broadcast(bound))
 
 
 def topk_exact_pruned(df: DataFrame, item_col: str, k: int,
@@ -87,14 +105,9 @@ def topk_exact_pruned(df: DataFrame, item_col: str, k: int,
     the cached local counts rather than re-scanning the items — exact by
     construction (sum of per-partition counts == global count).
     """
-    items = df.select(F.col(item_col).alias("item"))
-    with_part = items.withColumn("_p", F.spark_partition_id())
-    local = with_part.groupBy("_p", "item").agg(F.count(F.lit(1)).alias("c"))
-    w = Window.partitionBy("_p").orderBy(F.desc("c"), F.asc("item"))
-    ranked_local = local.withColumn("_r", F.row_number().over(w))
+    ranked_local = _local_ranks(df.select(F.col(item_col).alias("item")),
+                                ["item"])
     ranked_local.cache()
-    wk = Window.partitionBy(F.pmod(F.col("cnt"), F.lit(1))).orderBy(
-        F.desc("cnt"), F.asc("item"))
     try:
         prev_cutoffs = None
         for round_ in range(max_rounds):
@@ -122,11 +135,7 @@ def topk_exact_pruned(df: DataFrame, item_col: str, k: int,
             prev_cutoffs = cutoffs
         # exact fallback: full recount of every item from the cached local
         # aggregate (exchange carries one row per distinct (partition, item))
-        full = (ranked_local.groupBy("item")
-                .agg(F.sum("c").cast("long").alias("cnt")))
-        top = (full.orderBy(F.desc("cnt"), F.asc("item")).limit(k)
-               .withColumn("rank", F.row_number().over(wk).cast("long"))
-               .select("item", "cnt", "rank"))
+        top = _top_k(_summed(ranked_local), "cnt", k)
         rows = top.collect()
         return df.sparkSession.createDataFrame(rows, top.schema)
     finally:
@@ -167,21 +176,12 @@ def topk_cms(df: DataFrame, item_col: str, k: int,
     hashed = df.select(F.col(item_col).cast("string").alias("item"))
     hashed = hashed.withColumn("_h", _base_hash(F.col("item")))
     cms = sketch_aggregate(hashed, "_h", [], cms_adapter(depth, width, "pre"))
-    with_part = hashed.withColumn("_p", F.spark_partition_id())
-    local = with_part.groupBy("_p", "item", "_h").agg(F.count(F.lit(1)).alias("c"))
-    w = Window.partitionBy("_p").orderBy(F.desc("c"), F.asc("item"))
-    candidates = (local.withColumn("_r", F.row_number().over(w))
+    candidates = (_local_ranks(hashed, ["item", "_h"])
                   .where(F.col("_r") <= k * 2)
                   .select("item", "_h").distinct())
     est = (candidates.crossJoin(F.broadcast(cms.select("sketch")))
            .select("item", cms_point_estimate("sketch", "_h").alias("est")))
-    # rank window input is bounded (<= k rows after the limit); pmod(est, 1)
-    # is a constant-valued, non-foldable partition key (see topk_exact_pruned)
-    wg = Window.partitionBy(F.pmod(F.col("est"), F.lit(1))).orderBy(
-        F.desc("est"), F.asc("item"))
-    return (est.orderBy(F.desc("est"), F.asc("item")).limit(k)
-            .withColumn("rank", F.row_number().over(wg).cast("long"))
-            .select("item", "est", "rank"))
+    return _top_k(est, "est", k)
 
 
 def topk_cms_oracle_sql(table: str, item_expr: str, k: int,
@@ -189,8 +189,7 @@ def topk_cms_oracle_sql(table: str, item_expr: str, k: int,
     """Exact DuckDB replica of topk_cms: same md5 base hash, same
     Kirsch-Mitzenmacher cells, same min-over-rows point estimate — assumes
     every distinct item is a candidate (see topk_cms determinism note)."""
-    idx = ("CAST((CAST(h & 4294967295 AS HUGEINT) + CAST(r.i AS HUGEINT) * "
-           f"CAST((h >> 32) | 1 AS HUGEINT)) % {width} AS BIGINT)")
+    idx, rows = _km_cell(width), _ROWS.format(n=depth)
     return f"""
 WITH hashed AS (
   SELECT CAST({item_expr} AS VARCHAR) AS item,
@@ -199,13 +198,13 @@ WITH hashed AS (
 ),
 cells AS (
   SELECT r.i AS row_i, {idx} AS idx, count(*) AS c
-  FROM hashed, (SELECT unnest(range(0, {depth})) AS i) r
+  FROM hashed, {rows}
   GROUP BY 1, 2
 ),
 items AS (SELECT DISTINCT item, h FROM hashed),
 probe_cells AS (
   SELECT item, r.i AS row_i, {idx} AS idx
-  FROM items, (SELECT unnest(range(0, {depth})) AS i) r
+  FROM items, {rows}
 ),
 ests AS (
   SELECT item, CAST(min(coalesce(c.c, 0)) AS BIGINT) AS est

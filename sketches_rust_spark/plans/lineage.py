@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.ddsketch_spark import SketchConfig, merge_partials
-from ..functions.ddsketch_sql import ddsketch_aggregate_sql
+from ..functions.ddsketch_sql import _require_log_mapping, ddsketch_aggregate_sql
 
 class SketchCheckpointJob:
     def __init__(
@@ -51,7 +51,11 @@ class SketchCheckpointJob:
         shard BEFORE the value-expr projection — e.g. deriving ``text``
         from the raw ``html`` binary (operators/extraction.py), so the
         resumable job covers the full raw-input pipeline. Must be
-        deterministic: a resumed run re-derives identical partials."""
+        deterministic: a resumed run re-derives identical partials.
+
+        Shards build with ``ddsketch_aggregate_sql``, so a LogCubic preset
+        raises ValueError here, before any checkpoint file is written."""
+        _require_log_mapping(config)
         self.spark = spark
         self.input_path = input_path
         self.value_expr = value_expr

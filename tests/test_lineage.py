@@ -68,6 +68,17 @@ def test_kill_resume_finalize_byte_identical(spark, tmp_path, sharded_input):
         spark.read.parquet(sharded_input).count()
 
 
+def test_logcubic_preset_rejected_before_any_checkpoint_write(spark, tmp_path):
+    """Shards build on the LOG-only SQL path, so a LogCubic preset must fail
+    in the constructor, not at the first shard after manifest.json exists."""
+    ckpt = tmp_path / "ckpt"
+    cubic = SketchConfig("collapsing_lowest_dense", 0.01, 2048)
+    with pytest.raises(ValueError, match="LOG-mapping"):
+        SketchCheckpointJob(spark, str(tmp_path / "input"), "length(text)",
+                            ["lang"], cubic, str(ckpt))
+    assert not ckpt.exists()
+
+
 def test_shard_assignment_stable_across_listing_changes(spark, tmp_path, sharded_input):
     ckpt = str(tmp_path / "ckpt2")
     job = SketchCheckpointJob(spark, sharded_input, "length(text)", ["lang"],

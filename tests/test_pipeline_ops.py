@@ -198,7 +198,7 @@ def test_multimodal_image_features(spark):
 
 def test_multimodal_frame_sampling(spark):
     media = synthetic_media(spark, 30)
-    frames = sample_video_frames(media, every_nth=10, fake=True).toPandas()
+    frames = sample_video_frames(media, every_nth=10).toPandas()
     assert (frames["frame_idx"] % 10 == 0).all()
     assert frames.groupby("media_id").size().min() >= 1
 

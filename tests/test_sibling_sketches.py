@@ -492,6 +492,61 @@ def test_tdigest_decode_rejects_malformed_blobs():
     assert TDigest.decode(a.encode()).encode() == a.encode()
 
 
+def test_kll_decode_rejects_malformed_blobs():
+    import struct
+
+    kll = KLL(200)
+    kll.accept_many(np.arange(100.0))
+    good = kll.encode()  # KLL1, k, n at byte 8, n_levels, level 0 len, items
+    assert KLL.decode(good).encode() == good
+
+    def patched(fmt: str, off: int, value) -> bytes:
+        buf = bytearray(good)
+        struct.pack_into(fmt, buf, off, value)
+        return bytes(buf)
+
+    # a NaN item used to decode, and quantile(1.0) answered nan
+    with pytest.raises(ValueError, match="non-finite"):
+        KLL.decode(patched("<d", 24 + 8 * 99, float("nan")))
+    for blob in (good + b"\0", good[:-1], good[:22]):
+        with pytest.raises(ValueError, match="corrupt KLL"):
+            KLL.decode(blob)
+    # n = 10^12 over levels that weigh 100 used to carry into a merge
+    other = KLL(200)
+    other.accept_many(np.arange(10.0))
+    with pytest.raises(ValueError, match="n="):
+        other.decode_and_merge_with(patched("<Q", 8, 10 ** 12))
+    assert other.n == 10
+
+    # the n check holds for every built and merged sketch: each compaction
+    # turns 2j items of weight 2^h into j of weight 2^(h+1)
+    rng = np.random.default_rng(3)
+    for _ in range(50):
+        acc = KLL(8 + int(rng.integers(0, 60)))
+        for _ in range(int(rng.integers(1, 5))):
+            part = KLL(acc.k)
+            for _ in range(int(rng.integers(1, 4))):
+                part.accept_many(rng.normal(size=int(rng.integers(0, 3000))))
+            acc.decode_and_merge_with(part.encode())
+        assert KLL.decode(acc.encode()).encode() == acc.encode()
+
+
+def test_hll_decode_rejects_register_above_max_rank():
+    hll = HyperLogLog(10)
+    hll.add_hashes(splitmix64(np.arange(1000, dtype=np.uint64)))
+    # the largest rank a register can hold: an all-zero 64-p bit window
+    hll.add_hashes(np.array([5 << 54], dtype=np.uint64))
+    assert hll.registers.max() == 64 - 10 + 1
+    good = hll.encode()
+    assert HyperLogLog.decode(good).encode() == good
+    buf = bytearray(good)
+    buf[5 + 3] = 200  # used to decode and survive every merge
+    with pytest.raises(ValueError, match="register"):
+        HyperLogLog.decode(bytes(buf))
+    with pytest.raises(ValueError, match="register"):
+        HyperLogLog(10).decode_and_merge_with(bytes(buf))
+
+
 def test_kmv_difference_estimate():
     import numpy as np
     from sketches_rust_spark.kernel.bits import splitmix64

@@ -86,3 +86,67 @@ def test_topk_exact_result_is_materialized_verified_rows(spark, documents):
     second = top.collect()
     assert first == second
     assert len(first) == 3
+
+
+def _items(dist: str):
+    import numpy as np
+
+    rng = np.random.default_rng(0)
+    if dist == "zipf":
+        return np.minimum(rng.zipf(1.5, 4000), 10 ** 6)
+    if dist == "uniform":
+        return rng.integers(0, 3000, 6000)
+    # bimodal: a dense block of 1,500 items next to a sparse one of 4,000
+    return np.concatenate([rng.integers(0, 1500, 3000),
+                           rng.integers(5000, 9000, 3000)])
+
+
+# (distribution, max_rounds, the exit it must reach at some partition count)
+_EXIT_CASES = [("zipf", 4, "certified in round 1"),
+               ("uniform", 4, "futility break"),
+               ("bimodal", 2, "rounds exhausted")]
+
+
+@pytest.mark.parametrize("dist,max_rounds,exit_", _EXIT_CASES)
+def test_topk_exact_pruned_equals_group_by_on_every_exit(
+        spark, monkeypatch, dist, max_rounds, exit_):
+    """topk_exact_pruned equals the exact GROUP BY top-k over several
+    repartition counts, on each way out of the pruning loop: certified in
+    round one (zipf), the futility break on a flat tail (uniform) and the
+    full recount after the last round (bimodal). The exit is read from the
+    calls: every round sums its candidates once, the recount once more."""
+    import numpy as np
+    import pandas as pd
+
+    from sketches_rust_spark.operators import topk
+
+    calls = {"rounds": 0, "sums": 0}
+    round_plan, summed = topk._topk_round_plan, topk._summed
+
+    def counted_round(*args):
+        calls["rounds"] += 1
+        return round_plan(*args)
+
+    def counted_sum(df):
+        calls["sums"] += 1
+        return summed(df)
+
+    monkeypatch.setattr(topk, "_topk_round_plan", counted_round)
+    monkeypatch.setattr(topk, "_summed", counted_sum)
+    base = spark.createDataFrame(pd.DataFrame({"x": _items(dist).astype(np.int64)}))
+    exits = set()
+    for parts in (2, 4, 8):
+        df = base.repartition(parts)
+        calls.update(rounds=0, sums=0)
+        got = topk_exact_pruned(df, "x", k=5, max_rounds=max_rounds).collect()
+        want = (df.groupBy("x").agg(F.count(F.lit(1)).alias("cnt"))
+                .orderBy(F.desc("cnt"), F.asc("x")).limit(5).collect())
+        assert [(r["item"], r["cnt"], r["rank"]) for r in got] == \
+            [(r["x"], r["cnt"], i) for i, r in enumerate(want, 1)]
+        if calls["sums"] == calls["rounds"]:
+            exits.add(f"certified in round {calls['rounds']}")
+        elif calls["rounds"] < max_rounds:
+            exits.add("futility break")
+        else:
+            exits.add("rounds exhausted")
+    assert exit_ in exits, exits
