@@ -131,9 +131,17 @@ class IndexMapping:
             raise ValueError(f"invalid IndexMapping gamma: {gamma!r}")
         if not math.isfinite(index_offset):
             raise ValueError(f"invalid IndexMapping offset: {index_offset!r}")
+        try:
+            relative_accuracy = _calculate_relative_accuracy(gamma, cf)
+        except OverflowError:
+            relative_accuracy = math.nan
+        # the indexable range divides by 1 - relative_accuracy: a gamma so
+        # large that the accuracy rounds to 1 (or overflows) has no buckets
+        if not relative_accuracy < 1.0:
+            raise ValueError(f"invalid IndexMapping gamma: {gamma!r}")
         multiplier = math.log(base) / math.log(gamma)
         return IndexMapping(layout, gamma, index_offset, multiplier,
-                            _calculate_relative_accuracy(gamma, cf))
+                            relative_accuracy)
 
     # -- log / log_inverse ---------------------------------------------------
 

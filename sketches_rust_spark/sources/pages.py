@@ -9,8 +9,7 @@ invariant from input_hint. Hosts and languages are zipfian-skewed on purpose
 
 On a real cluster this table would be an Iceberg table; this sandbox has no
 Iceberg runtime jar, so the provider materializes parquet with the identical
-schema and exposes a ``catalog='iceberg'`` switch that simply reads
-``spark.table(name)`` instead (see table_provider below).
+schema (see pages_table below).
 """
 
 from __future__ import annotations
@@ -155,14 +154,8 @@ def ensure_pages(num_rows: int, cache_dir: str | None = None) -> str:
     return path
 
 
-def pages_table(spark, num_rows: int = 100_000, cache_dir: str | None = None,
-                catalog: str = "parquet"):
-    """Table provider: the Iceberg-shaped ``pages`` table as a DataFrame.
-
-    catalog='parquet' (sandbox default): deterministic local parquet.
-    catalog='iceberg' (real cluster): reads the governed table by name; all
-    downstream code is format-agnostic DataFrame ops either way.
-    """
-    if catalog == "iceberg":
-        return spark.table("pages")
+def pages_table(spark, num_rows: int = 100_000, cache_dir: str | None = None):
+    """Table provider: the Iceberg-shaped ``pages`` table as a DataFrame,
+    read from its deterministic local parquet. Downstream code is
+    format-agnostic DataFrame ops."""
     return spark.read.parquet(ensure_pages(num_rows, cache_dir))

@@ -39,7 +39,6 @@ from pyspark.sql.types import (
     BooleanType,
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -49,22 +48,24 @@ from ..functions.ddsketch_sql import ddsketch_aggregate_sql, ddsketch_histogram
 
 
 def stream_state_partitions(staged_dir: str, n_batches: int) -> int:
-    """Scale-adaptive shuffle/state-store partition count for a streaming
-    replay over ``staged_dir``.
+    """Shuffle/state-store partition count for a streaming replay over
+    ``staged_dir``: one partition per 64 MB of per-micro-batch input, at
+    least one, with no ceiling.
 
     ``spark.sql.shuffle.partitions`` fixes the number of state-store
-    instances per stateful operator at first checkpoint, and AQE does NOT
-    coalesce stateful streaming shuffles — so a batch-oriented session value
-    (sized for table scans) makes every micro-batch pay that many state
-    commits + tasks regardless of batch size. Measured at sf0.1 / local[32]:
-    32 state partitions vs 8 is 5.0 s vs 2.8 s for the stateful query and
-    6.0 s vs 3.1 s for the windowed one — pure per-partition fixed cost, the
-    per-micro-batch data here being ~0.4 MB.
-
-    Sizing rule: one partition per ~64 MB of per-micro-batch input, floor 4
-    (parallelism for the non-stateful stages), no ceiling (a production
-    stream with GB-scale micro-batches derives a proportionally larger state
-    store)."""
+    instances per stateful operator at the first checkpoint, and AQE does
+    not coalesce stateful streaming shuffles. A session value sized for
+    table scans would make every micro-batch pay that many Python tasks and
+    state commits whatever its size. 64 MB is Spark's default
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, so this is the
+    count AQE would pick itself for an ordinary shuffle of that size.
+    Sketch blobs merge exactly, so each stream's result is the same for any
+    count; more partitions than the data needs buy only fixed cost. Each
+    Python task pays a PySpark start-up floor of about 0.2 s. Measured in
+    the traced ``stream_replay`` benchmark (4,000-row, 32 KB micro-batches
+    at local[3], 4-core host), one partition instead of four: tasks per
+    batch 9 -> 3 (partials) and 5 -> 2 (stateful), ``addBatch`` p50
+    784 -> 635 ms and state commit p50 197 -> 32 ms."""
     total = 0
     for root, _dirs, files in os.walk(staged_dir):
         for f in files:
@@ -73,22 +74,21 @@ def stream_state_partitions(staged_dir: str, n_batches: int) -> int:
             except OSError:
                 pass
     per_batch = total // max(1, n_batches)
-    return max(4, -(-per_batch // (64 << 20)))
+    return max(1, -(-per_batch // (64 << 20)))
 
 
 @contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Temporarily pin spark.sql.shuffle.partitions (state-store sizing for
-    a streaming run) and disable AQE for the replay's micro-batch jobs;
-    always restores the session values.
+    """Temporarily pin spark.sql.shuffle.partitions to ``n`` (the
+    state-store count of a streaming run, see stream_state_partitions) and
+    disable AQE for the replay's micro-batch jobs; always restores the
+    session values.
 
-    AQE off here is deliberate: stateful streaming shuffles are exempt from
-    AQE anyway, the replay's partition count is already derived from the
-    micro-batch size (stream_state_partitions), and adaptive re-planning
-    adds per-query-stage latency to jobs whose inputs are a single
-    micro-batch — measured at sf0.1 (interleaved, 3 rounds): windowed
-    replay med 2.96 s vs 3.69 s with AQE on. Batch post-processing outside
-    this scope keeps the session's AQE."""
+    AQE is off here because it has nothing to do: it does not coalesce
+    stateful streaming shuffles, and ``n`` is already the count its advisory
+    partition size would give. Adaptive re-planning then only adds
+    per-query-stage latency to jobs whose input is a single micro-batch.
+    Batch post-processing outside this scope keeps the session's AQE."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
@@ -157,15 +157,9 @@ def stateful_sketch_stream(
 ) -> DataFrame:
     """Running per-key sketches via applyInPandasWithState.
 
-    State = the serialized sketch blob. Output per batch: (key, count, qXX).
+    State = the serialized sketch blob. Output per batch: (key, count,
+    estimate, blob_bytes), with ``estimate`` the ``quantile`` value.
     """
-    out_schema = StructType([
-        StructField("key", StringType(), False),
-        StructField("count", DoubleType(), False),
-        StructField("estimate", DoubleType(), True),
-        StructField("blob_bytes", LongType(), False),
-    ])
-
     def update(key_tuple, pdf_iter, state: GroupState):
         sk, blob, _ = _fold_state(state, config, value_col, pdf_iter)
         state.update((bytearray(blob),))
@@ -180,7 +174,8 @@ def stateful_sketch_stream(
             .groupBy(F.col(key))
             .applyInPandasWithState(
                 update,
-                outputStructType=out_schema,
+                outputStructType=_out_schema(
+                    stream_df, key, StructField("blob_bytes", LongType(), False)),
                 stateStructType=_STATE_SCHEMA,
                 outputMode="update",
                 timeoutConf=GroupStateTimeout.NoTimeout,
@@ -211,7 +206,7 @@ def stateful_sketch_stream_with_eviction(
             .groupBy(F.col(key))
             .applyInPandasWithState(
                 _eviction_update(value_col, config, quantile, None, arm),
-                outputStructType=_EVICT_OUT_SCHEMA,
+                outputStructType=_out_schema(stream_df, key, _EVICTED),
                 stateStructType=_STATE_SCHEMA,
                 outputMode="update",
                 timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
@@ -268,19 +263,27 @@ def stateful_sketch_stream_with_event_time_eviction(
             .groupBy(F.col(key))
             .applyInPandasWithState(
                 _eviction_update(value_col, config, quantile, "_evt_ms", arm),
-                outputStructType=_EVICT_OUT_SCHEMA,
+                outputStructType=_out_schema(stream_df, key, _EVICTED),
                 stateStructType=_STATE_SCHEMA,
                 outputMode="update",
                 timeoutConf=GroupStateTimeout.EventTimeTimeout,
             ))
 
 
-_EVICT_OUT_SCHEMA = StructType([
-    StructField("key", StringType(), False),
-    StructField("count", DoubleType(), False),
-    StructField("estimate", DoubleType(), True),
-    StructField("evicted", BooleanType(), False),
-])
+_EVICTED = StructField("evicted", BooleanType(), False)
+
+
+def _out_schema(stream_df: DataFrame, key: str, last: StructField) -> StructType:
+    """Output schema of the stateful variants: (key, count, estimate, last).
+    The key keeps the input column's type and nullability; null keys form
+    one group of their own, as in the batch builds."""
+    field = stream_df.schema[key]
+    return StructType([
+        StructField("key", field.dataType, field.nullable),
+        StructField("count", DoubleType(), False),
+        StructField("estimate", DoubleType(), True),
+        last,
+    ])
 
 
 def _fold_state(state: GroupState, config: SketchConfig, value_col: str,

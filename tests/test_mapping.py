@@ -151,3 +151,33 @@ def test_min_relative_accuracy_floor_guarantees_round_trip():
     back = DDSketch.decode(blob)  # must NOT trip the decode span cap
     assert back.get_count() == sk.get_count()
     assert back.encode() == blob
+
+
+@pytest.mark.parametrize("layout,gamma", [(LOG, 2.8550237500865116e+303),
+                                          (LOG, 1e17),
+                                          (LOG_CUBIC, 1e40),
+                                          (LOG_CUBIC, 1.7e308)])
+def test_gamma_with_no_buckets_rejected(layout, gamma):
+    """A decoded gamma whose relative accuracy rounds to 1 (or overflows)
+    leaves no indexable range; it must raise ValueError, as other corrupt
+    gammas do, instead of dividing by zero later."""
+    with pytest.raises(ValueError, match="gamma"):
+        IndexMapping.with_gamma_offset(layout, gamma, 0.0)
+
+
+def test_decode_rejects_flipped_gamma_byte():
+    """Flipping one byte of a valid blob's gamma (a case the decoder
+    mutation property test found) gives a gamma of 2.9e303; decode raises
+    ValueError instead of ZeroDivisionError."""
+    from sketches_rust_spark.kernel.sketch import DDSketch
+
+    blob = (b'\x02*x9\x05/\xa7\xf0?\x00\x00\x00\x00\x00\x00\x00\x00\r2\x82'
+            b'\x01\x02\x88 \x00\x03\x00\x00\x00\x03\x00\x02\x00\x00\x03\x03'
+            b'\x02\x02\x03\x03\x02\x00\x00\x00\x00\x02\x00\x02\x02\x02\x04'
+            b'\x04\x84@\x00\x04\x02\x00\x02\x02\x03\x84@\x04\x84@\x04\x02'
+            b'\x02\x00\x06\x04\x06\x84@\x02\x06')
+    DDSketch.decode(blob)
+    flipped = bytearray(blob)
+    flipped[8] ^= 65  # the top byte of gamma
+    with pytest.raises(ValueError, match="gamma"):
+        DDSketch.decode(bytes(flipped))

@@ -1,6 +1,7 @@
 """Structured Streaming sketch aggregation tests (file source, availableNow)."""
 
 import glob
+import json
 import os
 
 import pytest
@@ -12,8 +13,12 @@ from sketches_rust_spark.functions.ddsketch_sql import ddsketch_aggregate_sql
 from sketches_rust_spark.kernel.sketch import DDSketch
 from sketches_rust_spark.streaming.sketch_stream import (
     merged_stream_result,
+    scoped_shuffle_partitions,
     stateful_sketch_stream,
+    stateful_sketch_stream_with_eviction,
+    stateful_sketch_stream_with_event_time_eviction,
     stream_sketch_partials,
+    stream_state_partitions,
     windowed_sketch_histogram,
 )
 
@@ -339,3 +344,93 @@ def test_streaming_proofs_leave_no_temp_state(spark, sf_dir):
         assert len(query(spark, sf_dir).toPandas()) > 0
     assert replay_dirs() - dirs == set()
     assert sink_tables() - tables == set()
+
+
+def test_stream_state_partitions_one_per_64mb(tmp_path):
+    """One state partition per 64 MB of micro-batch, at least one: small
+    batches get one partition, large ones the same count as before."""
+    def staged(name, *sizes):
+        d = tmp_path / name
+        d.mkdir()
+        for i, size in enumerate(sizes):
+            f = d / f"part-{i}.parquet"
+            f.touch()
+            os.truncate(f, size)  # sparse: nothing large is written
+        return str(d)
+
+    mb = 1 << 20
+    assert stream_state_partitions(staged("empty"), 3) == 1
+    assert stream_state_partitions(staged("small", 8 << 10, 8 << 10,
+                                          8 << 10, 8 << 10), 1) == 1
+    assert stream_state_partitions(staged("exact", 64 * mb, 64 * mb), 2) == 1
+    assert stream_state_partitions(staged("over", 64 * mb + 1), 1) == 2
+    assert stream_state_partitions(staged("large", 300 * mb, 300 * mb), 2) == 5
+    assert stream_state_partitions(staged("quarter_gb", 256 * mb), 1) == 4
+
+
+def test_stateful_replay_runs_one_state_partition(spark, tmp_path,
+                                                  events_stream_dir):
+    """A replay of small micro-batches under the derived partition count
+    runs one state-store partition and counts every row once per key."""
+    stream = _read_stream(spark, events_stream_dir).select(
+        F.col("event_type").alias("key"), F.col("value").cast("double").alias("v"))
+    out = stateful_sketch_stream(stream, "v", "key", CFG)
+    with scoped_shuffle_partitions(spark,
+                                   stream_state_partitions(events_stream_dir, 4)):
+        q = (out.writeStream.format("memory").queryName("one_partition_sketches")
+             .outputMode("update")
+             .option("checkpointLocation", str(tmp_path / "ckpt"))
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+    progress = [json.loads(p.json) for p in q.recentProgress]
+    assert {op["numShufflePartitions"]
+            for p in progress for op in p["stateOperators"]} == {1}
+
+    got = {r["key"]: r["count"] for r in spark.sql(
+        "SELECT key, max(count) AS count FROM one_partition_sketches "
+        "GROUP BY key").collect()}
+    spark.catalog.dropTempView("one_partition_sketches")
+    want = {r["event_type"]: float(r["n"]) for r in
+            spark.read.parquet(events_stream_dir)
+            .groupBy("event_type").agg(F.count("value").alias("n")).collect()}
+    assert got == want
+
+
+_STATEFUL_VARIANTS = {
+    "running": lambda s: stateful_sketch_stream(s, "v", "k", CFG),
+    "processing_time_eviction": lambda s: stateful_sketch_stream_with_eviction(
+        s, "v", "k", CFG, timeout_ms=600_000),
+    "event_time_eviction":
+        lambda s: stateful_sketch_stream_with_event_time_eviction(
+            s, "v", "k", CFG, ts_col="ts"),
+}
+
+
+@pytest.mark.parametrize("key_type,keys", [("long", [1, 2, 3]),
+                                           ("string", ["a", None, "b"])])
+@pytest.mark.parametrize("variant", sorted(_STATEFUL_VARIANTS))
+def test_stateful_variants_keep_key_type_and_null_keys(spark, tmp_path,
+                                                       variant, key_type, keys):
+    """Every stateful variant emits the key with the input column's type,
+    and a null key is one group of its own, as in the batch builds."""
+    from datetime import datetime
+
+    src = str(tmp_path / "src")
+    ts = datetime(2025, 6, 1)
+    rows = [(k, float(i), ts) for j, k in enumerate(keys) for i in range(j + 2)]
+    spark.createDataFrame(rows, f"k {key_type}, v double, ts timestamp") \
+        .coalesce(1).write.parquet(src)
+    stream = _read_stream(spark, src)
+    name = f"key_types_{variant}_{key_type}"
+    with scoped_shuffle_partitions(spark, stream_state_partitions(src, 1)):
+        q = (_STATEFUL_VARIANTS[variant](stream).writeStream.format("memory")
+             .queryName(name).outputMode("update")
+             .option("checkpointLocation", str(tmp_path / "ckpt"))
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+    assert q.exception() is None
+    out = spark.table(name)
+    assert out.schema["key"].dataType == stream.schema["k"].dataType
+    got = {r["key"]: r["count"] for r in out.collect()}
+    spark.catalog.dropTempView(name)
+    assert got == {k: float(j + 2) for j, k in enumerate(keys)}
