@@ -9,6 +9,10 @@ Public surface:
     )
 """
 
+from . import _zipcache
+
+_zipcache.install()  # workers skip re-reading unchanged zips per task
+
 from .kernel.bloom import BloomFilter
 from .kernel.cms import CountMinSketch
 from .kernel.hll import HyperLogLog

@@ -628,7 +628,13 @@ def _local_union_find(pdf: pd.DataFrame) -> list[tuple]:
     the driver: [(node, component_min)] for every node that appears in any
     edge. The min root always stays the root, so the label equals the
     component minimum — the same fixpoint the distributed loop converges
-    to."""
+    to.
+
+    Assumes long or UTF-8 string ids, for which Python's ``min``/``max``
+    order them as Spark's ``F.min``/``F.least`` do. Other orderable types
+    can disagree (NaN is the largest float to Spark but unordered to
+    Python), and the gated and distributed paths could then pick different
+    labels."""
     parent: dict = {}
 
     def find(x):
@@ -765,7 +771,9 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
 
 def _solve_locally(edges: DataFrame) -> DataFrame:
     """(_id, cluster) of a small (src, dst) edge set: one Arrow toPandas,
-    union-find on the driver, back as a DataFrame of the edge id type."""
+    union-find on the driver, back as a DataFrame of the edge id type.
+    Labels match the distributed path for long or UTF-8 string ids only
+    (see ``_local_union_find``)."""
     id_t = edges.schema["src"].dataType
     schema = StructType([StructField("_id", id_t, False),
                          StructField("cluster", id_t, False)])
