@@ -8,14 +8,17 @@ masking so the bit patterns match the reference's i64/u64 semantics exactly;
 golden byte vectors from /root/reference/src/serde.rs:172-301 pin the behavior
 in tests/test_serde.py.
 
-These codecs run on small per-group sketch blobs (KBs), never per input row,
-so plain Python is fine; the per-value hot path lives in store.py / mapping.py
-as vectorized numpy.
+Two layers. The scalar codecs write and read the header fields (bin count,
+first index, index step, zero count, mapping) and are the golden-pinned
+reference. The token codec at the end of this module (numpy) writes and
+reads every bin block, var-longs and var-doubles alike, with the same bytes.
 """
 
 from __future__ import annotations
 
 import struct
+
+import numpy as np
 
 _U64 = (1 << 64) - 1
 _SIGN64 = 1 << 63
@@ -248,134 +251,90 @@ def i64_to_i32_exact(value: int) -> int:
 
 
 # ---------------------------------------------------------------------------
-# Vectorized var-double array codec (numpy) — the blob hot path.
+# Token codec (numpy) — every bin block.
 #
-# A sketch blob's dominant content is the dense ContiguousCounts block: one
-# var-double per bucket (thousands per blob). These batch codecs produce
-# byte-identical output to the scalar functions above (pinned by the golden
-# vectors + randomized cross-checks in tests/test_serde.py) while running
-# ~50x faster.
+# A var-long and a var-double are one token shape: up to eight 7-bit groups,
+# each with a continuation MSB, then a ninth byte that carries 8 bits
+# whatever its MSB. A kind names the payload shift of each of the nine
+# groups, first byte first: a zig-zagged var-long takes them from the low
+# end, a var-double (rotated delta from 1.0) from the high end. The groups
+# partition the 64 bits, so a token's length is one past its last non-zero
+# group, and its bytes are the groups with the MSB set on all but the last.
+#
+# Framing is exact: every byte below 0x80 ends a token, so every maximal run
+# of continuation bytes starts one, and inside a run tokens are cut every
+# nine bytes from its start. Tokens go in chunks so that no temporary grows
+# with the block. The scalar codecs above are the reference these are
+# tested against (tests/test_serde.py).
 # ---------------------------------------------------------------------------
 
-def _np_rotl64(v, n):
-    import numpy as np
-    v = v.astype(np.uint64, copy=False)
-    return (v << np.uint64(n)) | (v >> np.uint64(64 - n))
+VAR_LONG = np.arange(0, 57, 7, dtype=np.uint64)
+VAR_DOUBLE = np.array([57, 50, 43, 36, 29, 22, 15, 8, 0], dtype=np.uint64)
+_CHUNK = 1 << 14  # tokens per step: ~1 MB per temporary matrix
+_SLOTS = np.arange(1, 10, dtype=np.uint8)  # 1-based byte slots of a token
+_GROUP_MASKS = np.array([0x7F] * 8 + [0xFF], dtype=np.uint8)
+# Row L: the group bits of the slots that a token of length L fills.
+_KEPT_GROUPS = np.where(_SLOTS <= np.arange(10)[:, None], _GROUP_MASKS, 0).astype(np.uint8)
 
 
-def _np_rotr64(v, n):
-    import numpy as np
-    v = v.astype(np.uint64, copy=False)
-    return (v >> np.uint64(n)) | (v << np.uint64(64 - n))
-
-
-def double_to_var_bits_array(values) -> "np.ndarray":
-    import numpy as np
-    v = np.asarray(values, dtype=np.float64)
-    delta = (v + 1.0).view(np.uint64) - np.uint64(_BITS_OF_ONE)
-    return _np_rotl64(delta, _VAR_DOUBLE_ROTATE)
-
-
-def var_bits_to_double_array(bits) -> "np.ndarray":
-    import numpy as np
-    b = _np_rotr64(np.asarray(bits, dtype=np.uint64), _VAR_DOUBLE_ROTATE)
-    return (b + np.uint64(_BITS_OF_ONE)).view(np.float64) - 1.0
-
-
-def var_double_encoded_length_array(values) -> "np.ndarray":
-    """Vectorized twin of var_double_encoded_length (trailing-zeros table)."""
-    import numpy as np
-    bits = double_to_var_bits_array(values)
-    tz = np.zeros(bits.shape[0], dtype=np.int64)
-    x = bits.copy()
-    zero = x == 0
-    # trailing zeros by binary probing
-    for shift in (32, 16, 8, 4, 2, 1):
-        mask = (x & np.uint64((1 << shift) - 1)) == 0
-        nz = mask & ~zero
-        tz[nz] += shift
-        x[nz] >>= np.uint64(shift)
-    tz[zero] = 64
-    table = np.asarray(_VARLONG_LENGTHS, dtype=np.int64)
-    return table[tz]
-
-
-def signed_var_long_encoded_length_array(values) -> "np.ndarray":
-    """Vectorized signed_var_long_encoded_length (zigzag + clz table)."""
-    import numpy as np
+def zig_zag_array(values: np.ndarray) -> np.ndarray:
     v = np.asarray(values, dtype=np.int64)
-    zz = ((v >> np.int64(63)) ^ (v << np.int64(1))).view(np.uint64)
-    # count leading zeros via bit smearing + SWAR popcount
-    y = zz.copy()
-    for s in (1, 2, 4, 8, 16, 32):
-        y |= y >> np.uint64(s)
-    m1 = np.uint64(0x5555555555555555)
-    m2 = np.uint64(0x3333333333333333)
-    m4 = np.uint64(0x0F0F0F0F0F0F0F0F)
-    h01 = np.uint64(0x0101010101010101)
-    y -= (y >> np.uint64(1)) & m1
-    y = (y & m2) + ((y >> np.uint64(2)) & m2)
-    y = (y + (y >> np.uint64(4))) & m4
-    ones = ((y * h01) >> np.uint64(56)).astype(np.int64)
-    table = np.asarray(_VARLONG_LENGTHS, dtype=np.int64)
-    return table[64 - ones]
+    return ((v >> 63) ^ (v << 1)).view(np.uint64)
 
 
-def encode_var_double_array(buf: bytearray, values) -> None:
-    """Batch encode_var_double: byte-identical concatenation of the scalar
-    encodings of each value."""
-    import numpy as np
-    v = np.asarray(values, dtype=np.float64)
-    n = v.shape[0]
-    if n == 0:
-        return
-    bits = double_to_var_bits_array(v)
-    lengths = var_double_encoded_length_array(v)
-    out = np.zeros((n, 9), dtype=np.uint8)
-    # byte j (0-based, j<8) carries bits (bits >> (57-7j)) & 0x7F with the
-    # continuation MSB set unless it is the final byte; byte 8 carries the
-    # remaining 8 bits verbatim.
-    for j in range(8):
-        grp = ((bits >> np.uint64(57 - 7 * j)) & np.uint64(0x7F)).astype(np.uint8)
-        is_last = lengths == j + 1
-        has = lengths > j
-        out[:, j] = np.where(has, np.where(is_last, grp, grp | 0x80), 0)
-    out[:, 8] = np.where(lengths == 9, (bits & np.uint64(0xFF)).astype(np.uint8), 0)
-    # flatten rows to their actual lengths
-    mask = np.arange(9)[None, :] < lengths[:, None]
-    buf.extend(out[mask].tobytes())
+def zig_zag_decode_array(payload: np.ndarray) -> np.ndarray:
+    return ((payload >> np.uint64(1)) ^ (np.uint64(0) - (payload & np.uint64(1)))).view(np.int64)
 
 
-def try_decode_var_double_array(data: bytes, pos: int, count: int):
-    """Attempt a vectorized parse of ``count`` var-doubles at data[pos:].
+def var_double_bits_array(values: np.ndarray) -> np.ndarray:
+    delta = (np.asarray(values, dtype=np.float64) + 1.0).view(np.uint64) - np.uint64(_BITS_OF_ONE)
+    return (delta << np.uint64(6)) | (delta >> np.uint64(58))
 
-    Returns (values ndarray, new_pos) or None when the fast parse is unsafe
-    (a 9-byte token whose 9th byte has the MSB set glues tokens together
-    under naive continuation-bit splitting; such a glue always produces an
-    apparent token longer than 9 bytes, which we detect and reject).
-    """
-    import numpy as np
-    arr = np.frombuffer(data, dtype=np.uint8, offset=pos)
-    if arr.shape[0] == 0 or count == 0:
-        return np.zeros(0, dtype=np.float64), pos
-    term = np.flatnonzero(arr < 128)
-    if term.shape[0] < count:
-        return None
-    ends = term[:count]
-    starts = np.concatenate(([0], ends[:-1] + 1))
-    lengths = ends - starts + 1
-    if (lengths > 9).any():
-        return None  # possible 9-byte-token glue; use the scalar path
-    # gather token bytes into an (count, 9) matrix
-    mat = np.zeros((count, 9), dtype=np.uint8)
-    idx = starts[:, None] + np.arange(9)[None, :]
-    valid = np.arange(9)[None, :] < lengths[:, None]
-    mat[valid] = arr[idx[valid]]
-    bits = np.zeros(count, dtype=np.uint64)
-    for j in range(8):
-        has = lengths > j
-        bits[has] |= (mat[has, j].astype(np.uint64) & np.uint64(0x7F)) << np.uint64(57 - 7 * j)
-    nine = lengths == 9
-    if nine.any():
-        bits[nine] |= mat[nine, 8].astype(np.uint64)
-    return var_bits_to_double_array(bits), pos + int(ends[count - 1]) + 1
+
+def var_bits_to_double_array(payload: np.ndarray) -> np.ndarray:
+    delta = (payload >> np.uint64(6)) | (payload << np.uint64(58))
+    return (delta + np.uint64(_BITS_OF_ONE)).view(np.float64) - 1.0
+
+
+def encode_tokens(payload: np.ndarray, kinds: np.ndarray) -> tuple[bytes, np.ndarray]:
+    """Bytes of uint64 ``payload`` (rows, k), row by row, with column c
+    written as kind ``kinds[c]`` (rows of VAR_LONG / VAR_DOUBLE), and each
+    token's length as (rows, k)."""
+    parts, lengths = [], np.empty(payload.shape, dtype=np.uint8)
+    for i in range(0, payload.shape[0], _CHUNK):
+        groups = ((payload[i:i + _CHUNK, :, None] >> kinds).astype(np.uint8)
+                  & _GROUP_MASKS)
+        size = np.maximum(np.maximum.reduce((groups != 0) * _SLOTS, -1), 1)[..., None]
+        groups[_SLOTS < size] |= 0x80
+        parts.append(groups[_SLOTS <= size].tobytes())
+        lengths[i:i + _CHUNK] = size[..., 0]
+    return b"".join(parts), lengths
+
+
+def decode_tokens(inp: Input, rows: int, kinds: np.ndarray) -> np.ndarray:
+    """Read ``rows`` rows of one token per kind at the cursor: uint64
+    payloads as (rows, k). A token takes at least a byte, so a row count
+    the bytes left cannot hold raises before anything is allocated."""
+    data, pos = inp.buffer(), inp.tell()
+    if rows * kinds.shape[0] > len(data) - pos:
+        raise ValueError("Input exhausted")
+    payload = np.empty((rows, kinds.shape[0]), dtype=np.uint64)
+    step = _CHUNK // kinds.shape[0]
+    for i in range(0, rows, step):
+        n = payload[i:i + step].size
+        window = np.frombuffer(data, np.uint8, min(9 * n, len(data) - pos), pos)
+        # bytes since the last byte below 0x80 (or since before the window):
+        # a token ends wherever that is a multiple of nine
+        at = np.arange(1, window.shape[0] + 1)
+        since_end = at - np.maximum.accumulate((window < 0x80) * at)
+        ends = (since_end % 9 == 0).nonzero()[0][:n]
+        if ends.shape[0] < n:
+            raise ValueError("Input exhausted")
+        before = np.concatenate(([-1], ends[:-1]))  # the byte before each token
+        groups = (window[np.minimum(before[:, None] + _SLOTS, ends[:, None])]
+                  & _KEPT_GROUPS[ends - before])
+        payload[i:i + step] = np.add.reduce(
+            groups.reshape(-1, *kinds.shape).astype(np.uint64) << kinds, -1)
+        pos += int(ends[-1]) + 1
+    inp.seek(pos)
+    return payload

@@ -37,13 +37,15 @@ from .serde import Input
 
 _I32_MIN = -(1 << 31)
 _I32_MAX = (1 << 31) - 1
-_I64_MIN = -(1 << 63)
-_I64_MAX = (1 << 63) - 1
 
 # Bin-encoding wire modes (spec store/mod.rs:237-258).
 INDEX_DELTAS_AND_COUNTS = 1
 INDEX_DELTAS = 2
 CONTIGUOUS_COUNTS = 3
+# Token kinds of one row of each mode's bin block.
+_DELTAS_AND_COUNTS = np.stack([serde.VAR_LONG, serde.VAR_DOUBLE])
+_DELTAS = serde.VAR_LONG[None]
+_COUNTS = serde.VAR_DOUBLE[None]
 
 # Decode-robustness cap on the dense span an UNBOUNDED store will
 # materialize from wire bytes: two sparse bins at -2^31 and 2^31-1 fit in
@@ -129,11 +131,10 @@ class DenseStore:
         self.min_index = new_min
         self.max_index = new_max
 
-    def _clamp_batch(self, idx: np.ndarray) -> np.ndarray:
-        """Apply collapse clamping to a batch of indexes and fold existing
-        out-of-range buckets; returns the effective indexes."""
-        if idx.size == 0:
-            return idx
+    def _clamp_batch(self, idx: np.ndarray) -> tuple[np.ndarray, int, int]:
+        """Apply collapse clamping to a non-empty batch of indexes and fold
+        existing out-of-range buckets; returns the effective indexes and
+        their min and max."""
         batch_min = int(idx.min())
         batch_max = int(idx.max())
         cur_min = batch_min if self.is_empty() else min(self.min_index, batch_min)
@@ -145,6 +146,7 @@ class DenseStore:
                 floor = cur_max - self.max_num_bins + 1
                 self.is_collapsed = True
                 idx = np.maximum(idx, floor)
+                batch_min, batch_max = max(batch_min, floor), max(batch_max, floor)
                 if not self.is_empty() and self.min_index < floor:
                     if self.max_index < floor:
                         # everything folds into the single floor bucket
@@ -163,6 +165,7 @@ class DenseStore:
                 ceil = cur_min + self.max_num_bins - 1
                 self.is_collapsed = True
                 idx = np.minimum(idx, ceil)
+                batch_min, batch_max = min(batch_min, ceil), min(batch_max, ceil)
                 if not self.is_empty() and self.max_index > ceil:
                     if self.min_index > ceil:
                         total = self.counts.sum()
@@ -174,7 +177,7 @@ class DenseStore:
                         self.counts = self.counts[:cut].copy()
                         self.counts[-1] += folded
                         self.max_index = ceil
-        return idx
+        return idx, batch_min, batch_max
 
     # -- inserts ---------------------------------------------------------------
 
@@ -196,9 +199,9 @@ class DenseStore:
                 w = w[keep]
         if idx.size == 0:
             return
-        idx = self._clamp_batch(idx)
-        new_min = int(min(idx.min(), self.min_index)) if not self.is_empty() else int(idx.min())
-        new_max = int(max(idx.max(), self.max_index)) if not self.is_empty() else int(idx.max())
+        idx, new_min, new_max = self._clamp_batch(idx)
+        if not self.is_empty():
+            new_min, new_max = min(new_min, self.min_index), max(new_max, self.max_index)
         if new_min != self.min_index or new_max != self.max_index:
             self._reframe(new_min, new_max)
         np.add.at(self.counts, idx - self.min_index, w)
@@ -236,42 +239,33 @@ class DenseStore:
 
     def encode(self, buf: bytearray, store_flag_type: int) -> None:
         """Choose dense vs sparse block by exact encoded-size comparison
-        (spec store/mod.rs:31-91); ties go dense (``<=``)."""
+        (spec store/mod.rs:31-91); ties go dense (``<=``). The sparse block's
+        tokens are written first, from the non-empty bins only; an empty
+        bin's count is a one-byte token, so the dense size follows from
+        them without walking the span."""
         if self.is_empty():
             return
         counts = self.counts
         num_bins = counts.shape[0]
-
-        dense_size = serde.unsigned_var_long_encoded_length(num_bins)
-        dense_size += serde.signed_var_long_encoded_length(self.min_index)
-        dense_size += serde.signed_var_long_encoded_length(1)
-
-        count_lengths = serde.var_double_encoded_length_array(counts)
-        dense_size += int(count_lengths.sum())
-
         nz = np.flatnonzero(counts)
-        num_non_empty = int(nz.shape[0])
-        nz_indexes = nz + self.min_index
-        deltas = np.diff(np.concatenate(([0], nz_indexes)))
-        sparse_size = int(count_lengths[nz].sum()) + int(
-            serde.signed_var_long_encoded_length_array(deltas).sum())
-
-        if dense_size <= sparse_size:
+        sparse, lengths = serde.encode_tokens(np.stack([
+            serde.zig_zag_array(np.diff(nz + self.min_index, prepend=0)),
+            serde.var_double_bits_array(counts[nz])], axis=-1), _DELTAS_AND_COUNTS)
+        dense_size = (serde.unsigned_var_long_encoded_length(num_bins)
+                      + serde.signed_var_long_encoded_length(self.min_index)
+                      + serde.signed_var_long_encoded_length(1)
+                      + num_bins - nz.shape[0] + int(lengths[:, 1].sum()))
+        if dense_size <= len(sparse):
             buf.append(store_flag_type | (CONTIGUOUS_COUNTS << 2))
             serde.encode_unsigned_var_long(buf, num_bins)
             serde.encode_signed_var_long(buf, self.min_index)
             serde.encode_signed_var_long(buf, 1)
-            serde.encode_var_double_array(buf, counts)
+            buf += serde.encode_tokens(
+                serde.var_double_bits_array(counts)[:, None], _COUNTS)[0]
         else:
             buf.append(store_flag_type | (INDEX_DELTAS_AND_COUNTS << 2))
-            serde.encode_unsigned_var_long(buf, num_non_empty)
-            previous_index = 0
-            for i, c in enumerate(counts):
-                if c != 0.0:
-                    index = self.min_index + i
-                    serde.encode_signed_var_long(buf, index - previous_index)
-                    serde.encode_var_double(buf, float(c))
-                    previous_index = index
+            serde.encode_unsigned_var_long(buf, nz.shape[0])
+            buf += sparse
 
     def _check_decode_span(self, lo: int, hi: int) -> None:
         """Reject wire input whose bins would reframe this store beyond
@@ -289,51 +283,52 @@ class DenseStore:
 
     def decode_and_merge_with(self, inp: Input, mode: int) -> None:
         """Decode one bin block, adding straight into this store
-        (spec store/mod.rs:92-141). Each of the three bin encodings decodes
-        to (indexes, counts); one tail then drops non-positive counts exactly
+        (spec store/mod.rs:92-141). Each of the three bin encodings reads
+        its tokens in one ``serde.decode_tokens`` call and yields index
+        steps and counts; one tail then drops non-positive counts exactly
         as the reference's ``add`` does, checks that the kept indexes fit
         i32 and MAX_DECODE_DENSE_SPAN, and adds them. A declared bin count
-        is never trusted for allocation: sparse loops are bounded by input
-        exhaustion and dense spans by MAX_DECODE_DENSE_SPAN."""
+        is never trusted for allocation: it is checked against the bytes
+        left before any token is read, and dense spans are bounded by
+        MAX_DECODE_DENSE_SPAN."""
         if mode not in (INDEX_DELTAS_AND_COUNTS, INDEX_DELTAS, CONTIGUOUS_COUNTS):
             raise ValueError("Unknown BinEncodingMode.")
         num_bins = serde.decode_unsigned_var_long(inp)
         if num_bins < 0:
             raise ValueError("corrupt blob: negative bin count")
         if mode == CONTIGUOUS_COUNTS:
-            index = serde.decode_signed_var_long(inp)
-            index_delta = serde.decode_signed_var_long(inp)
-            fast = serde.try_decode_var_double_array(inp.buffer(), inp.tell(), num_bins)
-            if fast is None:
-                counts = [serde.decode_var_double(inp) for _ in range(num_bins)]
-            else:
-                counts, new_pos = fast
-                inp.seek(new_pos)
-            last = index + index_delta * max(len(counts) - 1, 0)
-            if _I64_MIN <= last <= _I64_MAX:
-                indexes = index + index_delta * np.arange(len(counts), dtype=np.int64)
-            else:  # int64 arithmetic would wrap a far index back into range
-                indexes = [index + index_delta * k for k in range(len(counts))]
+            first = serde.decode_signed_var_long(inp)
+            step = serde.decode_signed_var_long(inp)
+            counts = serde.var_bits_to_double_array(
+                serde.decode_tokens(inp, num_bins, _COUNTS)[:, 0])
+            steps = np.full(num_bins, step, dtype=np.int64)
+            steps[:1] = first
+        elif mode == INDEX_DELTAS_AND_COUNTS:
+            tokens = serde.decode_tokens(inp, num_bins, _DELTAS_AND_COUNTS)
+            steps = serde.zig_zag_decode_array(tokens[:, 0])
+            counts = serde.var_bits_to_double_array(tokens[:, 1])
+            del tokens
         else:
-            with_counts = mode == INDEX_DELTAS_AND_COUNTS
-            indexes, counts, index = [], [], 0
-            for _ in range(num_bins):
-                index += serde.decode_signed_var_long(inp)
-                indexes.append(index)
-                counts.append(serde.decode_var_double(inp) if with_counts else 1.0)
-        counts = np.asarray(counts, dtype=np.float64)
+            steps = serde.zig_zag_decode_array(
+                serde.decode_tokens(inp, num_bins, _DELTAS)[:, 0])
+            counts = np.ones(num_bins)
+        # A block has fewer bins than its blob has bytes (under 2^31), so
+        # steps of at most 2^32 in magnitude cannot wrap an int64 running
+        # sum; past that, Python ints keep a far index from wrapping back
+        # into range.
+        if num_bins and (steps.min() < -(1 << 32) or steps.max() > 1 << 32):
+            steps = steps.astype(object)
+        indexes = np.cumsum(steps, out=steps)
         keep = counts > 0.0
-        if not keep.any():
+        if not keep.all():
+            indexes, counts = indexes[keep], counts[keep]
+        if not indexes.size:
             return
-        # Python-int indexes past int64 make an object/uint64 array, which
-        # the i32 check below still rejects
-        indexes = np.asarray(indexes)[keep]
         lo, hi = int(indexes.min()), int(indexes.max())
         serde.i64_to_i32_exact(lo)
         serde.i64_to_i32_exact(hi)
         self._check_decode_span(lo, hi)
-        self.add_many(indexes, counts[keep])
-
+        self.add_many(indexes, counts)
 
 def bin_encoding_mode_of_flag(marker: int) -> int:
     mode = (marker >> 2) - 1

@@ -238,3 +238,21 @@ def test_hostile_declared_lengths_raise_before_allocating():
     _serde.encode_var_double(evil, 1.0)
     with pytest.raises(ValueError, match="span"):
         DDSketch.decode(bytes(GOLDEN_BLOB_LOG_100) + bytes(evil))
+
+    # DDSketch: a bin block declaring 2^40 bins in a few bytes, in each bin
+    # mode, is checked against the bytes left before any token is read.
+    import tracemalloc
+
+    from sketches_rust_spark.kernel.store import CONTIGUOUS_COUNTS, INDEX_DELTAS
+    for mode in (INDEX_DELTAS_AND_COUNTS, INDEX_DELTAS, CONTIGUOUS_COUNTS):
+        evil = bytearray([FLAG_TYPE_POSITIVE_STORE | (mode << 2)])
+        _serde.encode_unsigned_var_long(evil, 1 << 40)
+        evil += bytes([2, 2, 2, 2])
+        for receiver in (DDSketch.logarithmic_unbounded_size_dense_store(2e-2),
+                         DDSketch.logarithmic_collapsing_lowest_dense(2e-2, 50)):
+            tracemalloc.start()
+            with pytest.raises(ValueError, match="exhausted"):
+                receiver.decode_and_merge_with(bytes(GOLDEN_BLOB_LOG_100) + bytes(evil))
+            peak = tracemalloc.get_traced_memory()[1]
+            tracemalloc.stop()
+            assert peak < 1 << 16, (mode, peak)

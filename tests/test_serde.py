@@ -143,75 +143,146 @@ def test_build_double():
     assert serde.build_double(0, 1.0) == 1.0
 
 
-def test_var_double_array_codec_matches_scalar():
-    """Randomized cross-check: batch encode/decode is byte/bit identical to
-    the scalar codec, including 9-byte tokens with MSB-set final bytes."""
+_U64 = (1 << 64) - 1
+I64_EDGES = [0, 1, -1, 2, -2, 63, -64, 64, -65, (1 << 31) - 1, -(1 << 31),
+             1 << 32, -(1 << 32), 1 << 62, -(1 << 62), (1 << 63) - 2,
+             (1 << 63) - 1, -(1 << 63) + 1, -(1 << 63)]
+
+
+def _tokens(columns):
+    """(payload, kinds, scalar bytes, scalar lengths) of rows of tokens, one
+    column per kind: ``("long", int64 values)`` or ``("double", values)``."""
+    import numpy as np
+
+    payload = np.stack([serde.zig_zag_array(v) if kind == "long"
+                        else serde.var_double_bits_array(v)
+                        for kind, v in columns], axis=-1)
+    kinds = np.stack([serde.VAR_LONG if kind == "long" else serde.VAR_DOUBLE
+                      for kind, _ in columns])
+    buf, lengths = bytearray(), []
+    for row in zip(*(v for _, v in columns)):
+        for (kind, _), value in zip(columns, row):
+            start = len(buf)
+            if kind == "long":
+                serde.encode_signed_var_long(buf, int(value))
+            else:
+                serde.encode_var_double(buf, float(value))
+            lengths.append(len(buf) - start)
+    return payload, kinds, bytes(buf), lengths
+
+
+def test_token_codec_matches_scalar():
+    """The token codec writes and reads the scalar codecs' bytes exactly:
+    var-doubles (including 9-byte tokens with MSB-set final bytes),
+    var-longs at the i64 edges, and interleaved (delta, count) streams."""
     import numpy as np
 
     rng = np.random.default_rng(17)
-    cases = np.concatenate([
+    doubles = np.concatenate([
         rng.integers(0, 1 << 40, size=2000).astype(np.float64),
         rng.lognormal(0, 30, size=2000),
         -rng.lognormal(0, 30, size=500),
         np.array([0.0, 1.0, -1.0, -0.5, 4.503599627370495e15,
                   4.503599627370496e15, 9.00719925474099e15]),
     ])
-    batch = bytearray()
-    serde.encode_var_double_array(batch, cases)
-    scalar = bytearray()
-    for v in cases:
-        serde.encode_var_double(scalar, float(v))
-    assert bytes(batch) == bytes(scalar)
+    longs = np.concatenate([
+        np.array(I64_EDGES, dtype=np.int64),
+        rng.integers(-(1 << 63), (1 << 63) - 1, size=2000, dtype=np.int64),
+        rng.integers(-300, 300, size=2488),
+    ])
+    assert longs.shape == doubles.shape
+    for columns in ([("double", doubles)], [("long", longs)],
+                    [("long", longs), ("double", doubles)]):
+        payload, kinds, expected, scalar_lengths = _tokens(columns)
+        written, lengths = serde.encode_tokens(payload, kinds)
+        assert written == expected
+        assert lengths.ravel().tolist() == scalar_lengths
 
-    lens = serde.var_double_encoded_length_array(cases)
-    for v, ln in zip(cases, lens):
-        assert serde.var_double_encoded_length(float(v)) == ln
-
-    # the decode contract: batch decode == scalar decode (the format itself
-    # is lossy below ulp(1.0) — v is stored as bits(v+1.0), same as the
-    # reference — so we compare decoders against each other, not against v)
-    inp = Input(bytes(batch))
-    scalar_decoded = np.array([serde.decode_var_double(inp) for _ in cases])
-    fast = serde.try_decode_var_double_array(bytes(batch), 0, len(cases))
-    if fast is not None:
-        values, pos = fast
-        assert pos == len(batch)
-        np.testing.assert_array_equal(values, scalar_decoded)
+        inp = Input(expected + bytes([0x7F]))
+        read = serde.decode_tokens(inp, payload.shape[0], kinds)
+        assert inp.tell() == len(expected)
+        np.testing.assert_array_equal(read, payload)
+        ref = Input(expected)
+        scalar = [[serde.decode_signed_var_long(ref) if kind == "long"
+                   else serde.decode_var_double(ref) for kind, _ in columns]
+                  for _ in range(payload.shape[0])]
+        for c, (kind, values) in enumerate(columns):
+            got = (serde.zig_zag_decode_array(read[:, c]) if kind == "long"
+                   else serde.var_bits_to_double_array(read[:, c]))
+            np.testing.assert_array_equal(got, [row[c] for row in scalar])
+            if kind == "long":
+                np.testing.assert_array_equal(got, values)
     # integer counts (the real blob content) round-trip exactly
     ints = rng.integers(0, 1 << 50, size=3000).astype(np.float64)
-    b2 = bytearray()
-    serde.encode_var_double_array(b2, ints)
-    fast2 = serde.try_decode_var_double_array(bytes(b2), 0, len(ints))
-    if fast2 is None:
-        inp2 = Input(bytes(b2))
-        got2 = np.array([serde.decode_var_double(inp2) for _ in ints])
-    else:
-        got2, pos2 = fast2
-        assert pos2 == len(b2)
-    np.testing.assert_array_equal(got2, ints)
+    blob, _ = serde.encode_tokens(serde.var_double_bits_array(ints)[:, None],
+                                  serde.VAR_DOUBLE[None])
+    read = serde.decode_tokens(Input(blob), ints.shape[0], serde.VAR_DOUBLE[None])
+    np.testing.assert_array_equal(serde.var_bits_to_double_array(read[:, 0]), ints)
 
 
-def test_var_double_array_decode_glue_fallback():
-    """A 9-byte encoding whose 9th byte has the MSB set must be rejected by
-    the fast parser (returns None), never mis-parsed."""
+def _glued_double():
+    """A value whose var-double is 9 bytes with an MSB-set last byte."""
     import numpy as np
 
-    # -1.0 encodes to 9 bytes ending in 48 (<128): find a value whose last
-    # byte >= 128 by scanning
-    found = None
-    rng = np.random.default_rng(3)
-    for v in rng.lognormal(0, 40, size=20000):
+    for v in np.random.default_rng(3).lognormal(0, 40, size=20000):
         buf = bytearray()
         serde.encode_var_double(buf, float(v))
         if len(buf) == 9 and buf[8] >= 128:
-            found = float(v)
-            break
-    assert found is not None
+            return float(v)
+    raise AssertionError("no glued var-double found")
+
+
+def test_token_codec_decodes_glued_nine_byte_token():
+    """A 9-byte token whose 9th byte has the MSB set is framed exactly: with
+    1.0 after it, both decode to the scalar values and the cursor ends at
+    the end of the input."""
+    found = _glued_double()
     buf = bytearray()
     serde.encode_var_double(buf, found)
     serde.encode_var_double(buf, 1.0)
-    fast = serde.try_decode_var_double_array(bytes(buf), 0, 2)
-    assert fast is None  # glue detected -> caller falls back to scalar
     inp = Input(bytes(buf))
-    assert serde.decode_var_double(inp) == found
-    assert serde.decode_var_double(inp) == 1.0
+    read = serde.decode_tokens(inp, 2, serde.VAR_DOUBLE[None])
+    assert inp.tell() == len(buf)
+    assert serde.var_bits_to_double_array(read[:, 0]).tolist() == [found, 1.0]
+    ref = Input(bytes(buf))
+    assert [serde.decode_var_double(ref), serde.decode_var_double(ref)] == [found, 1.0]
+
+
+@pytest.mark.parametrize("payloads, run", [
+    ([_U64, 0], 9),                    # one glued token, then a 1-byte token
+    ([_U64, (1 << 63) - 1], 17),       # glued token, then 8 + terminal
+    ([_U64, _U64, 0], 18),             # two glued tokens, then a 1-byte token
+])
+def test_token_framing_cuts_continuation_runs_every_nine_bytes(payloads, run):
+    """Inside a run of continuation bytes tokens are cut every nine bytes
+    from its start; the same bytes read as either kind match the scalar
+    decoders."""
+    import numpy as np
+
+    payload = np.array(payloads, dtype=np.uint64)[:, None]
+    blob, lengths = serde.encode_tokens(payload, serde.VAR_LONG[None])
+    assert all(b >= 0x80 for b in blob[:run]) and blob[run] < 0x80
+    assert len(blob) == int(lengths.sum())
+    for kind, scalar in ((serde.VAR_LONG, serde.decode_unsigned_var_long),
+                         (serde.VAR_DOUBLE, serde.decode_var_double)):
+        inp = Input(blob)
+        read = serde.decode_tokens(inp, len(payloads), kind[None])
+        assert inp.tell() == len(blob)
+        ref = Input(blob)
+        expected = [scalar(ref) for _ in payloads]
+        got = (read[:, 0].view(np.int64) if kind is serde.VAR_LONG
+               else serde.var_bits_to_double_array(read[:, 0]))
+        np.testing.assert_array_equal(got, expected)
+    np.testing.assert_array_equal(
+        serde.decode_tokens(Input(blob), len(payloads), serde.VAR_LONG[None]), payload)
+
+
+def test_token_cut_off_by_end_of_input_raises():
+    """A token whose continuation runs past the end of the input, or a row
+    count the bytes left cannot hold, raises ValueError."""
+    with pytest.raises(ValueError):
+        serde.decode_tokens(Input(bytes([0x81, 0x82])), 1, serde.VAR_LONG[None])
+    with pytest.raises(ValueError):
+        serde.decode_tokens(Input(bytes([0x01, 0x81])), 2, serde.VAR_DOUBLE[None])
+    with pytest.raises(ValueError):
+        serde.decode_tokens(Input(bytes([0x01, 0x02, 0x03])), 2, serde.VAR_LONG[None].repeat(2, 0))

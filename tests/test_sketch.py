@@ -246,3 +246,184 @@ def test_decode_rejects_contiguous_index_past_i32_by_int64_wrap():
     with pytest.raises(ValueError, match="i32"):
         DDSketch.logarithmic_collapsing_lowest_dense(2e-2, 50).decode_and_merge_with(
             GOLDEN_BLOB_LOG_100 + bytes(block))
+
+
+def _block(mode, num_bins, *tokens):
+    """A positive-store bin block of ``mode`` appended to a golden blob;
+    ``tokens`` are ("long", v) / ("double", v) pairs after the bin count."""
+    from sketches_rust_spark.kernel import serde
+    from sketches_rust_spark.kernel.store import FLAG_TYPE_POSITIVE_STORE
+
+    block = bytearray([FLAG_TYPE_POSITIVE_STORE | (mode << 2)])
+    serde.encode_unsigned_var_long(block, num_bins)
+    for kind, v in tokens:
+        if kind == "long":
+            serde.encode_signed_var_long(block, v)
+        else:
+            serde.encode_var_double(block, v)
+    return GOLDEN_BLOB_LOG_100 + bytes(block)
+
+
+def test_decode_rejects_sparse_index_past_i32_by_int64_wrap():
+    """Sparse index deltas whose running sum passes int64 must not wrap back
+    into range: (2^63-1) + (2^63-1) + 7 is far past i32, not bucket 5."""
+    from sketches_rust_spark.kernel.store import INDEX_DELTAS_AND_COUNTS
+
+    big = (1 << 63) - 1
+    blob = _block(INDEX_DELTAS_AND_COUNTS, 3, ("long", big), ("double", 0.0),
+                  ("long", big), ("double", 0.0), ("long", 7), ("double", 1.0))
+    with pytest.raises(ValueError, match="i32"):
+        DDSketch.decode(blob)
+    with pytest.raises(ValueError, match="i32"):
+        DDSketch.logarithmic_collapsing_lowest_dense(2e-2, 50).decode_and_merge_with(blob)
+
+
+def test_decode_rejects_contiguous_block_cut_after_header():
+    """A contiguous block that declares bins but ends right after its header
+    is truncated, not empty."""
+    from sketches_rust_spark.kernel.store import CONTIGUOUS_COUNTS
+
+    blob = _block(CONTIGUOUS_COUNTS, 5, ("long", 0), ("long", 1))
+    with pytest.raises(ValueError):
+        DDSketch.decode(blob)
+    with pytest.raises(ValueError):
+        DDSketch.logarithmic_collapsing_lowest_dense(2e-2, 50).decode_and_merge_with(blob)
+    with pytest.raises(ValueError):  # the last count token loses its final byte
+        DDSketch.decode(_block(CONTIGUOUS_COUNTS, 1, ("long", 0), ("long", 1),
+                               ("double", 4.0))[:-1])
+
+
+def _reference_blob(s, modes):
+    """The blob the scalar (golden-pinned) encoders write for ``s``: the
+    reference's dense-vs-sparse choice by exact encoded size, ties dense.
+    Adds the bin modes written to ``modes``."""
+    from sketches_rust_spark.kernel import serde
+    from sketches_rust_spark.kernel.sketch import FLAG_ZERO_COUNT
+    from sketches_rust_spark.kernel.store import (
+        CONTIGUOUS_COUNTS,
+        FLAG_TYPE_NEGATIVE_STORE,
+        FLAG_TYPE_POSITIVE_STORE,
+        INDEX_DELTAS_AND_COUNTS,
+    )
+
+    buf = bytearray()
+    s.index_mapping.encode(buf)
+    if s.zero_count != 0.0:
+        buf.append(FLAG_ZERO_COUNT)
+        serde.encode_var_double(buf, s.zero_count)
+    for store, flag in ((s.positive_value_store, FLAG_TYPE_POSITIVE_STORE),
+                        (s.negative_value_store, FLAG_TYPE_NEGATIVE_STORE)):
+        if store.is_empty():
+            continue
+        counts, lo = store.counts.tolist(), store.min_index
+        bins = [(lo + i, c) for i, c in enumerate(counts) if c != 0.0]
+        deltas = [i - p for (i, _), p in zip(bins, [0] + [i for i, _ in bins])]
+        dense = (serde.unsigned_var_long_encoded_length(len(counts))
+                 + serde.signed_var_long_encoded_length(lo)
+                 + serde.signed_var_long_encoded_length(1)
+                 + sum(serde.var_double_encoded_length(c) for c in counts))
+        sparse = sum(serde.signed_var_long_encoded_length(d)
+                     + serde.var_double_encoded_length(c)
+                     for d, (_, c) in zip(deltas, bins))
+        modes.add(CONTIGUOUS_COUNTS if dense <= sparse else INDEX_DELTAS_AND_COUNTS)
+        if dense <= sparse:
+            buf.append(flag | (CONTIGUOUS_COUNTS << 2))
+            serde.encode_unsigned_var_long(buf, len(counts))
+            serde.encode_signed_var_long(buf, lo)
+            serde.encode_signed_var_long(buf, 1)
+            for c in counts:
+                serde.encode_var_double(buf, c)
+        else:
+            buf.append(flag | (INDEX_DELTAS_AND_COUNTS << 2))
+            serde.encode_unsigned_var_long(buf, len(bins))
+            for d, (_, c) in zip(deltas, bins):
+                serde.encode_signed_var_long(buf, d)
+                serde.encode_var_double(buf, c)
+    return bytes(buf)
+
+
+def test_blobs_equal_scalar_reference_bytes():
+    """Every preset, weighted and unweighted, with negatives and zeros, both
+    block kinds: the blob is the scalar encoders' bytes, and decoding it
+    reads back the same bins."""
+    rng = np.random.default_rng(11)
+    modes = set()
+    for name in DDSketch.PRESETS:
+        for alpha, bins, n in ((0.01, 2048, 3000), (0.02, 64, 400), (0.05, 2048, 25)):
+            for weighted in (False, True):
+                v = rng.lognormal(rng.uniform(-2, 6), rng.uniform(0.2, 3), n)
+                v[rng.random(n) < 0.3] *= -1
+                v[rng.random(n) < 0.05] = 0.0
+                s = DDSketch.preset(name, alpha, bins)
+                s.accept_many(v, rng.uniform(0.01, 9.0, n) if weighted else None)
+                blob = s.encode()
+                assert blob == _reference_blob(s, modes), (name, alpha, weighted)
+                assert DDSketch.decode(blob).encode() == blob
+    assert len(modes) == 2  # both the dense and the sparse block were written
+
+
+def test_sparse_block_with_glued_count_tokens_round_trips():
+    """Fractional weights make 9-byte count tokens whose last byte has the
+    MSB set inside a sparse block; decoding reads the scalar values."""
+    from sketches_rust_spark.kernel import serde
+    from sketches_rust_spark.kernel.serde import Input
+    from sketches_rust_spark.kernel.store import INDEX_DELTAS_AND_COUNTS
+
+    rng = np.random.default_rng(5)
+    s = DDSketch.logarithmic_unbounded_size_dense_store(0.01)
+    s.accept_many(rng.lognormal(0, 4, 60), rng.uniform(0.1, 3.0, 60))
+    blob = s.encode()
+    inp = Input(blob)
+    inp.seek(17)  # after the mapping
+    assert inp.read_byte() >> 2 == INDEX_DELTAS_AND_COUNTS
+    index, bins, glued = 0, {}, 0
+    for _ in range(serde.decode_unsigned_var_long(inp)):
+        index += serde.decode_signed_var_long(inp)
+        start = inp.tell()
+        bins[index] = serde.decode_var_double(inp)
+        glued += inp.tell() - start == 9 and blob[inp.tell() - 1] >= 0x80
+    assert not inp.has_remaining()
+    assert glued > 0
+    idx, counts = DDSketch.decode(blob).positive_value_store.nonzero_bins()
+    assert dict(zip(idx.tolist(), counts.tolist())) == bins
+    assert DDSketch.decode(blob).encode() == blob
+
+
+@pytest.mark.parametrize("fractional", [False, True])
+def test_store_codec_peak_memory_per_bin(fractional):
+    """tracemalloc peaks of encode and decode of a 2^20-bin dense store stay
+    within a bound per bin of span (tokens go in fixed-size chunks)."""
+    import tracemalloc
+
+    from sketches_rust_spark.kernel.serde import Input
+    from sketches_rust_spark.kernel.store import (
+        FLAG_TYPE_POSITIVE_STORE,
+        UNBOUNDED,
+        DenseStore,
+        bin_encoding_mode_of_flag,
+    )
+
+    n = 1 << 20
+    rng = np.random.default_rng(5)
+    store = DenseStore(UNBOUNDED)
+    store.add_many(np.arange(n), rng.random(n) * 1000 + 1e-3 if fractional
+                   else rng.integers(1, 1000, n).astype(np.float64))
+
+    def peak(fn):
+        tracemalloc.start()
+        base = tracemalloc.get_traced_memory()[0]
+        out = fn()
+        top = tracemalloc.get_traced_memory()[1] - base
+        tracemalloc.stop()
+        return out, top / n
+
+    buf = bytearray()
+    _, encode_peak = peak(lambda: store.encode(buf, FLAG_TYPE_POSITIVE_STORE))
+    inp = Input(bytes(buf))
+    mode = bin_encoding_mode_of_flag(inp.read_byte())
+    target = DenseStore(UNBOUNDED)
+    _, decode_peak = peak(lambda: target.decode_and_merge_with(inp, mode))
+    assert not inp.has_remaining()
+    # counts travel as bits(count + 1.0), exact for integral counts
+    np.testing.assert_array_equal(target.counts, (store.counts + 1.0) - 1.0)
+    assert encode_peak <= 50 and decode_peak <= 36, (encode_peak, decode_peak)
