@@ -9,9 +9,9 @@ Public surface:
     )
 """
 
-from . import _zipcache
+from . import _task_hooks
 
-_zipcache.install()  # workers skip re-reading unchanged zips per task
+_task_hooks.install()  # workers skip unchanged zips, ACK each task at once
 
 from .kernel.bloom import BloomFilter
 from .kernel.cms import CountMinSketch

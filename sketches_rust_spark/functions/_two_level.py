@@ -9,9 +9,17 @@ the same plan:
    group then keeps only numpy slices of the prepared arrays. When the
    partition ends, each (family, group) gets one fresh sketch, one
    ``insert`` of its slices, and one blob row (keys..., sketch, rows_in).
-2. **merge** — ``groupBy(keys).applyInPandas`` folds each group's blobs with
-   the kernel's ``decode_and_merge_with``. A group has at most one partial
-   per scan partition, so a skewed key cannot make a hot reducer.
+2. **merge** — ``grouped_blobs``: the blob rows are hash-repartitioned on
+   the keys (one partition without keys), sorted within partitions by the
+   keys, and one ``mapInArrow`` call per partition folds each contiguous
+   key run with the kernel's ``decode_and_merge_with``. Runs are cut on the
+   exact Arrow key values, so no key is converted to pandas. The sketches
+   are mergeable, so the fold may take a group's blobs in any batching, and
+   no Arrow round trip is paid per group. The run still open at the end of
+   an Arrow batch is carried into the next, and each batch's finished
+   groups are emitted at once, so a task holds at most one group, one batch
+   and that batch's output rows. A group has at most one partial per scan
+   partition, so a skewed key cannot make a hot reducer.
 
 A family plugs in through :class:`SketchAdapter`:
 
@@ -36,6 +44,8 @@ from typing import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -103,17 +113,107 @@ def blob_schema(df: DataFrame, keys: Sequence[str], family: bool = False) -> Str
 
 
 def grouped_blobs(df: DataFrame, keys: Sequence[str],
-                  fold: Callable[[pd.DataFrame], tuple[bytes, int]]) -> DataFrame:
-    """One blob row per group: ``fold(rows of the group) -> (blob, rows_in)``."""
+                  fold: Callable[[tuple, pd.DataFrame], tuple[bytes, int]]) -> DataFrame:
+    """One blob row per group: ``fold(key values, the group's other columns)
+    -> (blob, rows_in)``.
+
+    One ``mapInArrow`` call per partition of a key-hash repartition (one
+    partition when there are no keys), sorted within partitions by the
+    keys: ``fold`` runs once per contiguous key run. Runs are cut on the
+    exact Arrow key values, with Spark's grouping equality (null equals
+    null, NaN equals NaN, -0.0 equals 0.0), and each output key is its
+    group's first Arrow row, so no key passes through pandas. The run still
+    open at the end of an Arrow batch is carried into the next, and each
+    batch's finished groups are yielded at once, so a task holds at most
+    one group, one batch and that batch's output. With no keys the output
+    is one row, and no row on empty input."""
     keys = list(keys)
+    schema = blob_schema(df, keys)
+    values = [c for c in df.columns if c not in keys]
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob, rows = fold(pdf)
-        head = {k: pdf[k].iloc[0] for k in keys}
-        return pd.DataFrame([head | {SKETCH_COL: blob, ROWS_COL: rows}],
-                            columns=keys + [SKETCH_COL, ROWS_COL])
+    def close(head: pa.RecordBatch, run: list[pd.DataFrame]) -> tuple[bytes, int]:
+        return fold(tuple(c[0].as_py() for c in head.columns),
+                    run[0] if len(run) == 1 else pd.concat(run, ignore_index=True))
 
-    return df.groupBy(*keys).applyInPandas(apply, schema=blob_schema(df, keys))
+    def merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        head, run = None, []  # the open group: its first row's keys, its rows
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            keyed, rows = batch.select(keys), batch.select(values).to_pandas()
+            heads, folded, at = [], [], 0
+            for start in _group_starts(keyed, head):
+                if start > at:
+                    run.append(rows.iloc[at:start])
+                if head is not None:
+                    heads.append(head)
+                    folded.append(close(head, run))
+                head, run, at = keyed.slice(start, 1), [], start
+            run.append(rows.iloc[at:])
+            if heads:
+                yield _blob_batch(heads, folded, schema)
+        if head is not None:
+            yield _blob_batch([head], [close(head, run)], schema)
+
+    by_key = df.repartition(*keys) if keys else df.repartition(1)
+    if keys:  # sortWithinPartitions() rejects an empty column list
+        by_key = by_key.sortWithinPartitions(*keys)
+    return by_key.mapInArrow(merge, schema=schema)
+
+
+def _group_starts(keyed: pa.RecordBatch, head: pa.RecordBatch | None) -> np.ndarray:
+    """Rows of a non-empty key-sorted batch that start a group: each row
+    whose keys differ from the row before, and row 0 unless it continues
+    the open group whose first row is ``head``."""
+    n = keyed.num_rows
+    new = np.zeros(n, dtype=bool)
+    new[0] = head is None
+    for i, col in enumerate(keyed.columns):
+        if head is not None:
+            col = pa.concat_arrays([head.column(i), col])
+        new[n + 1 - len(col):] |= _differs(col)
+    return np.flatnonzero(new)
+
+
+_NAN = object()  # one NaN in a nested key, equal only to itself
+
+
+def _differs(col: pa.Array) -> np.ndarray:
+    """Whether each row after the first differs from the row before it, by
+    Spark's grouping equality: null equals null, NaN equals NaN and -0.0
+    equals 0.0."""
+    a, b = col.slice(1), col.slice(0, len(col) - 1)
+    try:
+        same = pc.fill_null(pc.equal(a, b), False)
+    except pa.ArrowNotImplementedError:  # nested or all-null keys
+        vals = [_comparable(v) for v in col.to_pylist()]
+        return np.array([x != y for x, y in zip(vals[1:], vals)], dtype=bool)
+    if pa.types.is_floating(col.type):
+        same = pc.or_(same, pc.fill_null(pc.and_(pc.is_nan(a), pc.is_nan(b)), False))
+    same = pc.or_(same, pc.and_(pc.is_null(a), pc.is_null(b)))
+    return ~same.to_numpy(zero_copy_only=False)
+
+
+def _comparable(v):
+    """A nested key value as a Python value that compares as Spark groups."""
+    if isinstance(v, float):
+        return _NAN if v != v else v
+    if isinstance(v, (list, tuple)):
+        return tuple(map(_comparable, v))
+    if isinstance(v, dict):
+        return tuple(map(_comparable, v.values()))
+    return v
+
+
+def _blob_batch(heads: list[pa.RecordBatch], folded: list[tuple[bytes, int]],
+                schema: StructType) -> pa.RecordBatch:
+    """Blob rows from each group's first-row keys and its fold."""
+    blobs, rows = zip(*folded)
+    keys = [pa.concat_arrays([h.column(i) for h in heads])
+            for i in range(heads[0].num_columns)]
+    return pa.RecordBatch.from_arrays(
+        keys + [pa.array(blobs, pa.binary()), pa.array(rows, pa.int64())],
+        names=schema.names)
 
 
 def partial_blobs(df: DataFrame, input_col: str | Column, keys: Sequence[str],
@@ -177,8 +277,8 @@ def merge_blobs(partials: DataFrame, keys: Sequence[str],
     sketch — no intermediate sketches."""
     single = next(iter(adapters.values()))
 
-    def fold(pdf: pd.DataFrame) -> tuple[bytes, int]:
-        sk = (adapters[pdf[FAMILY_COL].iloc[0]] if with_family else single).new()
+    def fold(key: tuple, pdf: pd.DataFrame) -> tuple[bytes, int]:
+        sk = (adapters[key[0]] if with_family else single).new()
         for blob in pdf[SKETCH_COL]:
             sk.decode_and_merge_with(bytes(blob))
         return sk.encode(), int(pdf[ROWS_COL].sum())

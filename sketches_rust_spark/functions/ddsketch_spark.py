@@ -4,7 +4,9 @@ Design (idiomatic Spark, SURVEY.md §1.5/§3):
 
 * **two-level build** — ``build_partials`` + ``merge_partials`` run the
   shared core in ``_two_level.py``: a ``mapInPandas`` partial per
-  (scan partition x group), then one ``applyInPandas`` blob merge per group.
+  (scan partition x group), then a key-sorted ``mapInArrow`` merge that
+  folds each group's blobs, holding at most one group, one Arrow batch and
+  that batch's output rows.
   DDSketch is one more adapter there: ``prepare`` routes each Arrow batch
   once (``route_batch``: one vectorized log pass), and ``insert`` applies a
   group's routed buckets with one ``apply_routed`` per partition. Values
@@ -150,8 +152,8 @@ def ddsketch_aggregate_weighted(
     Tungsten hash aggregate (map-side partial_sum, shuffle bounded by
     groups x buckets — no raw row ever crosses the shuffle or the Arrow
     boundary), then blob assembly over the tiny histogram. LogCubic presets
-    (bucket math not SQL-expressible) fall back to a groupBy+applyInPandas
-    build; prefer LOG at scale.
+    (bucket math not SQL-expressible) shuffle the raw rows on the keys and
+    build each group in the key-sorted merge stage; prefer LOG at scale.
     """
     from .ddsketch_sql import ddsketch_aggregate_sql
 
@@ -168,7 +170,7 @@ def ddsketch_aggregate_weighted(
     narrow = narrow.where(F.col("_w").isNotNull() & ~F.isnan("_w")
                           & (F.col("_w") > 0))
 
-    def build(pdf: pd.DataFrame) -> tuple[bytes, int]:
+    def build(_key: tuple, pdf: pd.DataFrame) -> tuple[bytes, int]:
         sk = config.new()
         sk.accept_many(_f64(pdf["_v"]), _f64(pdf["_w"]))
         # round, don't truncate: fractional weight sums (weights are

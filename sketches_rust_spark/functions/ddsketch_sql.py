@@ -128,7 +128,7 @@ def blobs_from_histogram(
     presets apply their bucket cap inside the store exactly as a direct build
     would (order-insensitive collapse, see kernel/store.py).
     """
-    def assemble(pdf: pd.DataFrame) -> tuple[bytes, int]:
+    def assemble(_key: tuple, pdf: pd.DataFrame) -> tuple[bytes, int]:
         sk = config.new()
         c = pdf["c"].to_numpy(np.float64)
         sk.apply_routed(pdf["side"].to_numpy(np.int64),

@@ -3,9 +3,11 @@ t-digest, KLL).
 
 Every family runs the shared two-level core in ``_two_level.py``: a
 ``mapInPandas`` partial per (scan partition x group) — no raw-row shuffle —
-then one ``applyInPandas`` blob merge per group. Hashing happens JVM-side
-where possible (xxhash64) or as vectorized numpy (splitmix64, when the query
-needs a cross-engine-reproducible hash for its DuckDB oracle).
+then one key-sorted ``mapInArrow`` merge, which folds each group's blobs
+holding at most one group, one Arrow batch and that batch's output rows.
+Hashing happens JVM-side where possible (xxhash64) or as vectorized numpy
+(splitmix64, when the query needs a cross-engine-reproducible hash for its
+DuckDB oracle).
 
 Each kernel plugs in via a ``SketchAdapter``: ``new()`` (an empty sketch),
 ``prepare(values)`` (one vectorized step per Arrow batch — the 64-bit hash

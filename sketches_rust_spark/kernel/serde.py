@@ -275,6 +275,15 @@ _SLOTS = np.arange(1, 10, dtype=np.uint8)  # 1-based byte slots of a token
 _GROUP_MASKS = np.array([0x7F] * 8 + [0xFF], dtype=np.uint8)
 # Row L: the group bits of the slots that a token of length L fills.
 _KEPT_GROUPS = np.where(_SLOTS <= np.arange(10)[:, None], _GROUP_MASKS, 0).astype(np.uint8)
+# Typed operands of the decoder: a mixed-type or Python-int operand costs
+# numpy a cast on every call, which a short block pays in full.
+_TOKEN_SLOTS = _SLOTS.astype(np.intp)
+_CONTINUED = np.uint8(0x80)
+_NINE = np.intp(9)
+_U64_ONE = np.uint64(1)
+_ROTATE = np.uint64(_VAR_DOUBLE_ROTATE)
+_UNROTATE = np.uint64(64 - _VAR_DOUBLE_ROTATE)
+_ONE_BITS = np.uint64(_BITS_OF_ONE)
 
 
 def zig_zag_array(values: np.ndarray) -> np.ndarray:
@@ -283,7 +292,7 @@ def zig_zag_array(values: np.ndarray) -> np.ndarray:
 
 
 def zig_zag_decode_array(payload: np.ndarray) -> np.ndarray:
-    return ((payload >> np.uint64(1)) ^ (np.uint64(0) - (payload & np.uint64(1)))).view(np.int64)
+    return ((payload >> _U64_ONE) ^ -(payload & _U64_ONE)).view(np.int64)
 
 
 def var_double_bits_array(values: np.ndarray) -> np.ndarray:
@@ -292,8 +301,13 @@ def var_double_bits_array(values: np.ndarray) -> np.ndarray:
 
 
 def var_bits_to_double_array(payload: np.ndarray) -> np.ndarray:
-    delta = (payload >> np.uint64(6)) | (payload << np.uint64(58))
-    return (delta + np.uint64(_BITS_OF_ONE)).view(np.float64) - 1.0
+    values = (((payload >> _ROTATE) | (payload << _UNROTATE)) + _ONE_BITS).view(np.float64)
+    if not np.isnan(values).any():
+        return values - 1.0
+    # a corrupt blob's signalling NaN would warn in the subtraction; the
+    # decoder's own checks judge the value
+    with np.errstate(invalid="ignore"):
+        return values - 1.0
 
 
 def encode_tokens(payload: np.ndarray, kinds: np.ndarray) -> tuple[bytes, np.ndarray]:
@@ -326,12 +340,14 @@ def decode_tokens(inp: Input, rows: int, kinds: np.ndarray) -> np.ndarray:
         # bytes since the last byte below 0x80 (or since before the window):
         # a token ends wherever that is a multiple of nine
         at = np.arange(1, window.shape[0] + 1)
-        since_end = at - np.maximum.accumulate((window < 0x80) * at)
-        ends = (since_end % 9 == 0).nonzero()[0][:n]
+        since_end = at - np.maximum.accumulate((window < _CONTINUED) * at)
+        ends = (since_end % _NINE == 0).nonzero()[0][:n]
         if ends.shape[0] < n:
             raise ValueError("Input exhausted")
-        before = np.concatenate(([-1], ends[:-1]))  # the byte before each token
-        groups = (window[np.minimum(before[:, None] + _SLOTS, ends[:, None])]
+        before = np.empty_like(ends)  # the byte before each token
+        before[0], before[1:] = -1, ends[:-1]
+        # bytes past a token's end are masked off, so the gather may clip
+        groups = (window.take(before[:, None] + _TOKEN_SLOTS, mode="clip")
                   & _KEPT_GROUPS[ends - before])
         payload[i:i + step] = np.add.reduce(
             groups.reshape(-1, *kinds.shape).astype(np.uint64) << kinds, -1)

@@ -63,7 +63,7 @@ def stream_state_partitions(staged_dir: str, n_batches: int) -> int:
     count; more partitions than the data needs buy only fixed cost. A
     Python worker pays a start-up floor of about 0.2 s (re-reading its zip
     archives) on its first library tasks only, not on every task, since
-    ``_zipcache`` skips the re-read of unchanged archives. Measured in
+    ``_task_hooks`` skips the re-read of unchanged archives. Measured in
     the traced ``stream_replay`` benchmark (4,000-row, 32 KB micro-batches
     at local[3], 4-core host), one partition instead of four: tasks per
     batch 9 -> 3 (partials) and 5 -> 2 (stateful), ``addBatch`` p50

@@ -230,7 +230,7 @@ def test_hostile_declared_lengths_raise_before_allocating():
         INDEX_DELTAS_AND_COUNTS,
     )
     evil = bytearray()
-    evil.append(FLAG_TYPE_POSITIVE_STORE | ((INDEX_DELTAS_AND_COUNTS + 1) << 2))
+    evil.append(FLAG_TYPE_POSITIVE_STORE | (INDEX_DELTAS_AND_COUNTS << 2))
     _serde.encode_unsigned_var_long(evil, 2)
     _serde.encode_signed_var_long(evil, -(2**30))
     _serde.encode_var_double(evil, 1.0)

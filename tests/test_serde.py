@@ -286,3 +286,43 @@ def test_token_cut_off_by_end_of_input_raises():
         serde.decode_tokens(Input(bytes([0x01, 0x81])), 2, serde.VAR_DOUBLE[None])
     with pytest.raises(ValueError):
         serde.decode_tokens(Input(bytes([0x01, 0x02, 0x03])), 2, serde.VAR_LONG[None].repeat(2, 0))
+
+
+@pytest.mark.parametrize("dense", [False, True], ids=["sparse", "dense"])
+def test_signalling_nan_count_decodes_without_fp_warning(dense):
+    """A corrupt count whose var-double bits decode to a signalling NaN is
+    dropped as a non-positive count: no RuntimeWarning on the way."""
+    import warnings
+
+    import numpy as np
+
+    from sketches_rust_spark.kernel.sketch import DDSketch
+    from sketches_rust_spark.kernel.store import (
+        CONTIGUOUS_COUNTS,
+        FLAG_TYPE_POSITIVE_STORE,
+        INDEX_DELTAS_AND_COUNTS,
+    )
+    from test_sketch import GOLDEN_BLOB_LOG_100
+
+    snan = 0x7FF0000000000001
+    delta = (snan - serde.double_to_bits(1.0)) & ((1 << 64) - 1)
+    payload = ((delta << 6) | (delta >> 58)) & ((1 << 64) - 1)  # rotl 6
+    assert np.isnan(serde.var_bits_to_double(payload))
+    block = bytearray([FLAG_TYPE_POSITIVE_STORE
+                       | ((CONTIGUOUS_COUNTS if dense else INDEX_DELTAS_AND_COUNTS) << 2)])
+    serde.encode_unsigned_var_long(block, 2)
+    if dense:
+        serde.encode_signed_var_long(block, 5)  # first index
+        serde.encode_signed_var_long(block, 1)  # step
+        tokens = [[serde.double_to_var_bits(3.0)], [payload]]
+        kinds = serde.VAR_DOUBLE[None]
+    else:
+        tokens = [[serde.zig_zag_encode(5), serde.double_to_var_bits(3.0)],
+                  [serde.zig_zag_encode(1), payload]]
+        kinds = np.stack([serde.VAR_LONG, serde.VAR_DOUBLE])
+    block += serde.encode_tokens(np.array(tokens, dtype=np.uint64), kinds)[0]
+    plain = DDSketch.decode(GOLDEN_BLOB_LOG_100)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        sk = DDSketch.decode(bytes(GOLDEN_BLOB_LOG_100) + bytes(block))
+    assert sk.get_count() == plain.get_count() + 3.0

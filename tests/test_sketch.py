@@ -278,6 +278,28 @@ def test_decode_rejects_sparse_index_past_i32_by_int64_wrap():
         DDSketch.logarithmic_collapsing_lowest_dense(2e-2, 50).decode_and_merge_with(blob)
 
 
+def test_decode_keeps_in_range_bins_beside_wide_steps():
+    """Steps past 2^32 that no kept bin lands on leave the kept bins adding
+    as plain ones: a one-bin contiguous block with a 2^40 step, and a sparse
+    block whose two far bins carry zero counts, each add 3.0 at bucket 5."""
+    from sketches_rust_spark.kernel.store import CONTIGUOUS_COUNTS, INDEX_DELTAS_AND_COUNTS
+
+    far = 1 << 40
+    blobs = [_block(CONTIGUOUS_COUNTS, 1, ("long", 5), ("long", far), ("double", 3.0)),
+             _block(INDEX_DELTAS_AND_COUNTS, 3, ("long", far), ("double", 0.0),
+                    ("long", 5 - far), ("double", 3.0), ("long", far), ("double", 0.0))]
+    want = DDSketch.decode(GOLDEN_BLOB_LOG_100)
+    want.positive_value_store.add(5, 3.0)
+    want_collapsing = DDSketch.logarithmic_collapsing_lowest_dense(2e-2, 50)
+    want_collapsing.decode_and_merge_with(GOLDEN_BLOB_LOG_100)
+    want_collapsing.positive_value_store.add(5, 3.0)
+    for blob in blobs:
+        assert DDSketch.decode(blob).encode() == want.encode()
+        got = DDSketch.logarithmic_collapsing_lowest_dense(2e-2, 50)
+        got.decode_and_merge_with(blob)
+        assert got.encode() == want_collapsing.encode()
+
+
 def test_decode_rejects_contiguous_block_cut_after_header():
     """A contiguous block that declares bins but ends right after its header
     is truncated, not empty."""

@@ -1,4 +1,4 @@
-"""The zip-directory hook (``sketches_rust_spark._zipcache``): an archive is
+"""The zip-directory hook (``sketches_rust_spark._task_hooks``): an archive is
 re-read on ``importlib.invalidate_caches()`` only when its (mtime, size)
 changed, and Python workers that ran a library UDF carry the hook."""
 
@@ -11,9 +11,9 @@ import zipimport
 
 import pytest
 
-from sketches_rust_spark import _zipcache
+from sketches_rust_spark import _task_hooks
 
-HOOK_MODULE = "sketches_rust_spark._zipcache"
+HOOK_MODULE = "sketches_rust_spark._task_hooks"
 MTIME_NS = 1_700_000_000 * 10**9
 PAD = "zc_pad.py"
 
@@ -90,11 +90,12 @@ def test_deleted_archive_empties_importer(archive):
 
 
 def test_second_install_is_a_noop():
-    hook = zipimport.zipimporter.invalidate_caches
+    hook, ack = zipimport.zipimporter.invalidate_caches, importlib.invalidate_caches
     assert hook.__module__ == HOOK_MODULE  # installed by the package import
-    _zipcache.install()
+    _task_hooks.install()
     assert zipimport.zipimporter.invalidate_caches is hook
-    assert _zipcache._original.__module__ == "zipimport"
+    assert importlib.invalidate_caches is ack
+    assert _task_hooks._zip_original.__module__ == "zipimport"
 
 
 def _library_task(spark):
